@@ -36,9 +36,3 @@ def tf_norm_np(
     """tf / (tf + k1*(1-b+b*dl/avgdl)) as float64 arrays."""
     tf = tf.astype(np.float64)
     return tf / (tf + k1 * (1.0 - b + b * (dl.astype(np.float64) / avgdl)))
-
-
-def score_np(
-    tf: np.ndarray, dl: np.ndarray, term_idf: float, avgdl: float
-) -> np.ndarray:
-    return term_idf * tf_norm_np(tf, dl, avgdl)

@@ -1,0 +1,134 @@
+"""In-process driver of the block-max range kernel (operators/wand.py) for
+indexes of at most RANGE_BATCH docid_ranges.
+
+At that size a Spark scoring job costs far more than the work it does: the
+query's blocks are a few hundred KB of parquet.  ``LocalIndex`` reads them
+with ``pyarrow.dataset`` — the hive ``bucket`` partitions the query terms
+route to, plus a ``term`` filter pushed to the row groups — and scores each
+docid_range with the same ``score_range`` kernel the Spark driver runs
+inside ``applyInPandas``, then merges the per-range top-k lists by (score
+desc, docid asc).  Per query the driver only decodes and scores blocks: no
+Spark job, no per-posting Python.
+
+Everything is loaded once at open and read-only afterwards, so concurrent
+``search`` calls from several threads share one instance:
+
+- a ``pyarrow.dataset`` over each chained snapshot's segments, with the
+  docid_ranges a newer snapshot claims (sources/catalog.chain_claims);
+- the live docs' ``docid`` (sorted), ``dl`` and every extra field's dl
+  column as numpy arrays, plus ``url``/``lang`` for result rows;
+- term → idf as a sorted term array and its idf array.
+"""
+
+from __future__ import annotations
+
+import time
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+
+from ..config import DOCS_PER_RANGE
+from ..sources import catalog as cat
+from .search import query_buckets
+from .wand import BLOCK_COLS, score_range, top_k
+
+
+def _read_only(a: np.ndarray) -> np.ndarray:
+    a.flags.writeable = False
+    return a
+
+
+class LocalIndex:
+    def __init__(self, index_dir: str, catalog: cat.Catalog):
+        dl_cols = ["dl"] + [m["dl_col"] for m in (catalog.fields or {}).values()]
+        self.segments: list[tuple[ds.Dataset, list[int]]] = []
+        doc_parts = []
+        for snap, claimed in cat.chain_claims(index_dir, catalog.snapshot):
+            self.segments.append((
+                ds.dataset(cat.table_path(index_dir, "segments", snap),
+                           format="parquet", partitioning="hive"),
+                claimed,
+            ))
+            docs = ds.dataset(cat.table_path(index_dir, "docs", snap), format="parquet")
+            rng = pc.divide(ds.field("docid"), pa.scalar(DOCS_PER_RANGE, pa.int64()))
+            doc_parts.append(docs.to_table(
+                columns=["docid", *dl_cols, "url", "lang"],
+                filter=~rng.isin(claimed) if claimed else None,
+            ))
+        docs = pa.concat_tables(doc_parts, promote_options="permissive").sort_by("docid")
+        self.docid = _read_only(docs["docid"].to_numpy())
+        self.dl = {c: _read_only(docs[c].to_numpy()) for c in dl_cols}
+        self.doc_meta = docs.select(["url", "lang"]).combine_chunks()
+
+        ts = pq.read_table(
+            cat.table_path(index_dir, "term_stats", catalog.snapshot), columns=["term", "idf"]
+        ).sort_by("term")
+        self.terms = _read_only(ts["term"].to_numpy())
+        self.idf = _read_only(ts["idf"].to_numpy())
+
+    def idf_of(self, terms: list[str]) -> dict[str, float]:
+        """term → idf for the query terms the index holds."""
+        if not terms or not len(self.terms):
+            return {}
+        pos = np.minimum(np.searchsorted(self.terms, terms), len(self.terms) - 1)
+        return {t: float(self.idf[p]) for t, p in zip(terms, pos) if self.terms[p] == t}
+
+    def read_blocks(self, terms: list[str]) -> pa.Table:
+        """The terms' blocks of the live docid_ranges, across the chain."""
+        want = ds.field("bucket").isin(query_buckets(terms)) & ds.field("term").isin(terms)
+        parts = [
+            seg.to_table(
+                columns=["docid_range", *BLOCK_COLS],
+                filter=want & ~ds.field("docid_range").isin(claimed) if claimed else want,
+            )
+            for seg, claimed in self.segments
+        ]
+        return pa.concat_tables(parts, promote_options="permissive")
+
+    def search(
+        self, terms: list[str], k: int, avgdl: float, dl_col: str,
+        with_docs: bool, profile: dict,
+    ) -> pa.Table:
+        """→ (docid, score[, url, lang]) top-k, (score desc, docid asc)."""
+        t0 = time.perf_counter()
+        idf_by_term = self.idf_of(terms)
+        blocks = self.read_blocks(list(idf_by_term)) if idf_by_term else None
+        t1 = time.perf_counter()
+        docids, scores = np.empty(0, np.int64), np.empty(0, np.float64)
+        n_ranges = 0
+        if blocks is not None and blocks.num_rows:
+            blocks = blocks.sort_by("docid_range")
+            rng = blocks["docid_range"].to_numpy()
+            cols = {c: blocks[c].to_numpy() for c in BLOCK_COLS}
+            ranges, starts = np.unique(rng, return_index=True)
+            ends = np.append(starts[1:], len(rng))
+            lo = np.searchsorted(self.docid, ranges * DOCS_PER_RANGE)
+            hi = np.searchsorted(self.docid, (ranges + 1) * DOCS_PER_RANGE)
+            dl = self.dl[dl_col]
+            per_range = [
+                score_range(
+                    int(r) * DOCS_PER_RANGE,
+                    {c: v[s:e] for c, v in cols.items()},
+                    self.docid[a:z], dl[a:z], idf_by_term, avgdl, k,
+                )
+                for r, s, e, a, z in zip(ranges, starts, ends, lo, hi)
+            ]
+            n_ranges = len(ranges)
+            docids, scores = top_k(
+                np.concatenate([d for d, _ in per_range]),
+                np.concatenate([s for _, s in per_range]),
+                k,
+            )
+        profile.update(
+            ranges_scored=n_ranges,
+            read_ms=(t1 - t0) * 1000,
+            score_ms=(time.perf_counter() - t1) * 1000,
+        )
+        out = pa.table({"docid": docids, "score": scores})
+        if with_docs:
+            meta = self.doc_meta.take(np.searchsorted(self.docid, docids))
+            out = out.append_column("url", meta["url"]).append_column("lang", meta["lang"])
+        return out

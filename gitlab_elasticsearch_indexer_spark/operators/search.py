@@ -19,6 +19,7 @@ Plan shape:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -44,6 +45,18 @@ def analyze_query_seq(query: str, analyzer: str) -> list[str]:
     return list(ANALYZERS[analyzer](query))
 
 
+HITS = "docid long, score double"  # every scorer's result schema
+
+
+def hits_frame(spark, docids=(), scores=()) -> DataFrame:
+    """(docid, score) rows as a frame over an Arrow table; no arguments →
+    empty.  An Arrow-built frame plans as a LocalRelation, so collecting it
+    launches no Spark job — a list of rows, or an empty pandas frame, is
+    parallelized as an RDD instead and costs a job on every collect."""
+    table = pa.table({"docid": pa.array(docids, pa.int64()), "score": pa.array(scores, pa.float64())})
+    return spark.createDataFrame(table, HITS)
+
+
 def bm25_score_col(tf: Column, dl: Column, idf: Column, avgdl: float) -> Column:
     k1, b = F.lit(BM25_K1), F.lit(BM25_B)
     tf_d = tf.cast("double")
@@ -60,13 +73,17 @@ def filter_segments_for_terms(segments: DataFrame, terms: list[str]) -> DataFram
     asking the cluster."""
     if not terms:
         return segments.limit(0)
+    return segments.filter(
+        F.col("bucket").isin(query_buckets(terms)) & F.col("term").isin(terms)
+    )
+
+
+def query_buckets(terms: list[str]) -> list[int]:
+    """The segment ``bucket`` partitions holding ``terms``' postings."""
     from ..config import N_TERM_BUCKETS
     from ..functions.xxhash import term_bucket
 
-    buckets = sorted({term_bucket(t, N_TERM_BUCKETS) for t in terms})
-    return segments.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-    )
+    return sorted({term_bucket(t, N_TERM_BUCKETS) for t in terms})
 
 
 def search_exhaustive(
@@ -83,9 +100,8 @@ def search_exhaustive(
     ``k=None`` scores everything (no TakeOrdered truncation).
     ``require_all``: conjunctive match-query semantics (ES
     ``operator: and``) — only docs containing every query term score."""
-    spark = segments.sparkSession
     if not query_terms:
-        return spark.createDataFrame([], "docid long, score double")
+        return hits_frame(segments.sparkSession)
 
     postings = decode_segments(filter_segments_for_terms(segments, query_terms))
     stats = term_stats.filter(F.col("term").isin(query_terms)).select("term", "idf")
@@ -137,7 +153,8 @@ def phrase_filter_docids(
 
     n = len(phrase_terms)
     if n == 0:
-        return segments.sparkSession.createDataFrame([], "docid long")
+        empty = pa.table({"docid": pa.array([], pa.int64())})  # job-free, see hits_frame
+        return segments.sparkSession.createDataFrame(empty, "docid long")
     distinct_terms = list(dict.fromkeys(phrase_terms))
     seg = filter_segments_for_terms(segments, distinct_terms).select(
         "term", "docid_range", "n_docs", "docids_enc", "positions_enc"

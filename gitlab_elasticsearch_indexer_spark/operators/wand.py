@@ -1,9 +1,11 @@
 """Block-max top-k retrieval (SURVEY.md Q5 — the WAND-style skipping Lucene
 performs, lifted onto Spark's execution model).
 
-Classic doc-at-a-time block-max WAND is a pointer-chasing loop — hostile to
-both Python and distributed execution.  The same safe-up-to-k skipping is
-achieved here at two granularities that ARE Spark-friendly:
+One range kernel (``score_range``: exact BM25 top-k of one docid_range's
+blocks), two drivers: in process for an index of at most RANGE_BATCH ranges
+(operators/local_search.py, no Spark job per query), and ``search_blockmax``
+on Spark for larger indexes or a ``doc_filter``, skipping at two
+granularities that ARE Spark-friendly:
 
 1. **Range-level skipping (distributed).**  Per docid_range,
    ``bound(range) = Σ_t idf_t · max_block(max_tfn)`` is aggregated
@@ -15,30 +17,26 @@ achieved here at two granularities that ARE Spark-friendly:
    k-th best score so far is the threshold θ, and every remaining range
    with bound < θ is skipped without ever being scanned.  This is
    block-max pruning at the unit of parallelism: batches fan out as one
-   Spark job over the pruned parquet partitions.  Small corpora
-   (ranges ≤ range_batch, known from the catalog without a job) skip the
-   bounds phase entirely and score every range in ONE job with an exact
-   Spark-side top-k.
+   Spark job over the pruned parquet partitions.
 
-2. **Block-level skipping (within a range, single-term queries).**  Blocks
-   sorted by idf·max_tfn descending; once k local hits exist and the next
-   block's bound is below the local k-th score, remaining blocks are not
-   decoded.  (Multi-term queries score the range's candidate blocks with one
-   vectorized numpy accumulation — exact, and still only the blocks of the
-   query's terms.)
+2. **Block-level skipping (within a range, single-term queries, both
+   drivers).**  Blocks sorted by idf·max_tfn descending; once k local hits
+   exist and the next block's bound is below the local k-th score,
+   remaining blocks are not decoded.  (Multi-term queries score the range's
+   candidate blocks with one vectorized numpy accumulation — exact, and
+   still only the blocks of the query's terms.)
 
-Safety: bounds are true upper bounds, so the result is rank-identical to the
-exhaustive scorer — asserted in tests/test_pipeline.py.
+Safety: bounds are true upper bounds, so every driver is rank-identical to
+the exhaustive scorer — asserted in tests/test_pipeline.py and
+tests/test_local_search.py.
 
-Scoring joins doc lengths via ``cogroup(segments, docs).applyInPandas`` on
-docid_range — both sides are partitioned by the same key, and the optional
-metadata filter (Q7: lang / permission ints) is applied to the docs side
-*before* the cogroup so filtered docs never score.
+The Spark driver joins doc lengths via ``cogroup(segments,
+docs).applyInPandas`` on docid_range — both sides are partitioned by the
+same key, and the optional metadata filter (Q7: lang / permission ints) is
+applied to the docs side *before* the cogroup so filtered docs never score.
 """
 
 from __future__ import annotations
-
-import heapq
 
 import numpy as np
 import pandas as pd
@@ -47,19 +45,14 @@ from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1, DOCS_PER_RANGE
 from ..functions import codec
-from .search import filter_segments_for_terms
+from .search import HITS, filter_segments_for_terms, hits_frame
 
-_META_COLS = [
-    "term",
-    "bucket",
-    "docid_range",
-    "block_idx",
-    "n_docs",
-    "first_docid",
-    "max_docid",
-    "max_tf",
-    "min_dl",
-]
+# block columns the range kernel reads (positions/offsets payloads are never
+# decoded for scoring, so neither driver reads them)
+BLOCK_COLS = ["term", "n_docs", "max_tf", "min_dl", "docids_enc", "tfs_enc"]
+# ranges scored per Spark batch; an index with at most this many ranges is
+# served in process (plans/search.py) and never reaches search_blockmax
+RANGE_BATCH = 256
 
 
 def _block_bound_tfn(max_tf, min_dl, avgdl: float):
@@ -71,77 +64,100 @@ def _block_bound_tfn(max_tf, min_dl, avgdl: float):
     return max_tf / (max_tf + BM25_K1 * (1.0 - BM25_B + BM25_B * min_dl / avgdl))
 
 
-def _make_range_scorer(idf_by_term: dict[str, float], avgdl: float, k: int):
+def score_range(
+    base: int,
+    blocks: dict,
+    dl_docids: np.ndarray,
+    dl_vals: np.ndarray,
+    idf_by_term: dict[str, float],
+    avgdl: float,
+    k: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The range kernel: exact BM25 top-k of one docid_range → (docids,
+    scores) ordered (score desc, docid asc).
+
+    ``blocks`` maps each of BLOCK_COLS to the range's block column (numpy
+    arrays; the *_enc columns hold bytes); ``dl_docids`` (sorted) and
+    ``dl_vals`` are the range's docs after any metadata filter — postings of
+    docs not listed there never score."""
     k1, b = BM25_K1, BM25_B
+    empty = np.empty(0, np.int64), np.empty(0, np.float64)
+    terms = blocks["term"]
+    if len(terms) == 0 or len(dl_docids) == 0:
+        return empty
+    idf = np.array([idf_by_term[t] for t in terms], dtype=np.float64)
+    single_term = len(set(terms)) == 1
+    if single_term:
+        bound = idf * _block_bound_tfn(blocks["max_tf"], blocks["min_dl"], avgdl)
+        order = np.argsort(-bound, kind="stable")
+    else:
+        # term order: every doc sums its per-term scores in the same order,
+        # so equal true scores stay bitwise equal whatever the block order
+        order = np.argsort(terms, kind="stable")
 
-    def score_range(key, seg_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(seg_pdf) == 0 or len(docs_pdf) == 0:
-            return pd.DataFrame({"docid": [], "score": []}).astype(
-                {"docid": "int64", "score": "float64"}
-            )
-        base = int(key[0]) * DOCS_PER_RANGE
-        # doc-length lookup for this range (docs side already metadata-filtered)
-        dl_docids = docs_pdf["docid"].to_numpy(dtype=np.int64)
-        dl_vals = docs_pdf["dl"].to_numpy(dtype=np.int64)
-        dl_order = np.argsort(dl_docids)
-        dl_docids, dl_vals = dl_docids[dl_order], dl_vals[dl_order]
-
-        terms = seg_pdf["term"].to_numpy()
-        single_term = len(set(terms)) == 1
+    all_docids: list[np.ndarray] = []
+    all_scores: list[np.ndarray] = []
+    top = np.empty(0, np.float64)  # local top-k scores, single-term skipping only
+    kth = -np.inf
+    for i in order:
+        if single_term and bound[i] < kth:
+            break  # block-max skip: no remaining block can enter top-k
+        n = int(blocks["n_docs"][i])
+        docids = codec.decode_docids(blocks["docids_enc"][i], base=base, count=n)
+        tfs = codec.decode_tfs(blocks["tfs_enc"][i], count=n).astype(np.float64)
+        pos = np.searchsorted(dl_docids, docids)
+        valid = (pos < len(dl_docids)) & (
+            dl_docids[np.clip(pos, 0, len(dl_docids) - 1)] == docids
+        )
+        if not valid.any():
+            continue
+        docids, tfs, pos = docids[valid], tfs[valid], pos[valid]
+        dl = dl_vals[pos].astype(np.float64)
+        scores = idf[i] * tfs / (tfs + k1 * (1.0 - b + b * dl / avgdl))
+        all_docids.append(docids)
+        all_scores.append(scores)
         if single_term:
-            idf = idf_by_term[terms[0]]
-            bound = idf * _block_bound_tfn(
-                seg_pdf["max_tf"].to_numpy(), seg_pdf["min_dl"].to_numpy(), avgdl
-            )
-            blocks = seg_pdf.assign(bound=bound).sort_values("bound", ascending=False)
-        else:
-            blocks = seg_pdf
+            top = np.concatenate([top, scores])
+            if len(top) >= k:
+                top = np.partition(top, len(top) - k)[-k:]
+                kth = top[0]
 
-        all_docids: list[np.ndarray] = []
-        all_scores: list[np.ndarray] = []
-        heap: list[float] = []  # local top-k scores, single-term skipping only
-        for r in blocks.itertuples(index=False):
-            if single_term and len(heap) >= k and r.bound < heap[0]:
-                break  # block-max skip: no remaining block can enter top-k
-            docids = codec.decode_docids(r.docids_enc, base=base, count=r.n_docs)
-            tfs = codec.decode_tfs(r.tfs_enc, count=r.n_docs).astype(np.float64)
-            pos = np.searchsorted(dl_docids, docids)
-            valid = (pos < len(dl_docids)) & (
-                dl_docids[np.clip(pos, 0, len(dl_docids) - 1)] == docids
-            )
-            if not valid.any():
-                continue
-            docids, tfs, pos = docids[valid], tfs[valid], pos[valid]
-            dl = dl_vals[pos].astype(np.float64)
-            idf = idf_by_term[r.term]
-            scores = idf * tfs / (tfs + k1 * (1.0 - b + b * dl / avgdl))
-            all_docids.append(docids)
-            all_scores.append(scores)
-            if single_term:
-                for s in scores:
-                    if len(heap) < k:
-                        heapq.heappush(heap, float(s))
-                    elif s > heap[0]:
-                        heapq.heapreplace(heap, float(s))
+    if not all_docids:
+        return empty
+    uniq, inv = np.unique(np.concatenate(all_docids), return_inverse=True)
+    totals = np.zeros(len(uniq), dtype=np.float64)
+    np.add.at(totals, inv, np.concatenate(all_scores))
+    return top_k(uniq, totals, k)
 
-        if not all_docids:
-            return pd.DataFrame({"docid": [], "score": []}).astype(
-                {"docid": "int64", "score": "float64"}
-            )
-        docids = np.concatenate(all_docids)
-        scores = np.concatenate(all_scores)
-        uniq, inv = np.unique(docids, return_inverse=True)
-        totals = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(totals, inv, scores)
-        if len(uniq) > k:
-            part = np.argpartition(-totals, k - 1)[:k]
-            # stable exact order: score desc, docid asc
-            order = part[np.lexsort((uniq[part], -totals[part]))]
-        else:
-            order = np.lexsort((uniq, -totals))
-        return pd.DataFrame({"docid": uniq[order], "score": totals[order]})
 
-    return score_range
+def top_k(docids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """The k best (docid, score) pairs in exact (score desc, docid asc) order."""
+    if len(docids) > k:
+        part = np.argpartition(-scores, k - 1)[:k]
+        order = part[np.lexsort((docids[part], -scores[part]))]
+    else:
+        order = np.lexsort((docids, -scores))
+    return docids[order], scores[order]
+
+
+def _make_range_scorer(idf_by_term: dict[str, float], avgdl: float, k: int):
+    """The range kernel as a cogroup ``applyInPandas`` function."""
+
+    def score_range_pdf(key, seg_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(seg_pdf) == 0 or len(docs_pdf) == 0:  # a side may lack columns
+            return pd.DataFrame({"docid": np.empty(0, np.int64), "score": np.empty(0)})
+        dl_docids = docs_pdf["docid"].to_numpy(dtype=np.int64)
+        dl_order = np.argsort(dl_docids)
+        docids, scores = score_range(
+            int(key[0]) * DOCS_PER_RANGE,
+            {c: seg_pdf[c].to_numpy() for c in BLOCK_COLS},
+            dl_docids[dl_order],
+            docs_pdf["dl"].to_numpy(dtype=np.int64)[dl_order],
+            idf_by_term, avgdl, k,
+        )
+        return pd.DataFrame({"docid": docids, "score": scores})
+
+    return score_range_pdf
 
 
 def _range_bounds_df(seg: DataFrame, stats_df: DataFrame, avgdl: float) -> DataFrame:
@@ -173,22 +189,19 @@ def search_blockmax(
     k: int,
     avgdl: float,
     doc_filter: Column | None = None,
-    range_batch: int = 256,
+    range_batch: int = RANGE_BATCH,
     n_ranges_hint: int | None = None,
     super_shift: int = 10,
     super_threshold: int = 1 << 16,
-    stats_out: dict | None = None,
+    profile: dict | None = None,
 ) -> DataFrame:
     """→ (docid, score) top-k, rank-identical to search_exhaustive.
 
-    Three regimes, chosen by corpus size (``n_ranges_hint`` — callers pass
+    Two regimes, chosen by corpus size (``n_ranges_hint`` — callers pass
     ceil(n_docs / DOCS_PER_RANGE) from the catalog, so no job is needed to
-    pick the path):
+    pick the path; indexes of at most RANGE_BATCH ranges are scored in
+    process by operators/local_search.py instead):
 
-    1. **hint ≤ range_batch** (small corpus): ONE Spark job — cogroup-score
-       every pruned range, exact global top-k via orderBy/limit.  No
-       metadata collect, no driver loop: at bench scale this is the same
-       job count as the exhaustive scorer.
     2. **default**: per-range bounds aggregated Spark-side
        (_range_bounds_df) and collected — n_docs/8192 rows, never per-block
        metadata — then descending-bound batches with θ-pruning.
@@ -199,12 +212,12 @@ def search_blockmax(
        and a super-range whose best member bound < θ is skipped without
        ever fetching its members.
 
-    ``stats_out`` (optional dict) receives skip telemetry:
-    ``ranges_total`` / ``ranges_scored`` (regimes 2-3) — the observable
-    proof that θ-pruning is cutting work, used by tests and ops dashboards.
+    ``profile`` (optional dict) receives skip telemetry:
+    ``ranges_total`` / ``ranges_scored`` — the observable proof that
+    θ-pruning is cutting work, used by tests and ops dashboards.
     """
     if not query_terms:
-        return spark.createDataFrame([], "docid long, score double")
+        return hits_frame(spark)
 
     stats_df = (
         term_stats.filter(F.col("term").isin(query_terms)).select("term", "idf")
@@ -212,13 +225,12 @@ def search_blockmax(
     stats = {r["term"]: float(r["idf"]) for r in stats_df.collect()}
     live_terms = [t for t in query_terms if t in stats]
     if not live_terms:
-        return spark.createDataFrame([], "docid long, score double")
+        return hits_frame(spark)
 
     # project away the payload columns the scorer never decodes (positions/
     # offsets) — parquet then skips those byte columns entirely
     seg = filter_segments_for_terms(segments, live_terms).select(
-        "term", "docid_range", "n_docs", "max_tf", "min_dl",
-        "docids_enc", "tfs_enc",
+        "docid_range", *BLOCK_COLS
     )
     doc_side = docs if doc_filter is None else docs.filter(doc_filter)
     doc_side = doc_side.select(
@@ -232,21 +244,13 @@ def search_blockmax(
         return (
             seg_part.groupBy("docid_range")
             .cogroup(docs_part.groupBy("docid_range"))
-            .applyInPandas(scorer, schema="docid long, score double")
+            .applyInPandas(scorer, schema=HITS)
         )
 
-    # ---- regime 1: small corpus — one job, no driver-side batching ----
-    if n_ranges_hint is not None and n_ranges_hint <= range_batch:
-        return (
-            cogroup_score(seg, doc_side)
-            .orderBy(F.desc("score"), F.asc("docid"))
-            .limit(k)
-        )
-
-    heap: list[tuple[float, int]] = []  # (score, -docid) min-heap of global top-k
+    best = [np.empty(0, np.int64), np.empty(0, np.float64)]  # global top-k
 
     def kth() -> float:
-        return heap[0][0] if len(heap) >= k else float("-inf")
+        return best[1][-1] if len(best[1]) >= k else float("-inf")
 
     scored_count = [0]
 
@@ -255,13 +259,12 @@ def search_blockmax(
         part = cogroup_score(
             seg.filter(F.col("docid_range").isin(batch)),
             doc_side.filter(F.col("docid_range").isin(batch)),
-        ).collect()
-        for row in part:
-            item = (row["score"], -row["docid"])
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
+        ).toPandas()
+        best[:] = top_k(
+            np.concatenate([best[0], part["docid"].to_numpy(dtype=np.int64)]),
+            np.concatenate([best[1], part["score"].to_numpy(dtype=np.float64)]),
+            k,
+        )
 
     def process_ranges(ordered_ranges: list[int], bounds: dict[int, float]) -> None:
         """Descending-bound θ-pruned batch loop over one set of ranges."""
@@ -273,7 +276,7 @@ def search_blockmax(
                 rg = ordered_ranges[i]
                 # strict <: a range whose bound equals θ could still contain
                 # a score-tied doc winning the (score desc, docid asc) break
-                if bounds[rg] < theta and len(heap) >= k:
+                if bounds[rg] < theta:
                     i = len(ordered_ranges)  # later ranges bound even lower
                     break
                 batch.append(rg)
@@ -305,7 +308,7 @@ def search_blockmax(
             )
             sbounds = {int(r["srange"]): float(r["sbound"]) for r in super_rows}
             for sr in sorted(sbounds, key=lambda s: -sbounds[s]):
-                if sbounds[sr] < kth() and len(heap) >= k:
+                if sbounds[sr] < kth():
                     break  # no member of any later super-range can enter top-k
                 member_rows = rb.filter(
                     F.shiftright(F.col("docid_range"), super_shift) == sr
@@ -318,11 +321,8 @@ def search_blockmax(
         finally:
             rb.unpersist()
 
-    if stats_out is not None:
-        stats_out["ranges_total"] = n_total_ranges
-        stats_out["ranges_scored"] = scored_count[0]
+    if profile is not None:
+        profile["ranges_total"] = n_total_ranges
+        profile["ranges_scored"] = scored_count[0]
 
-    out = sorted(heap, key=lambda t: (-t[0], -t[1]))
-    return spark.createDataFrame(
-        [(int(-nd), float(s)) for s, nd in out], "docid long, score double"
-    ).select("docid", "score")
+    return hits_frame(spark, *best)

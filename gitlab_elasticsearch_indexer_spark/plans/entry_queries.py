@@ -35,7 +35,6 @@ from ..config import BM25_B, BM25_K1
 from ..functions.analysis import light_english_stem
 from ..operators.postings import decode_segments
 from ..operators.search import search_exhaustive
-from ..operators.wand import search_blockmax
 from ..plans.build_index import build_index
 from ..plans.search import Searcher
 from ..sources import catalog as cat

@@ -156,10 +156,11 @@ def apply_delta(
         c: totals[c] - rem_sums[c] + add_sums[c] for c in dl_cols
     }
     avgdl = (totals["dl"] / n_docs) if n_docs else 0.0
+    # every key carries forward (analyzer_version too: the search and
+    # apply guards read it per field); only the length stats change
     new_fields_meta = {
         fld: {
-            "analyzer": m["analyzer"],
-            "dl_col": m["dl_col"],
+            **m,
             "avgdl": (totals[f"dl_{fld}"] / n_docs) if n_docs else 0.0,
             "total": totals[f"dl_{fld}"],
         }

@@ -2,26 +2,43 @@
 SURVEY.md §3.3 — the ES query contract, served natively).
 
 ``Searcher`` loads the catalog once, keeps docs/term_stats DataFrames cached,
-and serves top-k queries through either scoring path:
+and serves top-k queries through one of four paths (``profile["path"]``):
 
-- ``mode="blockmax"`` (default): metadata-driven range/block skipping
-  (operators/wand.py) — the scale path.
-- ``mode="exhaustive"``: pure-DataFrame scorer (operators/search.py) — the
+- ``local``: ``mode="blockmax"`` (default) on an index of at most
+  ``RANGE_BATCH`` docid_ranges (ceil(n_docs / docs_per_range), from the
+  catalog) without a ``doc_filter``.  The query's blocks are read with
+  pyarrow and scored in process by the block-max range kernel
+  (operators/local_search.py); the result is an Arrow-built frame, so the
+  query launches no Spark job.  The state it needs is loaded at open.
+- ``blockmax``: the same kernel driven by Spark with range-level θ-pruning
+  (operators/wand.py) — larger indexes, and any ``doc_filter``.
+- ``exhaustive``: pure-DataFrame scorer (operators/search.py) — the
   oracle-verifiable path; rank-identical by construction.
+- ``and``: conjunctive match query (``operator="and"``) on the exhaustive
+  scorer.
+
+``search(..., profile={})`` fills the dict with the path, the analyzed
+``terms``, ``ranges_scored`` (None on the exhaustive scorer) and wall ms per
+phase: ``analyze_ms``, ``read_ms`` (local path only: on Spark the block read
+happens inside the scoring jobs), ``score_ms`` and ``result_ms``.
 """
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.local_search import LocalIndex
 from ..operators.search import (
+    HITS,
     analyze_query,
     analyze_query_seq,
     phrase_filter_docids,
     search_exhaustive,
 )
-from ..operators.wand import search_blockmax
+from ..operators.wand import RANGE_BATCH, search_blockmax
 from ..sources import catalog as cat
 
 
@@ -47,6 +64,9 @@ class Searcher:
         self.docs = (
             cat.read_table(spark, index_dir, "docs", snap).drop("content").cache()
         )
+        self.n_ranges = -(-max(self.catalog.n_docs, 1) // self.catalog.docs_per_range)
+        # small index: the blockmax path is served in process (module doc)
+        self.local = LocalIndex(index_dir, self.catalog) if self.n_ranges <= RANGE_BATCH else None
 
     def _check_analyzer_version(self, allow_mismatch: bool) -> None:
         """Refuse to search an index whose analyzer implementation differs
@@ -114,53 +134,58 @@ class Searcher:
         with_docs: bool = True,
         field: str = "content",
         operator: str = "or",
+        profile: dict | None = None,
     ) -> DataFrame:
         """``operator``: 'or' (ES match default) or 'and' (every term must
-        match; conjunctive queries run on the exhaustive scorer)."""
+        match; conjunctive queries run on the exhaustive scorer).
+        ``profile``: optional dict filled as the module doc describes."""
+        prof = {} if profile is None else profile
+        t0 = time.perf_counter()
         _, _, avgdl, dl_col = self._field_conf(field)
         terms = self.query_terms(query, field)
+        if operator == "and":
+            path = "and"
+        elif mode == "exhaustive":
+            path = "exhaustive"
+        elif self.local is not None and doc_filter is None:
+            path = "local"
+        else:
+            path = "blockmax"
+        t1 = time.perf_counter()
+        prof.update(
+            path=path, terms=terms, analyze_ms=(t1 - t0) * 1000,
+            ranges_scored=None if path in ("exhaustive", "and") else 0,
+        )
+
+        if path == "local":
+            table = self.local.search(terms, k, avgdl, dl_col, with_docs, prof)
+            t2 = time.perf_counter()
+            schema = HITS + (", url string, lang string" if with_docs else "")
+            out = self.spark.createDataFrame(table, schema)  # job-free, see hits_frame
+            prof["result_ms"] = (time.perf_counter() - t2) * 1000
+            return out
+
         docs_side = self.docs
         if dl_col != "dl":
             docs_side = docs_side.withColumn("dl", F.col(dl_col))
-        if operator == "and":
-            hits = search_exhaustive(
-                self.segments, self.term_stats, docs_side, terms, k, avgdl,
-                doc_filter, require_all=True,
-            )
-            if not with_docs:
-                return hits
-            return hits.join(
-                self.docs.select("docid", "url", "lang"), "docid", "left"
-            ).orderBy(F.desc("score"), F.asc("docid"))
-        if mode == "exhaustive":
-            hits = search_exhaustive(
-                self.segments,
-                self.term_stats,
-                docs_side,
-                terms,
-                k,
-                avgdl,
-                doc_filter,
+        if path == "blockmax":
+            hits = search_blockmax(
+                self.spark, self.segments, self.term_stats, docs_side, terms, k,
+                avgdl, doc_filter, n_ranges_hint=self.n_ranges, profile=prof,
             )
         else:
-            n_ranges = -(-max(self.catalog.n_docs, 1) // self.catalog.docs_per_range)
-            hits = search_blockmax(
-                self.spark,
-                self.segments,
-                self.term_stats,
-                docs_side,
-                terms,
-                k,
-                avgdl,
-                doc_filter,
-                n_ranges_hint=n_ranges,
+            hits = search_exhaustive(
+                self.segments, self.term_stats, docs_side, terms, k, avgdl,
+                doc_filter, require_all=path == "and",
             )
-        if not with_docs:
-            return hits
-        return (
-            hits.join(self.docs.select("docid", "url", "lang"), "docid", "left")
-            .orderBy(F.desc("score"), F.asc("docid"))
-        )
+        t2 = time.perf_counter()
+        prof["score_ms"] = (t2 - t1) * 1000
+        if with_docs:
+            hits = hits.join(
+                self.docs.select("docid", "url", "lang"), "docid", "left"
+            ).orderBy(F.desc("score"), F.asc("docid"))
+        prof["result_ms"] = (time.perf_counter() - t2) * 1000
+        return hits
 
     def phrase_search(
         self, phrase: str, k: int = 10, field: str = "content"

@@ -120,10 +120,3 @@ LINEAGE = T.StructType(
         T.StructField("wall_ms", T.LongType(), False),
     ]
 )
-
-SEARCH_RESULT = T.StructType(
-    [
-        T.StructField("docid", T.LongType(), False),
-        T.StructField("score", T.DoubleType(), False),
-    ]
-)

@@ -114,6 +114,31 @@ def _claimed_ranges(spark: SparkSession, index_dir: str, snapshot: str) -> DataF
     )
 
 
+def chain_claims(index_dir: str, snapshot: str) -> list[tuple[str, list[int]]]:
+    """[(snapshot, docid_ranges a newer snapshot claims)] for every snapshot
+    of ``snapshot``'s chain, newest first — ``read_table``'s resolution rule
+    (claims = lineage partition_keys), evaluated on the driver with pyarrow
+    and no Spark job.  Sized by the chain's claimed ranges, so meant for
+    indexes small enough to serve in process."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    out: list[tuple[str, list[int]]] = []
+    claimed: set[int] = set()
+    snap: str | None = snapshot
+    while snap is not None:
+        out.append((snap, sorted(claimed)))
+        parent = read_catalog(index_dir, snap).parent_snapshot
+        if parent is not None:
+            keys = pq.read_table(
+                table_path(index_dir, "lineage", snap), columns=["partition_key"]
+            ).column(0)
+            keys = pc.filter(keys, pc.not_equal(keys, "-"))
+            claimed.update(pc.cast(keys, "int64").to_pylist())
+        snap = parent
+    return out
+
+
 def read_table(
     spark: SparkSession, index_dir: str, table: str, snapshot: str | None = None
 ) -> DataFrame:

@@ -510,7 +510,7 @@ class TestRankIdentity:
     ):
         """Force regimes 2 (collected per-range bounds, θ-pruned batches)
         and 3 (two-level super-range) on the small corpus; both must stay
-        rank-identical to the single-job fast path / exhaustive scorer."""
+        rank-identical to the exhaustive scorer."""
         from gitlab_elasticsearch_indexer_spark.operators.search import (
             analyze_query,
             search_exhaustive,
@@ -1230,7 +1230,7 @@ class TestHeadTermSalting:
 class TestBlockmaxSkipping:
     """θ-pruning must measurably skip ranges, not just stay rank-correct:
     after the first descending-bound batches establish the k-th score, lower
-    -bound ranges are never scored (stats_out telemetry)."""
+    -bound ranges are never scored (profile telemetry)."""
 
     def test_ranges_skipped_and_rank_identical(self, spark, tmp_path):
         from gitlab_elasticsearch_indexer_spark.operators.search import (
@@ -1250,7 +1250,7 @@ class TestBlockmaxSkipping:
         bm = search_blockmax(
             spark, s.segments, s.term_stats, s.docs, terms, 5, s.catalog.avgdl,
             range_batch=4, n_ranges_hint=10**6,  # force regime 2
-            stats_out=stats,
+            profile=stats,
         ).toPandas()
         ex = search_exhaustive(
             s.segments, s.term_stats, s.docs, terms, 5, s.catalog.avgdl

@@ -24,10 +24,12 @@ ANY range-partitioned copy-on-write layout (Iceberg/Delta file rewrite
 amplification), reported here rather than hidden.
 
 ``--concurrency`` — serving-path probe: N concurrent ``search()`` calls on
-ONE warm Searcher (local[32]), queries/sec at 1 vs 8 client threads.
-Spark schedules jobs submitted from separate driver threads concurrently
-(FAIR-ish FIFO over 32 cores); the probe surfaces any driver-side
-lock/bottleneck in the Searcher itself before a real deployment would.
+ONE warm Searcher (local[32]): queries/sec and per-query p50/p95 latency at
+1 vs 8 client threads.  Queries on an index of at most RANGE_BATCH ranges
+are served in process (no Spark job); larger indexes submit Spark jobs
+from separate driver threads, which Spark schedules concurrently.  The probe
+surfaces any driver-side lock/bottleneck in the Searcher itself before a
+real deployment would.
 """
 
 from __future__ import annotations
@@ -153,6 +155,8 @@ def bench_incremental() -> None:
 def bench_concurrency() -> None:
     from concurrent.futures import ThreadPoolExecutor
 
+    import numpy as np
+
     from gitlab_elasticsearch_indexer_spark.plans.build_index import build_index
     from gitlab_elasticsearch_indexer_spark.plans.search import Searcher
     from gitlab_elasticsearch_indexer_spark.session import get_spark
@@ -172,8 +176,10 @@ def bench_concurrency() -> None:
         s.docs.count()
         s.term_stats.count()
 
-        def one(q: str) -> int:
-            return len(s.search(q, k=10, with_docs=False).collect())
+        def one(q: str) -> float:
+            t = time.perf_counter()
+            s.search(q, k=10, with_docs=False).collect()
+            return (time.perf_counter() - t) * 1000
 
         for q in queries:  # warm every query's plan once
             one(q)
@@ -183,15 +189,13 @@ def bench_concurrency() -> None:
         for n_threads in (1, 8):
             work = [q for q in queries for _ in range(n_each)]
             t0 = time.time()
-            if n_threads == 1:
-                for q in work:
-                    one(q)
-            else:
-                with ThreadPoolExecutor(max_workers=n_threads) as ex:
-                    list(ex.map(one, work))
+            with ThreadPoolExecutor(max_workers=n_threads) as ex:
+                ms = np.array(list(ex.map(one, work)))
             wall = time.time() - t0
             out[f"qps_{n_threads}_threads"] = round(len(work) / wall, 2)
             out[f"wall_{n_threads}_threads"] = round(wall, 3)
+            out[f"p50_ms_{n_threads}_threads"] = round(float(np.percentile(ms, 50)), 1)
+            out[f"p95_ms_{n_threads}_threads"] = round(float(np.percentile(ms, 95)), 1)
         out.update({
             "metric": "searcher_concurrency",
             "cpus": CPUS,
