@@ -43,10 +43,6 @@ DOCS_PER_RANGE = 8192                # docid-range width = explicit salt unit
 N_TERM_BUCKETS = 64                  # segment partition buckets (term routing)
 
 # Analyzer names (elastic/index.go:29-62)
-ANALYZER_DEFAULT = "default"         # standard tok + lowercase + light_english
 ANALYZER_SIMPLE = "simple"           # lowercase + [a-z0-9]+ (oracle-friendly)
-ANALYZER_CODE = "code"               # whitespace + word_delimiter_graph + edge_ngram
-ANALYZER_PATH = "path"               # path_hierarchy reversed + lowercase + asciifold
-ANALYZER_NGRAM = "ngram"             # 2-3 ngram + lowercase
 
 ELASTIC_TIME_FORMAT = "yyyyMMdd'T'HHmmssZ"   # indexer/person.go:10 (%Y%m%dT%H%M%S%z)

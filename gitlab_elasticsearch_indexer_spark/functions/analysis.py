@@ -244,11 +244,6 @@ def path_hierarchy_reversed(path: str) -> list[str]:
     return ["/".join(parts[i:]) for i in range(len(parts))]
 
 
-def sha_normalize(value: str) -> str:
-    """sha_normalizer: lowercase keyword normalizer (elastic/index.go:78-85)."""
-    return value.lower()
-
-
 # ---------------------------------------------------------------------------
 # Analyzer chains (str -> list[str])
 # ---------------------------------------------------------------------------

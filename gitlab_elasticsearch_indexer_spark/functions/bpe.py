@@ -138,19 +138,30 @@ def _unescape(sym: str) -> str:
 
 
 def _parse_merges(text: str) -> dict[tuple[str, str], int]:
+    """Merge lines in rank order, in either of two formats.
+
+    - Native (any line holds a tab — the trainer's and ``dump_lines``'
+      format): tab-separated escaped pairs, since symbols may contain spaces
+      (pretokens carry their leading space).  ``#`` lines are comments; a
+      symbol that starts with ``#`` is written escaped.
+    - Published GPT-2 ``merges.txt`` (no tabs; symbols use Ġ for space and
+      never contain a raw tab/newline): space-separated and unescaped, so a
+      ``\\`` symbol stays as written and a ``# #`` line is a merge; only a
+      leading ``#version`` header is skipped.
+    """
+    lines = text.splitlines()
+    native = any("\t" in line for line in lines)
+    if not native and lines and lines[0].startswith("#version"):
+        lines = lines[1:]
     ranks: dict[tuple[str, str], int] = {}
-    for line in text.splitlines():
-        if not line or line.startswith("#"):
-            continue
-        # tab-separated escaped pairs (the trainer's format: symbols may
-        # contain spaces since pretokens carry their leading space);
-        # plain-space files (published GPT-2 tables, whose symbols use Ġ
-        # for space and never raw tab/newline) parse via the fallback.
-        if "\t" in line:
+    for line in lines:
+        if native:
+            if line.startswith("#"):
+                continue
             a, _, b = line.partition("\t")
+            a, b = _unescape(a), _unescape(b)
         else:
             a, _, b = line.partition(" ")
-        a, b = _unescape(a), _unescape(b)
         if a and b:
             ranks[(a, b)] = len(ranks)
     return ranks

@@ -5,15 +5,18 @@ The reference delegates this to Lucene (FOR/vInt block postings with skip
 data and block-max metadata — driven by the mapping's per-field
 ``index_options``, elastic/index.go:115-119,188-191).  This module is our
 from-scratch equivalent: encode/decode whole uint64 arrays without
-per-element Python loops, so the applyInPandas posting builder and the
-query-time block reader stay Arrow/numpy-speed.
+per-element Python loops, so the posting kernel and the query-time block
+reader stay Arrow/numpy-speed.  The single-block encoders below are the
+format's reference; the kernel encodes a whole chunk of blocks at once
+(``for_blocks``, ``varint_spans``) with byte-identical output.
 
 Layout per block (BLOCK_SIZE=128 postings, like Lucene):
 - ``docids_enc``: encoded deltas where delta[0]=docid[0]-base, rest adjacent
   diffs (strictly positive — docids are unique and sorted).
 - ``tfs_enc``:    encoded tf values.
-Block metadata (first/max docid = skip pointers, max_tf, max_tfn = block-max
-score bound) lives in sibling columns of the segments table (schemas.py).
+Block metadata (first/max docid = skip pointers; max_tf and min_dl give the
+block-max score bound) lives in sibling columns of the segments table
+(schemas.py).
 
 Self-describing payloads: the first byte tags the codec —
 ``0x00`` LEB128 varint stream, ``0x01`` FOR bit-packing
@@ -30,11 +33,10 @@ from __future__ import annotations
 
 import numpy as np
 
-_MAX_VARINT_BYTES = 10  # enough for uint64
-
 TAG_VARINT = 0x00
 TAG_FOR = 0x01
-_FOR_MAX_WIDTH = 32  # wider values → varint fallback (shift safety + rarity
+FOR_MAX_WIDTH = 32  # wider values → varint fallback (shift safety + rarity)
+FOR_HEADER_BYTES = 6  # tag | width | u32 count
 
 
 def _bit_width(max_value: int) -> int:
@@ -79,10 +81,63 @@ def block_encode(values: np.ndarray) -> bytes:
     if values.size == 0:
         return bytes([TAG_VARINT])
     width = _bit_width(int(values.max()))
-    if width <= _FOR_MAX_WIDTH:
+    if width <= FOR_MAX_WIDTH:
         header = bytes([TAG_FOR, width]) + np.uint32(values.size).tobytes()
         return header + for_pack(values, width)
     return bytes([TAG_VARINT]) + varint_encode(values)
+
+
+# bit_length(x) == number of powers of two <= x
+_POW2 = np.array([1 << i for i in range(64)], dtype=np.uint64)
+
+
+def for_blocks(values: np.ndarray, starts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``block_encode`` of many blocks in one numpy pass.
+
+    ``values`` holds every block's values back to back, block ``i`` starting
+    at ``starts[i]`` (``starts[0] == 0``).  Returns the concatenated payloads
+    as a uint8 array plus ``len(starts) + 1`` byte offsets; block ``i``'s
+    bytes equal ``block_encode(values[starts[i]:starts[i + 1]])``.  Every
+    block is FOR: a block whose values need more than FOR_MAX_WIDTH bits
+    raises instead of falling back to varint."""
+    values = np.asarray(values, dtype=np.uint64)
+    starts = np.asarray(starts, dtype=np.int64)
+    n = starts.size
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    if n == 0:
+        return np.zeros(0, dtype=np.uint8), offsets
+    counts = np.diff(np.append(starts, values.size))
+    widths = np.searchsorted(_POW2, np.maximum.reduceat(values, starts), side="right")
+    np.maximum(widths, 1, out=widths)
+    w_max = int(widths.max())
+    if w_max > FOR_MAX_WIDTH:
+        raise ValueError(f"FOR width {w_max} exceeds {FOR_MAX_WIDTH} bits")
+    np.cumsum(FOR_HEADER_BYTES + (counts * widths + 7) // 8, out=offsets[1:])
+
+    # header: tag | width | little-endian u32 count
+    hdr = np.empty((n, FOR_HEADER_BYTES), dtype=np.int64)
+    hdr[:, 0] = TAG_FOR
+    hdr[:, 1] = widths
+    for j in range(4):
+        hdr[:, 2 + j] = (counts >> (8 * j)) & 0xFF
+    hdr_idx = offsets[:-1, None] + np.arange(FOR_HEADER_BYTES)
+
+    # value k of block i sits at bit (offsets[i] + header) * 8 + k * width[i];
+    # shifted into place it spans at most (width + 7 + 7) // 8 bytes
+    blk = np.repeat(np.arange(n), counts)
+    k = np.arange(values.size) - starts[blk]
+    bit = (offsets[:-1][blk] + FOR_HEADER_BYTES) * 8 + k * widths[blk]
+    shifted = values << (bit & 7).astype(np.uint64)
+    byte0 = bit >> 3
+    planes = range((w_max + 14) // 8)
+    idx = np.concatenate([hdr_idx.ravel()] + [byte0 + j for j in planes])
+    byte_vals = np.concatenate(
+        [hdr.ravel()]
+        + [(shifted >> np.uint64(8 * j)) & np.uint64(0xFF) for j in planes]
+    )
+    # values own disjoint bits, so summing their bytes is OR-ing them
+    data = np.bincount(idx, weights=byte_vals, minlength=int(offsets[-1]))
+    return data[: offsets[-1]].astype(np.uint8), offsets
 
 
 def block_decode(buf: bytes, count: int | None = None) -> np.ndarray:
@@ -102,28 +157,32 @@ def block_decode(buf: bytes, count: int | None = None) -> np.ndarray:
 
 def varint_encode(values: np.ndarray) -> bytes:
     """Vectorized LEB128: uint64 array -> bytes."""
+    return varint_spans(values)[0].tobytes()
+
+
+# LEB128 needs one more byte at each of these thresholds (2^7 ... 2^63)
+_VARINT_LIMITS = np.array([1 << (7 * i) for i in range(1, 10)], dtype=np.uint64)
+
+
+def varint_spans(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128 of a whole uint64 array in one pass: the encoded bytes as a
+    uint8 array, plus each value's start byte offset (``n + 1`` entries, the
+    last is the total).  LEB128 values concatenate, so any run of values
+    ``[i, j)`` encodes to ``data[offsets[i]:offsets[j]]``."""
     values = np.asarray(values, dtype=np.uint64)
-    if values.size == 0:
-        return b""
-    # bytes needed per value: ceil(bit_length/7), min 1 — computed by a
-    # vectorized shift loop (≤10 iterations for uint64)
-    widths = np.ones(values.shape, dtype=np.int64)
-    v = values.copy()
-    v >>= np.uint64(7)
-    while np.any(v > 0):
-        widths += (v > 0).astype(np.int64)
-        v >>= np.uint64(7)
-    offsets = np.concatenate(([0], np.cumsum(widths)))
+    widths = 1 + np.searchsorted(_VARINT_LIMITS, values, side="right")
+    offsets = np.zeros(values.size + 1, dtype=np.int64)
+    np.cumsum(widths, out=offsets[1:])
     out = np.zeros(int(offsets[-1]), dtype=np.uint8)
     shifted = values.copy()
-    for byte_i in range(int(widths.max())):
+    for byte_i in range(int(widths.max()) if values.size else 0):
         active = widths > byte_i
         pos = offsets[:-1][active] + byte_i
         chunk = (shifted[active] & np.uint64(0x7F)).astype(np.uint8)
         more = widths[active] > (byte_i + 1)
         out[pos] = chunk | (more.astype(np.uint8) << 7)
         shifted[active] >>= np.uint64(7)
-    return out.tobytes()
+    return out, offsets
 
 
 def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:

@@ -24,19 +24,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 FEATURE_DIM = 8
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("docid", T.LongType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("magic_hex", T.StringType(), True),
-        T.StructField("content_type", T.StringType(), True),
-    ]
-)
-
 
 def decode_image_stub(data: bytes, fake: bool = True) -> np.ndarray:
     """STUB for the image-decode step (no PIL/cv2 in this container).

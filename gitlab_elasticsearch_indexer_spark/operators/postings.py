@@ -1,36 +1,41 @@
 """tokens → compressed posting segments + term stats (SURVEY.md Q1 — the
 Lucene-side inverted-index build the reference delegates to Elasticsearch).
 
-Shape of the build (ONE wide shuffle, all-numeric, partition-kernel encoding):
+Shape of the build (ONE wide shuffle, all-numeric, chunk-vectorized
+encoding, one SQL execution per segments write):
 
     token occurrences (docid, dl, term [, pos])
-      ├─ term dictionary: distinct(term) → (term, tid=xxhash64, bucket)
-      │    [map-side dedup makes this shuffle vocabulary-sized, not
-      │     corpus-sized; collision-checked]
+      ├─ term dictionary: distinct (term, tid=xxhash64), count per tid
+      │    [vocabulary-sized; a tid two terms share is a raise_error on
+      │     the joined bucket column, so the write fails before any commit]
       └─ numeric stream (pd = docid<<20|dl, tid [, pos])
            └─ repartition(tid, docid_range)        [the only big exchange —
            └─ sortWithinPartitions(tid, pd)         two int64 columns/row]
-           └─ mapInPandas(partition kernel):
+           └─ mapInArrow(partition kernel), whole-chunk numpy passes:
                 run-length (tid, docid) → tf       [replaces a groupBy shuffle]
-                slice groups → ≤128-posting blocks [numpy end to end]
-                delta+varint encode + metadata
-           └─ ⨝ dictionary on tid → term, bucket   [block rows ≪ postings]
+                posting/group/block boundaries     [numpy comparisons]
+                block metadata                     [ufunc.reduceat]
+                FOR + LEB128 payloads of every block in ONE buffer each
+           └─ ⨝ broadcast dictionary on tid → term, bucket
+                                                   [block rows ≪ postings]
       └─ write partitionBy(bucket)   [bucket = pmod(xxhash64(term), 64)]
 
-Why this shape (measured on 1M docs / 55M occurrences, local[32]):
+Why this shape:
 
 - **One big shuffle instead of two.**  tf aggregation happens inside the
   kernel from the sort order — the classic (docid,term) pre-aggregation
   shuffle is gone.
-- **No term strings cross Arrow.**  The original kernel shipped 55M strings
-  into pandas: Arrow→object-dtype conversion materializes one Python str
-  per row and dominated the entire build (~90 s of a 156 s build).  The
-  numeric stream converts to numpy int64 near-zero-copy; term strings
-  reattach at block granularity (~100-1000× fewer rows).
-- **No per-group overhead.**  applyInPandas materializes a pandas DataFrame
-  per (term, range) group (~1 ms × |vocab|·|ranges| groups); the kernel
-  sees whole sorted partitions and finds group boundaries with numpy
-  comparisons.
+- **Only numbers cross Arrow into the kernel.**  Shipping the occurrence
+  stream's term strings into Python materialized one str per row and
+  dominated the whole build (~90 s of a 156 s build at 1M docs); int64
+  columns convert to numpy without a copy, and term strings reattach at
+  block granularity (~100-1000× fewer rows) through the dictionary join.
+- **No Python per group or per block.**  Encoding one block from Python
+  costs ~100 µs (seconds per core for a 40k-block build); the kernel
+  encodes a whole chunk's blocks with a fixed number of numpy passes, and
+  each block's bytes equal codec's single-block encoders'.
+- **No dictionary job.**  The dictionary and its collision check run inside
+  the segments write: no cached DataFrame and no action of their own.
 - **Term stats for free.**  Each block row carries (n_docs, sum_tf), so
   df/cf aggregate from block *metadata* — no second pass over occurrences.
 
@@ -54,8 +59,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import BLOCK_SIZE, BM25_B, BM25_K1, DOCS_PER_RANGE, N_TERM_BUCKETS
 from ..functions import codec
@@ -86,91 +94,141 @@ def bucket_col(term_col):
 
 
 # kernel output: SEGMENTS with term replaced by numeric tid (+ no bucket)
-_KERNEL_COLS = ["tid"] + [f.name for f in SEGMENTS.fields if f.name not in ("term", "bucket")]
-_KERNEL_SCHEMA = (
-    "tid long, docid_range long, block_idx int, n_docs int, first_docid long, "
-    "max_docid long, max_tf int, min_dl int, sum_tf long, max_tfn double, "
-    "docids_enc binary, tfs_enc binary, positions_enc binary, offsets_enc binary"
+# (all nullable, like the segments files Spark has always written)
+_KERNEL_SCHEMA = T.StructType(
+    [T.StructField("tid", T.LongType())]
+    + [
+        T.StructField(f.name, f.dataType)
+        for f in SEGMENTS.fields
+        if f.name not in ("term", "bucket")
+    ]
 )
+_KERNEL_ARROW_SCHEMA = to_arrow_schema(_KERNEL_SCHEMA)
 
-
-def _encode_group(
-    tid: int,
-    docid_range: int,
-    docids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    avgdl: float,
-    poss: np.ndarray | None = None,
-    starts_flat: np.ndarray | None = None,
-    ends_flat: np.ndarray | None = None,
-    occ_start: np.ndarray | None = None,
-    occ_end: np.ndarray | None = None,
-) -> list[tuple]:
-    """One (tid, docid_range) posting group (already docid-sorted) → block rows.
-
-    Positions/offsets arrive as the partition's FLAT occurrence arrays plus
-    this group's per-posting [occ_start, occ_end) index spans — the encoders
-    vectorize over a whole block's occurrences at once instead of paying a
-    numpy slice + diff + concatenate per posting (the dominant kernel cost
-    of the positions+offsets shape; BENCH.md §2 round-4 block)."""
-    tfn = tfs / (tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * (dls / avgdl)))
-    base = docid_range * DOCS_PER_RANGE
-    rows = []
-    for blk_i, start in enumerate(range(0, len(docids), BLOCK_SIZE)):
-        d = docids[start : start + BLOCK_SIZE]
-        t = tfs[start : start + BLOCK_SIZE]
-        rows.append(
-            (
-                tid,
-                docid_range,
-                blk_i,
-                len(d),
-                int(d[0]),
-                int(d[-1]),
-                int(t.max()),
-                int(dls[start : start + BLOCK_SIZE].min()),
-                int(t.sum()),
-                float(tfn[start : start + BLOCK_SIZE].max()),
-                codec.encode_docids(d, base=base),
-                codec.encode_tfs(t.astype(np.int64)),
-                (
-                    codec.encode_positions_block(
-                        poss,
-                        occ_start[start : start + BLOCK_SIZE],
-                        occ_end[start : start + BLOCK_SIZE],
-                    )
-                    if poss is not None
-                    else None
-                ),
-                (
-                    codec.encode_offsets_block(
-                        starts_flat,
-                        ends_flat,
-                        occ_start[start : start + BLOCK_SIZE],
-                        occ_end[start : start + BLOCK_SIZE],
-                    )
-                    if starts_flat is not None
-                    else None
-                ),
-            )
-        )
-    return rows
-
-
-# Rows buffered in the kernel before a flush of complete groups.  The old
-# kernel held the WHOLE shuffle partition (list(batches) + concat): at a
-# 2M-doc offsets build that was ~14M rows × 4 concurrent workers of pandas
-# churn (measured 5.1 GB worker RSS and the stage going 2× superlinear).
-# Streaming in ~2M-row chunks keeps each worker at a bounded ~100-200 MB
-# regardless of partition size — the property that must hold at 10^12 docs.
+# Occurrence rows buffered in the kernel before a flush of complete groups.
+# Holding a whole shuffle partition instead measured 5.1 GB of worker RSS
+# at a 2M-doc offsets build (~14M rows × 4 concurrent workers).  ~2M-row
+# chunks keep each worker at a bounded ~100-200 MB regardless of partition
+# size — the property that must hold at 10^12 docs.
 _KERNEL_CHUNK_ROWS = 2_000_000
+# block rows per output Arrow batch
+_OUT_BATCH_ROWS = 4096
+
+
+def _binary_slices(
+    data: np.ndarray, offsets: np.ndarray, lo: int, hi: int
+) -> pa.BinaryArray:
+    """Blocks [lo, hi) of a concatenated payload as a binary column, built
+    from buffer views (no per-block bytes objects)."""
+    off = offsets[lo : hi + 1]
+    return pa.BinaryArray.from_buffers(
+        pa.binary(),
+        hi - lo,
+        [None, pa.py_buffer((off - off[0]).astype(np.int32)),
+         pa.py_buffer(data[off[0] : off[-1]])],
+    )
+
+
+def _encode_blocks(cols: dict[str, np.ndarray], avgdl: float) -> Iterator[pa.RecordBatch]:
+    """Complete (tid, docid_range) groups of occurrence rows sorted by
+    (tid, pd [, pos]) → block rows.  Posting, group and block boundaries,
+    block metadata and every payload come from whole-chunk numpy passes;
+    each block's payload bytes equal codec's per-block encoders'."""
+    tids, packed = cols["tid"], cols["pd"]
+    n = tids.size
+    docids = packed >> DL_BITS
+
+    # postings: runs of equal (tid, docid); tf = run length
+    new_posting = np.ones(n, dtype=bool)
+    new_posting[1:] = (tids[1:] != tids[:-1]) | (docids[1:] != docids[:-1])
+    p_start = np.flatnonzero(new_posting)
+    n_p = p_start.size
+    tf = np.diff(np.append(p_start, n))
+    p_tids = tids[p_start]
+    p_docids = docids[p_start]
+    p_dls = packed[p_start] & _DL_MASK
+    p_ranges = p_docids // DOCS_PER_RANGE
+
+    # groups: runs of equal (tid, docid_range); blocks: BLOCK_SIZE-posting
+    # slices of a group
+    new_group = np.ones(n_p, dtype=bool)
+    new_group[1:] = (p_tids[1:] != p_tids[:-1]) | (p_ranges[1:] != p_ranges[:-1])
+    g_start = np.flatnonzero(new_group)
+    in_group = np.arange(n_p) - g_start[np.cumsum(new_group) - 1]
+    b_start = np.flatnonzero(in_group % BLOCK_SIZE == 0)
+    n_b = b_start.size
+
+    # docid deltas within a block; a block's first delta is vs the range base
+    deltas = np.empty(n_p, dtype=np.int64)
+    deltas[1:] = p_docids[1:] - p_docids[:-1]
+    deltas[b_start] = p_docids[b_start] - p_ranges[b_start] * DOCS_PER_RANGE
+    if deltas.min() < 0:
+        raise ValueError("docids must be sorted ascending and >= base")
+
+    tf_f = tf.astype(np.float64)
+    dl_f = p_dls.astype(np.float64)
+    tfn = tf_f / (tf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * (dl_f / avgdl)))
+    payloads = {
+        "docids_enc": codec.for_blocks(deltas, b_start),
+        "tfs_enc": codec.for_blocks(tf, b_start),
+    }
+    if "pos" in cols:
+        # per posting: count, then positions (first absolute, rest deltas);
+        # posting i's count lands at value p_start[i] + i
+        poss = cols["pos"]
+        d = poss.copy()
+        d[1:] -= poss[:-1]
+        d[p_start] = poss[p_start]
+        data, voff = codec.varint_spans(np.insert(d, p_start, tf).astype(np.uint64))
+        first = p_start[b_start] + b_start
+        payloads["positions_enc"] = (data, np.append(voff[first], data.size))
+    if "start" in cols:
+        # per posting: count, start deltas (first absolute), then lengths;
+        # posting i's count lands at value 2 * p_start[i] + i
+        starts, ends = cols["start"], cols["end"]
+        sd = starts.copy()
+        sd[1:] -= starts[:-1]
+        sd[p_start] = starts[p_start]
+        base = 2 * p_start + np.arange(n_p)
+        posting = np.repeat(np.arange(n_p), tf)
+        at = base[posting] + 1 + np.arange(n) - p_start[posting]
+        flat = np.empty(2 * n + n_p, dtype=np.int64)
+        flat[base] = tf
+        flat[at] = sd
+        flat[at + tf[posting]] = ends - starts
+        data, voff = codec.varint_spans(flat.astype(np.uint64))
+        payloads["offsets_enc"] = (data, np.append(voff[base[b_start]], data.size))
+
+    b_end = np.append(b_start[1:], n_p)
+    meta = [
+        p_tids[b_start],
+        p_ranges[b_start],
+        (in_group[b_start] // BLOCK_SIZE).astype(np.int32),
+        (b_end - b_start).astype(np.int32),
+        p_docids[b_start],
+        p_docids[b_end - 1],
+        np.maximum.reduceat(tf, b_start).astype(np.int32),
+        np.minimum.reduceat(p_dls, b_start).astype(np.int32),
+        np.add.reduceat(tf, b_start),
+        np.maximum.reduceat(tfn, b_start),
+    ]
+    for lo in range(0, n_b, _OUT_BATCH_ROWS):
+        hi = min(lo + _OUT_BATCH_ROWS, n_b)
+        enc = [
+            _binary_slices(*payloads[name], lo, hi)
+            if name in payloads
+            else pa.nulls(hi - lo, pa.binary())
+            for name in ("docids_enc", "tfs_enc", "positions_enc", "offsets_enc")
+        ]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(m[lo:hi]) for m in meta] + enc, schema=_KERNEL_ARROW_SCHEMA
+        )
 
 
 def make_partition_kernel(
     avgdl: float, with_positions: bool = False, with_offsets: bool = False
 ):
-    """mapInPandas kernel over a partition sorted by (tid, docid [, pos]):
+    """mapInArrow kernel over a partition sorted by (tid, pd [, pos]):
     run-length tf + block encoding, int64 numpy end to end.
 
     Streams the partition in bounded chunks: complete (tid, docid_range)
@@ -178,105 +236,48 @@ def make_partition_kernel(
     buffered; only the trailing incomplete group carries over to the next
     chunk (group contiguity is guaranteed by the exchange + partition-local
     sort).  Worker memory is O(chunk), not O(partition)."""
+    names = ["tid", "pd"] + (["pos"] if with_positions else []) + (
+        ["start", "end"] if with_offsets else []
+    )
 
-    def encode_chunk(
-        pdf: pd.DataFrame, final: bool, rows: list
-    ) -> tuple[pd.DataFrame | None, Iterator[pd.DataFrame]]:
-        """Encode all COMPLETE groups in pdf into `rows`; return the
-        leftover tail (the last, possibly-incomplete group) unless final."""
-        out: list[pd.DataFrame] = []
-        tids = pdf["tid"].to_numpy(dtype=np.int64)
-        packed = pdf["pd"].to_numpy(dtype=np.int64)
-        docids = packed >> DL_BITS
-        dls = packed & _DL_MASK
-        ranges = docids // DOCS_PER_RANGE
-        poss = pdf["pos"].to_numpy(dtype=np.int64) if with_positions else None
-        starts_arr = pdf["start"].to_numpy(dtype=np.int64) if with_offsets else None
-        ends_arr = pdf["end"].to_numpy(dtype=np.int64) if with_offsets else None
+    def concat(pend: list[dict]) -> dict[str, np.ndarray]:
+        if len(pend) == 1:
+            return pend[0]
+        return {c: np.concatenate([p[c] for p in pend]) for c in names}
 
-        # posting boundaries: first occurrence of each (tid, docid) run
-        new_posting = np.ones(len(pdf), dtype=bool)
-        new_posting[1:] = (tids[1:] != tids[:-1]) | (docids[1:] != docids[:-1])
-        p_start = np.nonzero(new_posting)[0]
-        p_end = np.append(p_start[1:], len(pdf))
-        tf = (p_end - p_start).astype(np.float64)
-
-        p_tids = tids[p_start]
-        p_docids = docids[p_start]
-        p_dls = dls[p_start].astype(np.float64)
-        p_ranges = ranges[p_start]
-
-        # group boundaries: (tid, docid_range)
-        new_group = np.ones(len(p_start), dtype=bool)
-        new_group[1:] = (p_tids[1:] != p_tids[:-1]) | (p_ranges[1:] != p_ranges[:-1])
-        g_start = np.nonzero(new_group)[0]
-        g_end = np.append(g_start[1:], len(p_start))
-
-        tail: pd.DataFrame | None = None
-        n_groups = len(g_start)
-        if not final and n_groups > 0:
-            # retain the last group — its remaining rows may arrive in the
-            # next Arrow batch; if the buffer is a single giant group, no
-            # flush is possible yet and the whole pdf carries over
-            tail_row0 = int(p_start[g_start[-1]])
-            if n_groups == 1:
-                return pdf, iter(out)
-            # .copy() so the retained tail doesn't pin the whole chunk's
-            # block memory through the next iteration
-            tail = pdf.iloc[tail_row0:].copy()
-            g_start, g_end = g_start[:-1], g_end[:-1]
-
-        for gs, ge in zip(g_start, g_end):
-            rows.extend(
-                _encode_group(
-                    int(p_tids[gs]),
-                    int(p_ranges[gs]),
-                    p_docids[gs:ge],
-                    tf[gs:ge],
-                    p_dls[gs:ge],
-                    avgdl,
-                    poss if with_positions else None,
-                    starts_arr if with_offsets else None,
-                    ends_arr if with_offsets else None,
-                    p_start[gs:ge] if (with_positions or with_offsets) else None,
-                    p_end[gs:ge] if (with_positions or with_offsets) else None,
-                )
-            )
-            if len(rows) >= 4096:  # bound Arrow batch size
-                out.append(pd.DataFrame(rows, columns=_KERNEL_COLS))
-                rows.clear()
-        return tail, iter(out)
-
-    def build_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pend: list[pd.DataFrame] = []
+    def build_blocks(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pend: list[dict] = []
         pend_rows = 0
         next_flush = _KERNEL_CHUNK_ROWS
-        rows: list[tuple] = []
         for b in batches:
-            if len(b) == 0:
+            if b.num_rows == 0:
                 continue
-            pend.append(b)
-            pend_rows += len(b)
-            if pend_rows >= next_flush:
-                pdf = pend[0] if len(pend) == 1 else pd.concat(pend, ignore_index=True)
-                tail, out = encode_chunk(pdf, final=False, rows=rows)
-                yield from out
-                pend = [tail] if tail is not None and len(tail) else []
-                pend_rows = len(pend[0]) if pend else 0
-                # a buffer that is ONE giant group can't flush yet — grow the
-                # trigger so the re-scan stays amortized O(n), not O(n²)
-                next_flush = (
-                    pend_rows + _KERNEL_CHUNK_ROWS
-                    if pend_rows >= next_flush
-                    else _KERNEL_CHUNK_ROWS
-                )
+            pend.append(
+                {c: b.column(c).to_numpy().astype(np.int64, copy=False) for c in names}
+            )
+            pend_rows += b.num_rows
+            if pend_rows < next_flush:
+                continue
+            cols = concat(pend)
+            # the last group's remaining rows may arrive in the next batch:
+            # flush everything before it, carry it over
+            tids, ranges = cols["tid"], (cols["pd"] >> DL_BITS) // DOCS_PER_RANGE
+            prev = np.flatnonzero((tids != tids[-1]) | (ranges != ranges[-1]))
+            cut = int(prev[-1]) + 1 if prev.size else 0
+            if cut:
+                yield from _encode_blocks({c: v[:cut] for c, v in cols.items()}, avgdl)
+                # copy so the carried tail doesn't pin the whole chunk
+                cols = {c: v[cut:].copy() for c, v in cols.items()}
+            pend = [cols]
+            pend_rows = cols["tid"].size
+            # a buffer that is ONE giant group can't flush yet — grow the
+            # trigger so the re-scan stays amortized O(n), not O(n²)
+            next_flush = (
+                pend_rows + _KERNEL_CHUNK_ROWS if pend_rows >= next_flush
+                else _KERNEL_CHUNK_ROWS
+            )
         if pend:
-            pdf = pend[0] if len(pend) == 1 else pd.concat(pend, ignore_index=True)
-            if len(pdf):
-                _, out = encode_chunk(pdf, final=True, rows=rows)
-                yield from out
-        if rows:
-            yield pd.DataFrame(rows, columns=_KERNEL_COLS)
+            yield from _encode_blocks(concat(pend), avgdl)
 
     return build_blocks
 
@@ -342,13 +343,27 @@ def occurrence_stream(
     return num.repartition(*part_args).sortWithinPartitions(*sort_cols)
 
 
-def term_dictionary(occurrences: DataFrame) -> DataFrame:
-    """(term, tid, bucket) — vocabulary-sized after map-side dedup."""
-    return (
-        occurrences.select("term")
-        .distinct()
-        .withColumn("tid", F.xxhash64("term"))
-        .withColumn("bucket", bucket_col(F.col("term")))
+def term_dictionary(pairs: DataFrame) -> DataFrame:
+    """(term, tid) occurrence rows → (tid, term, bucket), one row per tid.
+
+    Vocabulary-sized: distinct (term, tid) pairs (map-side dedup), each
+    counted against its tid.  A tid that two terms share would silently
+    merge two posting lists, so its ``bucket`` is a ``raise_error``: the
+    segments write, which partitions by bucket, fails before anything
+    commits.  (On ``bucket`` so the written ``term`` column stays as it
+    was, non-null.)  With 64-bit hashes a collision is ~10^-6 even at
+    10^7-term vocabularies — checked, not assumed away."""
+    n_terms = F.count("*").over(Window.partitionBy("tid"))
+    bucket = F.when(n_terms == 1, bucket_col(F.col("term"))).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit("xxhash64 term-id collision: "), F.col("term"),
+                F.lit(" shares its tid with another term; rebuild with a secondary hash"),
+            )
+        )
+    )
+    return pairs.select("term", "tid").distinct().select(
+        "tid", "term", bucket.alias("bucket")
     )
 
 
@@ -361,34 +376,28 @@ def build_segments(
 ) -> DataFrame:
     """Token occurrences (docid, term, dl [, pos [, start, end]]) → SEGMENTS.
 
-    Raises on a tid (xxhash64) collision in the dictionary — with 64-bit
-    hashes this is ~10^-6 even at 10^7-term vocabularies; a collision would
-    silently merge two posting lists, so it is checked, not assumed away.
+    One plan: the posting exchange and kernel, and the term dictionary
+    broadcast-joined onto the block rows.  Writing it runs the collision
+    check (``term_dictionary``) in the same job.
 
     Positions must be token positions within the doc (posexplode order); the
     sort places them ascending per posting so delta encoding applies.
     """
-    tdict = term_dictionary(occurrences).cache()
-    n_terms, n_tids = tdict.agg(
-        F.count("*"), F.countDistinct("tid")
-    ).collect()[0]
-    if n_terms != n_tids:
-        raise RuntimeError(
-            f"xxhash64 term-id collision: {n_terms} terms -> {n_tids} ids; "
-            "rebuild with a secondary hash"
-        )
-
+    tdict = term_dictionary(
+        occurrences.select("term", F.xxhash64("term").alias("tid"))
+    )
     part = occurrence_stream(
         occurrences, with_positions, with_offsets, est_occurrences
     )
-    blocks = part.mapInPandas(
+    blocks = part.mapInArrow(
         make_partition_kernel(avgdl, with_positions, with_offsets),
         schema=_KERNEL_SCHEMA,
     )
-    # reattach term strings at block granularity (blocks ≪ postings);
-    # broadcast is right while the dictionary fits — Spark falls back to a
-    # shuffled join automatically above the threshold (10^9-term corpora)
-    return blocks.join(tdict, "tid").select(*[f.name for f in SEGMENTS.fields])
+    # term strings reattach at block granularity (blocks ≪ postings); the
+    # broadcast side is one row per vocabulary term
+    return blocks.join(F.broadcast(tdict), "tid").select(
+        *[f.name for f in SEGMENTS.fields]
+    )
 
 
 def term_stats_from_segments(segments: DataFrame, n_docs: int) -> DataFrame:

@@ -68,16 +68,3 @@ def tokenize(
     return occ.groupBy("docid", "term").agg(
         F.count("*").cast("int").alias("tf"), F.first("dl").alias("dl")
     )
-
-
-def tokenize_with_positions(
-    docs: DataFrame, analyzer: str = ANALYZER_SIMPLE, text_col: str = "content"
-) -> DataFrame:
-    """docs → (docid, term, tf, dl, positions array<int>) for fields whose
-    index_options include positions (elastic/index.go:115-119,188-191)."""
-    occ = explode_tokens(docs, analyzer, text_col, with_positions=True)
-    return occ.groupBy("docid", "term").agg(
-        F.count("*").cast("int").alias("tf"),
-        F.first("dl").alias("dl"),
-        F.sort_array(F.collect_list("pos")).alias("positions"),
-    )

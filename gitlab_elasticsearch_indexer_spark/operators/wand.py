@@ -8,7 +8,7 @@ on Spark for larger indexes or a ``doc_filter``, skipping at two
 granularities that ARE Spark-friendly:
 
 1. **Range-level skipping (distributed).**  Per docid_range,
-   ``bound(range) = Σ_t idf_t · max_block(max_tfn)`` is aggregated
+   ``bound(range) = Σ_t idf_t · max_block(tfn(max_tf, min_dl))`` is aggregated
    SPARK-SIDE from segment *metadata only* (a few bytes per block — no
    posting bytes read); the driver collects just the per-range aggregate —
    or, above ``super_threshold`` ranges, only per-SUPER-range maxima with
@@ -20,7 +20,8 @@ granularities that ARE Spark-friendly:
    Spark job over the pruned parquet partitions.
 
 2. **Block-level skipping (within a range, single-term queries, both
-   drivers).**  Blocks sorted by idf·max_tfn descending; once k local hits
+   drivers).**  Blocks sorted by idf·tfn(max_tf, min_dl) descending (the
+   bound ``_block_bound_tfn`` derives at the current avgdl); once k local hits
    exist and the next block's bound is below the local k-th score,
    remaining blocks are not decoded.  (Multi-term queries score the range's
    candidate blocks with one vectorized numpy accumulation — exact, and

@@ -377,8 +377,8 @@ def build_index(
         occ_src = occurrences_for(batch_docs)
         if with_offsets:
             # offsets builds source occurrences from the Python emitter
-            # (offsets_occurrences) — build_segments consumes the stream
-            # twice (term-dictionary pass + the exchange), which would run
+            # (offsets_occurrences) — build_segments' write scans the stream
+            # twice (term dictionary + the exchange), which would run
             # the per-token Python chain twice per corpus.  Stage it to a
             # transient parquet once: both passes become column-pruned
             # columnar scans (the same tokenize-once idea tokens_tmp applies

@@ -72,8 +72,10 @@ TOKENS = T.StructType(  # flat (docid, term, tf, dl) — input to posting build
 #              time (Spark analog of ES routing, elastic/index.go:90-92).
 # docid_range— docid >> log2(DOCS_PER_RANGE): explicit salt for head terms +
 #              the unit of query-time parallelism.
-# max_tfn    — block-max of tf/(tf+k1*(1-b+b*dl/avgdl)); multiplied by idf at
-#              query time this is the block's BM25 upper bound (block-max WAND).
+# max_tf, min_dl — block-max metadata: idf * tfn(max_tf, min_dl) at the
+#              query's avgdl is the block's BM25 upper bound (block-max WAND).
+# max_tfn    — block-max of tf/(tf+k1*(1-b+b*dl/avgdl)) at build-time avgdl;
+#              a build-time diagnostic, never read by queries.
 SEGMENTS = T.StructType(
     [
         T.StructField("term", T.StringType(), False),
@@ -92,8 +94,10 @@ SEGMENTS = T.StructType(
         # valid when incremental updates shift the collection's avgdl
         # (stored max_tfn would go stale).
         T.StructField("max_tfn", T.DoubleType(), False),   # build-time diagnostic
-        T.StructField("docids_enc", T.BinaryType(), False),  # delta+varint
-        T.StructField("tfs_enc", T.BinaryType(), False),     # varint
+        # tagged codec payloads (functions/codec.py): FOR bit-packing, or
+        # varint when a value needs more than 32 bits
+        T.StructField("docids_enc", T.BinaryType(), False),  # docid deltas
+        T.StructField("tfs_enc", T.BinaryType(), False),     # tfs
         T.StructField("positions_enc", T.BinaryType(), True),  # optional, per-field index_options
         T.StructField("offsets_enc", T.BinaryType(), True),    # optional, index_options=offsets
     ]

@@ -15,6 +15,8 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+from .config import N_TERM_BUCKETS
+
 
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executors regardless of launch mode —
@@ -66,6 +68,13 @@ def get_spark(
         # v2 committer: task-side file moves — the v1 driver-serial rename
         # phase measurably caps scaling efficiency on many-file writes
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+        # a segments table has up to N_TERM_BUCKETS bucket directories; above
+        # the default threshold (32) every read of it lists them in a
+        # one-task-per-directory Spark job — list them on the driver instead
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2 * N_TERM_BUCKETS),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -27,20 +27,6 @@ from pyspark.sql import types as T
 
 from ..schemas import PAGES
 
-# SQL fragment shared verbatim with the DuckDB oracle (tests + oracle_sql()):
-# synthesizes the base pages rows from the documents table.
-PAGES_FROM_DOCUMENTS_SQL = """
-SELECT
-  'https://example.com/' || source || '/doc' || CAST(doc_id AS VARCHAR) || '.html' AS url,
-  TIMESTAMP '2024-01-01 00:00:00' + INTERVAL (doc_id) SECOND AS warc_ts,
-  encode(text) AS html,
-  text,
-  lang,
-  doc_id
-FROM documents
-"""
-
-
 def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Base pages table derived from documents.parquet (plus doc_id passthrough
     used as the deterministic docid)."""

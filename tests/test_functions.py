@@ -957,3 +957,14 @@ class TestBpe:
             bpe._RANKS = bpe._load_packaged_merges()
             bpe._cache.clear()
         assert bpe.merges_fingerprint() == old_fp
+
+    def test_gpt2_merges_text_parses_verbatim(self):
+        """A published GPT-2 merges.txt (space-separated, no escaping): only
+        the leading #version header is skipped; a '# #' merge and a symbol
+        holding a backslash come through exactly as written."""
+        from gitlab_elasticsearch_indexer_spark.functions import bpe
+
+        text = "#version: 0.2\nĠ t\n# #\n\\\\ n\nĠt he\n"
+        assert bpe._parse_merges(text) == {
+            ("Ġ", "t"): 0, ("#", "#"): 1, ("\\\\", "n"): 2, ("Ġt", "he"): 3,
+        }

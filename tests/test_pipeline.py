@@ -249,7 +249,7 @@ class TestStreamingKernel:
         return pd_.DataFrame(cols)
 
     def _run(self, pdf, batch_rows, chunk_rows, monkeypatch, with_offsets=False):
-        import pandas as pd_
+        import pyarrow as pa
 
         from gitlab_elasticsearch_indexer_spark.operators import postings
 
@@ -258,11 +258,11 @@ class TestStreamingKernel:
             100.0, with_positions=True, with_offsets=with_offsets
         )
         batches = [
-            pdf.iloc[i : i + batch_rows].reset_index(drop=True)
+            pa.RecordBatch.from_pandas(pdf.iloc[i : i + batch_rows], preserve_index=False)
             for i in range(0, len(pdf), batch_rows)
         ]
         out = list(kernel(iter(batches)))
-        res = pd_.concat(out, ignore_index=True) if out else pd_.DataFrame()
+        res = pa.Table.from_batches(out).to_pandas()
         return res.sort_values(["tid", "docid_range", "block_idx"]).reset_index(
             drop=True
         )
@@ -285,6 +285,208 @@ class TestStreamingKernel:
             for col in ref.columns:
                 a, b = ref[col].to_numpy(), got[col].to_numpy()
                 assert (a == b).all(), (col, batch_rows, chunk_rows)
+
+
+class TestKernelByteIdentity:
+    """The chunk-vectorized kernel against a per-block reference built from
+    codec's single-block encoders: every block row, payload bytes included,
+    must be identical — indexes built by either stay interchangeable."""
+
+    @staticmethod
+    def _occurrences(seed: int):
+        """Sorted (tid, docid, dl, pos, start, end) rows: a head term with
+        more than BLOCK_SIZE postings in one range, terms over several
+        ranges, tf > 1, ascending positions within each posting."""
+        import numpy as np
+
+        from gitlab_elasticsearch_indexer_spark.config import BLOCK_SIZE, DOCS_PER_RANGE
+
+        rng = np.random.default_rng(seed)
+        dls: dict[int, int] = {}
+        rows = []
+        n_docs = [3 * BLOCK_SIZE, BLOCK_SIZE + 1, BLOCK_SIZE, 40, 7, 1]
+        for tid, nd in zip(rng.choice(2**40, len(n_docs), replace=False), n_docs):
+            hi = DOCS_PER_RANGE if nd > BLOCK_SIZE else 4 * DOCS_PER_RANGE
+            for docid in np.sort(rng.choice(hi, nd, replace=False)):
+                dl = dls.setdefault(int(docid), int(rng.integers(1, 5000)))
+                tf = int(rng.integers(1, 7))
+                for p in np.sort(rng.choice(dl + 10, tf, replace=False)):
+                    start = int(p) * 6 + int(rng.integers(0, 3))
+                    rows.append((int(tid) - 2**39, int(docid), dl, int(p), start,
+                                 start + int(rng.integers(1, 9))))
+        rows.sort()
+        return rows
+
+    @staticmethod
+    def _reference(rows, avgdl, with_positions, with_offsets):
+        import numpy as np
+
+        from gitlab_elasticsearch_indexer_spark.config import (
+            BLOCK_SIZE, BM25_B, BM25_K1, DOCS_PER_RANGE,
+        )
+        from gitlab_elasticsearch_indexer_spark.functions import codec
+
+        poss = np.array([r[3] for r in rows], dtype=np.int64)
+        starts = np.array([r[4] for r in rows], dtype=np.int64)
+        ends = np.array([r[5] for r in rows], dtype=np.int64)
+        postings = []  # (tid, docid, dl, first occurrence row, end row)
+        for i, r in enumerate(rows):
+            if postings and postings[-1][:2] == [r[0], r[1]]:
+                postings[-1][4] = i + 1
+            else:
+                postings.append([r[0], r[1], r[2], i, i + 1])
+        groups: dict = {}
+        for p in postings:
+            groups.setdefault((p[0], p[1] // DOCS_PER_RANGE), []).append(p)
+        out = []
+        for (tid, rng), grp in groups.items():
+            for blk_i, lo in enumerate(range(0, len(grp), BLOCK_SIZE)):
+                blk = grp[lo : lo + BLOCK_SIZE]
+                d = np.array([p[1] for p in blk], dtype=np.int64)
+                tf = np.array([p[4] - p[3] for p in blk], dtype=np.int64)
+                occ_s = np.array([p[3] for p in blk], dtype=np.int64)
+                occ_e = np.array([p[4] for p in blk], dtype=np.int64)
+                out.append({
+                    "tid": tid, "docid_range": rng, "block_idx": blk_i,
+                    "n_docs": len(blk), "first_docid": int(d[0]),
+                    "max_docid": int(d[-1]), "max_tf": int(tf.max()),
+                    "min_dl": min(p[2] for p in blk), "sum_tf": int(tf.sum()),
+                    "max_tfn": max(
+                        t / (t + BM25_K1 * (1.0 - BM25_B + BM25_B * (p[2] / avgdl)))
+                        for t, p in zip(tf.tolist(), blk)
+                    ),
+                    "docids_enc": codec.encode_docids(d, base=rng * DOCS_PER_RANGE),
+                    "tfs_enc": codec.encode_tfs(tf),
+                    "positions_enc": codec.encode_positions_block(poss, occ_s, occ_e)
+                    if with_positions else None,
+                    "offsets_enc": codec.encode_offsets_block(starts, ends, occ_s, occ_e)
+                    if with_offsets else None,
+                })
+        return out
+
+    @staticmethod
+    def _kernel(rows, avgdl, with_positions, with_offsets, batch_rows):
+        import pyarrow as pa
+
+        from gitlab_elasticsearch_indexer_spark.operators import postings
+
+        cols = {
+            "pd": pa.array([(r[1] << 20) | r[2] for r in rows], pa.int64()),
+            "tid": pa.array([r[0] for r in rows], pa.int64()),
+        }
+        if with_positions:
+            cols["pos"] = pa.array([r[3] for r in rows], pa.int32())
+        if with_offsets:
+            cols["start"] = pa.array([r[4] for r in rows], pa.int32())
+            cols["end"] = pa.array([r[5] for r in rows], pa.int32())
+        batch = pa.RecordBatch.from_pydict(cols)
+        kernel = postings.make_partition_kernel(avgdl, with_positions, with_offsets)
+        out = kernel(
+            iter(batch.slice(i, batch_rows) for i in range(0, len(rows), batch_rows))
+        )
+        return pa.Table.from_batches(list(out)).to_pylist()
+
+    @pytest.mark.parametrize("seed", [0, 1, 2])
+    @pytest.mark.parametrize(
+        "with_positions,with_offsets", [(False, False), (True, False), (True, True)]
+    )
+    def test_blocks_equal_per_block_reference(self, seed, with_positions, with_offsets):
+        from gitlab_elasticsearch_indexer_spark.config import BLOCK_SIZE
+
+        rows = self._occurrences(seed)
+        want = self._reference(rows, 123.4, with_positions, with_offsets)
+        assert max(b["block_idx"] for b in want) >= 2  # head group spans 3+ blocks
+        assert len({b["docid_range"] for b in want}) > 2
+        assert max(b["max_tf"] for b in want) > 1
+        assert any(b["n_docs"] == BLOCK_SIZE for b in want)
+        for batch_rows in (len(rows), 997):
+            got = self._kernel(rows, 123.4, with_positions, with_offsets, batch_rows)
+            key = lambda b: (b["tid"], b["docid_range"], b["block_idx"])  # noqa: E731
+            assert sorted(got, key=key) == sorted(want, key=key)
+
+    def test_unsorted_docids_raise(self):
+        rows = [(7, 5, 10, 0, 0, 1), (7, 3, 10, 0, 0, 1)]
+        with pytest.raises(ValueError, match="sorted ascending"):
+            self._kernel(rows, 10.0, False, False, len(rows))
+
+
+class TestTermDictionary:
+    """The term dictionary is folded into the segments write: a tid shared
+    by two terms fails that write, and nothing commits."""
+
+    def test_one_row_per_tid(self, spark):
+        from gitlab_elasticsearch_indexer_spark.operators.postings import term_dictionary
+
+        pairs = spark.createDataFrame(
+            [("a", 1), ("a", 1), ("b", 2)], "term string, tid long"
+        )
+        from gitlab_elasticsearch_indexer_spark.config import N_TERM_BUCKETS
+        from gitlab_elasticsearch_indexer_spark.functions.xxhash import term_bucket
+
+        got = sorted(tuple(r) for r in term_dictionary(pairs).collect())
+        assert got == [
+            (1, "a", term_bucket("a", N_TERM_BUCKETS)),
+            (2, "b", term_bucket("b", N_TERM_BUCKETS)),
+        ]
+
+    def test_shared_tid_raises(self, spark):
+        from gitlab_elasticsearch_indexer_spark.operators.postings import term_dictionary
+
+        pairs = spark.createDataFrame([("a", 1), ("b", 1)], "term string, tid long")
+        with pytest.raises(Exception, match="term-id collision"):
+            term_dictionary(pairs).collect()
+
+    def test_collision_fails_build_before_commit(self, spark, tmp_path, monkeypatch):
+        from gitlab_elasticsearch_indexer_spark.operators import postings
+
+        d = str(tmp_path / "idx")
+        pages = pages_from_documents(spark, SF_SMALL)
+        build_index(spark, pages, d, snapshot="s1")
+        real = postings.term_dictionary
+
+        def colliding(pairs):  # "spark" takes the tid of "data"
+            return real(pairs.withColumn(
+                "tid",
+                F.when(F.col("term") == "spark", F.xxhash64(F.lit("data")))
+                .otherwise(F.col("tid")),
+            ))
+
+        monkeypatch.setattr(postings, "term_dictionary", colliding)
+        with pytest.raises(Exception, match="term-id collision"):
+            build_index(spark, pages, d, snapshot="s2")
+        assert cat.current_snapshot(d) == "s1"
+
+
+class TestSegmentsListing:
+    def test_segments_read_launches_no_listing_job(self, spark, tmp_path):
+        """A segments table has more bucket directories than Spark's default
+        parallel-listing threshold (32); reading it must list them on the
+        driver, not in a job with a task per directory."""
+        from gitlab_elasticsearch_indexer_spark.config import N_TERM_BUCKETS
+
+        d = str(tmp_path / "idx")
+        # 20 distinct terms per doc, so every bucket holds some term
+        pages = pages_from_documents(spark, SF_SMALL).withColumn(
+            "text",
+            F.expr("concat_ws(' ', text, transform(sequence(0, 19), "
+                   "i -> concat('w', doc_id, 'x', i)))"),
+        ).withColumn("html", F.encode(F.col("text"), "UTF-8"))
+        build_index(spark, pages, d, snapshot="s1")
+        seg_dir = os.path.join(cat.snapshot_dir(d, "s1"), "segments")
+        assert sum(e.startswith("bucket=") for e in os.listdir(seg_dir)) > 32
+        sc = spark.sparkContext
+        sc.setJobGroup("segments-listing", "segments-listing")
+        try:
+            cat.read_table(spark, d, "segments")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        tasks = [
+            tracker.getStageInfo(s).numTasks
+            for j in tracker.getJobIdsForGroup("segments-listing")
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+        assert all(n < N_TERM_BUCKETS for n in tasks), tasks
 
 
 class TestCorpusPrep:
