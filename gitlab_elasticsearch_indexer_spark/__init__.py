@@ -22,4 +22,4 @@ Catalyst/Tungsten pick the physical plan; per-row logic lives exclusively in
 Arrow-vectorized pandas UDFs (no row-at-a-time Python anywhere).
 """
 
-__version__ = "0.4.0"  # r4: UAX#29 standard tokenizer, per-field analyzer versions
+__version__ = "0.5.0"  # segments drop the build-time block score; uax29c chains

@@ -68,7 +68,9 @@ _SIMPLE_RE = re.compile(r"[a-z0-9]+")
 #      trailing U+0027 geresh even at token end (WB7a — a single-letter
 #      abbreviation keeps its quote), and U+0022 between two Hebrew
 #      letters joins (WB7b/7c — gershayim acronyms).  Hebrew letters are
-#      AHLetter, so Hebrew-quote-Hebrew already joined via WB6/7.
+#      AHLetter, so Hebrew-quote-Hebrew already joined via WB6/7.  A
+#      geresh NOT followed by a Hebrew letter ends the token: `צ'1` is
+#      [צ', 1] and `צ'_x` is [צ', _x] (nothing after WB7a joins it).
 #   5. Regional indicators (WB15/16, added r5): RI symbols pair from the
 #      left (greedy two-at-a-time), so one emoji flag is ONE token and two
 #      flags are two tokens — never a break inside a pair.  Lucene's
@@ -98,8 +100,7 @@ _UAX29_RE = re.compile(
     rf"|(?<={_LET}){_MIDLET}(?={_LET})"
     rf"|(?<=\d){_MIDNUM}(?=\d)"
     rf'|(?<=[{_HEB}])"(?=[{_HEB}])'  # WB7b/7c gershayim
-    rf"|(?<=[{_HEB}])'"              # WB7a geresh
-    rf")*",
+    rf")*(?:(?<=[{_HEB}])')?",       # WB7a geresh: last char, then a break
     re.UNICODE,
 )
 _WS_RE = re.compile(r"\S+")
@@ -328,10 +329,11 @@ ANALYZER_VERSIONS: dict[str, str] = {
     # boundaries (contractions, MidNum, ExtendNumLet, CJK); r5 added WB7a-c
     # (Hebrew geresh/gershayim) and WB15/16 (regional-indicator pairs) —
     # token output changed again, so every standard-tokenizer chain bumped
-    # (the "b" suffix).
-    "default": f"uax29b-lower-kstem-{_kstem_lexicon_fingerprint()}",
-    "minimal_english": "uax29b-lower-minimal-3",
-    "standard": "uax29b-lower-2",
+    # (the "b" suffix); a geresh before a digit or "_" stopped joining
+    # them (WB7a, the "c" suffix).
+    "default": f"uax29c-lower-kstem-{_kstem_lexicon_fingerprint()}",
+    "minimal_english": "uax29c-lower-minimal-3",
+    "standard": "uax29c-lower-2",
     "simple": "lower-alnum-1",
     "code": "ws-wdg-fold-edge2.40-2",  # v2: Lucene fold table beyond NFKD
     "path": "pathrev-fold-2",          # v2: Lucene fold table beyond NFKD
@@ -346,7 +348,7 @@ def refresh_analyzer_versions() -> None:
     output differs (exactly the mismatch it exists to catch).  load_lexicon
     calls this; anything else that mutates analyzer behavior at runtime
     must too."""
-    ANALYZER_VERSIONS["default"] = f"uax29b-lower-kstem-{_kstem_lexicon_fingerprint()}"
+    ANALYZER_VERSIONS["default"] = f"uax29c-lower-kstem-{_kstem_lexicon_fingerprint()}"
 
 
 def tokenize_series(texts: pd.Series, analyzer: str = "default") -> pd.Series:

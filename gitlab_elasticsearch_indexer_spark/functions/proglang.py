@@ -239,10 +239,11 @@ _CLASSIFY_MIN_SCORE = 4  # below this, evidence is noise → "Text"
 # keywords at line starts (def/end/SELECT/...).  Keyword evidence only
 # counts when codechars + line-start-keyword-lines >= 2, which admits
 # minimal-punctuation code (`def foo\n  puts 1\nend` = 2 keyword lines;
-# one-line SQL with `=` = 1+1) while prose sentences score 0-1.  Multi-char
-# MARKERS (e.g. "<?php", "std::") are code-shaped by construction and
-# always count.
-_CODE_CHARS = set(";{}=<>$@%&|\\*()[]")
+# one-line SQL with `=` = 1+1) while prose sentences score 0-1.  Only
+# strong code characters count: prose uses ( ) % & too ("(in my sub)").
+# Multi-char MARKERS (e.g. "<?php", "std::") are code-shaped by
+# construction and always count.
+_CODE_CHARS = set(";{}=<>$@|\\*[]")
 _ALL_KEYWORDS: set[str] = set()
 for _kw in _KEYWORD_WEIGHTS.values():
     _ALL_KEYWORDS.update(_kw)

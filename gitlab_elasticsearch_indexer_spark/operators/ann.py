@@ -1,9 +1,12 @@
 """Similarity search over an embedding column (array<float>).
 
 Brute-force cosine is the exact baseline (one pass, no shuffle beyond the
-final top-k); the LSH-bucketed variant is the scale path: candidates are
-restricted to the query's hyperplane-sign bucket, so a 10^12-row corpus
-only scans one bucket's partition (bucket is a join/partition key).
+final top-k).  The scale paths restrict candidates: random-projection
+sign-LSH (``rp_bucket_topk``) to the query's hyperplane-sign bucket, so a
+10^12-row corpus only scans one bucket's partition (bucket is a
+join/partition key), and IVF (``ivf_write``/``ivf_search``) to the
+KMeans cells nearest the query.  ``sign_bucket`` (axis-sign LSH) buckets
+the embedding near-dup pairs.
 
 All arithmetic is promoted to float64 BEFORE multiplication so the DuckDB
 oracle (same promotion) reproduces results bit-for-bit up to summation
@@ -100,8 +103,9 @@ def rp_bucket_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via random-projection sign-LSH: exact cosine within
-    the query's bucket.  Same plan shape as lsh_bucket_topk but with a
-    proper Gaussian hash family (recall on real embeddings)."""
+    the query's bucket, a broadcast single-row join on the bucket key.  At
+    scale the table is written partitioned by bucket → a partition-pruned
+    scan of ~n/2^n_planes rows."""
     planes = random_planes(dim, n_planes, seed)
     bucketed = emb.withColumn("bucket", rp_bucket(F.col(vec_col), planes))
     q = bucketed.filter(F.col(id_col) == query_vec_id).select(
@@ -114,43 +118,6 @@ def rp_bucket_topk(
         .select(F.col(id_col).cast("long").alias("vec_id"), sim)
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
-    )
-
-
-def lsh_bucket_topk(
-    emb: DataFrame, query_vec_id: int, k: int, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Approximate top-k: exact cosine within the query's sign bucket.
-    At scale the table is written partitioned by bucket → partition-pruned
-    scan of ~n/2^dims rows."""
-    bucketed = emb.withColumn("bucket", sign_bucket(F.col(vec_col)))
-    q = bucketed.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("qvec"), F.col("bucket").alias("qbucket")
-    )
-    sim = F.round(cosine_col(F.col(vec_col), F.col("qvec")), 4).alias("cosine")
-    return (
-        bucketed.join(F.broadcast(q), F.col("bucket") == F.col("qbucket"))
-        .filter(F.col(id_col) != query_vec_id)
-        .select(F.col(id_col).cast("long").alias("vec_id"), sim)
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def label_centroids(
-    emb: DataFrame, dims: int, label_col: str = "label", vec_col: str = "embedding"
-) -> DataFrame:
-    """IVF-style coarse quantizer training step: per-label centroids for the
-    first ``dims`` coordinates (posexplode + avg — partial aggregation
-    map-side, one shuffle on (label, dim))."""
-    return (
-        emb.select(
-            F.col(label_col).cast("int").alias("label"),
-            F.posexplode(F.slice(F.col(vec_col), 1, dims)).alias("dim0", "v"),
-        )
-        .select("label", (F.col("dim0") + 1).cast("int").alias("dim"), F.col("v").cast("double").alias("v"))
-        .groupBy("label", "dim")
-        .agg(F.round(F.avg("v"), 4).alias("centroid"))
     )
 
 

@@ -15,16 +15,13 @@ Operators:
 - lsh_bands         — full b×r banding: (docid, band_id, band_key) rows,
                       band_key = hash of r consecutive signature components.
                       Candidates = docs sharing any (band_id, band_key).
-- lsh_band_buckets  — band-0 bucket histogram (back-compat oracle shape)
 - lsh_candidate_pairs — distinct candidate pairs across ALL bands (the real
                       banding join), optionally capping pathological buckets
-- jaccard_pairs     — exact n-gram Jaccard verification over LSH candidates.
-                      Mega-clusters of identical docs make a bucket
-                      quadratic — collapse exact dups first (exact_dups) or
-                      pass ``max_bucket``.
-- lsh_verified_pairs — banding candidates → exact Jaccard verify → optional
-                      threshold: the composed production near-dup pipeline
-- simhash           — 16-bit SimHash (compact oracle shape)
+- lsh_verified_pairs — banding candidates → exact token-set Jaccard verify
+                      → optional threshold: the composed production near-dup
+                      pipeline.  Mega-clusters of identical docs make a
+                      bucket quadratic — collapse exact dups first
+                      (exact_dups) or pass ``max_bucket``.
 - simhash_hex       — 64-bit SimHash as a 16-hex-digit string (production
                       shape; hex avoids 64-bit sign issues in both Spark and
                       the SQL oracle)
@@ -38,7 +35,6 @@ from pyspark.sql import functions as F
 from .tokenize import SIMPLE_SPLIT_RE
 
 N_MINHASHES = 4
-SIMHASH_BITS = 16
 
 
 def _toks(text: Column) -> Column:
@@ -154,55 +150,6 @@ def lsh_candidate_pairs(
     )
 
 
-def lsh_band_buckets(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", rows_per_band: int = 2
-) -> DataFrame:
-    """(band_key, n_docs) — bucket histogram for band 0 (mh0..mh{r-1}).
-    Near-duplicate candidates are exactly the docs sharing a band_key.
-    (Compact oracle shape; the production path is lsh_bands /
-    lsh_candidate_pairs.)"""
-    sig = minhash_signatures(df, id_col, text_col)
-    band = F.concat_ws("_", *[F.col(f"mh{i}") for i in range(rows_per_band)])
-    return (
-        sig.select("docid", band.alias("band_key"))
-        .groupBy("band_key")
-        .agg(F.count("*").cast("long").alias("n_docs"))
-    )
-
-
-def jaccard_pairs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Exact token-set Jaccard for candidate pairs sharing minhash mh0.
-
-    The self-join key is mh0 (an LSH bucket) — at scale this is the standard
-    verify step after banding: the shuffle joins |bucket|-sized groups, not
-    the corpus."""
-    sig = minhash_signatures(df, id_col, text_col)
-    toks = df.select(
-        F.col(id_col).cast("long").alias("docid"),
-        F.array_distinct(_toks(F.col(text_col))).alias("ts"),
-    )
-    side = sig.select("docid", "mh0").join(toks, "docid")
-    a = side.select(
-        F.col("docid").alias("a_docid"), F.col("mh0"), F.col("ts").alias("a_ts")
-    )
-    b = side.select(
-        F.col("docid").alias("b_docid"), F.col("mh0"), F.col("ts").alias("b_ts")
-    )
-    inter = F.size(F.array_intersect("a_ts", "b_ts"))
-    union = F.size("a_ts") + F.size("b_ts") - inter
-    return (
-        a.join(b, "mh0")
-        .filter(F.col("a_docid") < F.col("b_docid"))
-        .select(
-            "a_docid",
-            "b_docid",
-            F.round(inter.cast("double") / union.cast("double"), 4).alias("jaccard"),
-        )
-    )
-
-
 def lsh_verified_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -284,26 +231,3 @@ def simhash_hex(
         for c in range(n_digits)
     ]
     return agg.select("docid", F.concat(*digits).alias("simhash_hex"))
-
-
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(docid, simhash) — 16-bit SimHash: bit j set iff the ±1 vote sum of
-    bit j of md5(token) over DISTINCT tokens is > 0."""
-    tok = (
-        df.select(F.col(id_col).cast("long").alias("docid"), F.explode(_toks(F.col(text_col))).alias("term"))
-        .distinct()
-        .withColumn("h", _md5(F.col("term")))
-    )
-    votes = [
-        F.sum(
-            F.when(F.conv(F.substring("h", j + 1, 1), 16, 10).cast("int") % 2 == 1, 1)
-            .otherwise(-1)
-        ).alias(f"v{j}")
-        for j in range(SIMHASH_BITS)
-    ]
-    agg = tok.groupBy("docid").agg(*votes)
-    sim = None
-    for j in range(SIMHASH_BITS):
-        bit = F.when(F.col(f"v{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        sim = bit if sim is None else sim + bit
-    return agg.select("docid", sim.cast("long").alias("simhash"))

@@ -36,7 +36,7 @@ def build_docs(
     detect_lang: bool = False,
     with_prog_lang: bool = False,
 ) -> DataFrame:
-    """pages (+ deterministic ``doc_id``) → DOCS (without ``dl``, which is
+    """pages (+ deterministic ``doc_id``) → docs (without ``dl``, which is
     joined in after tokenization).
 
     When the golden ``text`` column is present, extraction parity demands the

@@ -65,7 +65,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..config import BLOCK_SIZE, BM25_B, BM25_K1, DOCS_PER_RANGE, N_TERM_BUCKETS
+from ..config import BLOCK_SIZE, DOCS_PER_RANGE, N_TERM_BUCKETS
 from ..functions import codec
 from ..schemas import SEGMENTS
 
@@ -129,7 +129,7 @@ def _binary_slices(
     )
 
 
-def _encode_blocks(cols: dict[str, np.ndarray], avgdl: float) -> Iterator[pa.RecordBatch]:
+def _encode_blocks(cols: dict[str, np.ndarray]) -> Iterator[pa.RecordBatch]:
     """Complete (tid, docid_range) groups of occurrence rows sorted by
     (tid, pd [, pos]) → block rows.  Posting, group and block boundaries,
     block metadata and every payload come from whole-chunk numpy passes;
@@ -165,9 +165,6 @@ def _encode_blocks(cols: dict[str, np.ndarray], avgdl: float) -> Iterator[pa.Rec
     if deltas.min() < 0:
         raise ValueError("docids must be sorted ascending and >= base")
 
-    tf_f = tf.astype(np.float64)
-    dl_f = p_dls.astype(np.float64)
-    tfn = tf_f / (tf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * (dl_f / avgdl)))
     payloads = {
         "docids_enc": codec.for_blocks(deltas, b_start),
         "tfs_enc": codec.for_blocks(tf, b_start),
@@ -210,7 +207,6 @@ def _encode_blocks(cols: dict[str, np.ndarray], avgdl: float) -> Iterator[pa.Rec
         np.maximum.reduceat(tf, b_start).astype(np.int32),
         np.minimum.reduceat(p_dls, b_start).astype(np.int32),
         np.add.reduceat(tf, b_start),
-        np.maximum.reduceat(tfn, b_start),
     ]
     for lo in range(0, n_b, _OUT_BATCH_ROWS):
         hi = min(lo + _OUT_BATCH_ROWS, n_b)
@@ -225,9 +221,7 @@ def _encode_blocks(cols: dict[str, np.ndarray], avgdl: float) -> Iterator[pa.Rec
         )
 
 
-def make_partition_kernel(
-    avgdl: float, with_positions: bool = False, with_offsets: bool = False
-):
+def make_partition_kernel(with_positions: bool = False, with_offsets: bool = False):
     """mapInArrow kernel over a partition sorted by (tid, pd [, pos]):
     run-length tf + block encoding, int64 numpy end to end.
 
@@ -265,7 +259,7 @@ def make_partition_kernel(
             prev = np.flatnonzero((tids != tids[-1]) | (ranges != ranges[-1]))
             cut = int(prev[-1]) + 1 if prev.size else 0
             if cut:
-                yield from _encode_blocks({c: v[:cut] for c, v in cols.items()}, avgdl)
+                yield from _encode_blocks({c: v[:cut] for c, v in cols.items()})
                 # copy so the carried tail doesn't pin the whole chunk
                 cols = {c: v[cut:].copy() for c, v in cols.items()}
             pend = [cols]
@@ -277,7 +271,7 @@ def make_partition_kernel(
                 else _KERNEL_CHUNK_ROWS
             )
         if pend:
-            yield from _encode_blocks(concat(pend), avgdl)
+            yield from _encode_blocks(concat(pend))
 
     return build_blocks
 
@@ -305,8 +299,9 @@ def occurrence_stream(
     tools/explain_audit.py — keep them one code path).
 
     ``est_occurrences`` (when the caller knows it — build_index computes the
-    exact token total for avgdl anyway) sizes the exchange so per-task sorts
-    fit in memory; without it the session's shuffle-partition default rules.
+    exact token total for its catalog anyway) sizes the exchange so per-task
+    sorts fit in memory; without it the session's shuffle-partition default
+    rules.
     """
     cols = [
         pack_docid_dl(F.col("docid"), F.col("dl")).alias("pd"),
@@ -369,7 +364,6 @@ def term_dictionary(pairs: DataFrame) -> DataFrame:
 
 def build_segments(
     occurrences: DataFrame,
-    avgdl: float,
     with_positions: bool = False,
     with_offsets: bool = False,
     est_occurrences: int | None = None,
@@ -390,7 +384,7 @@ def build_segments(
         occurrences, with_positions, with_offsets, est_occurrences
     )
     blocks = part.mapInArrow(
-        make_partition_kernel(avgdl, with_positions, with_offsets),
+        make_partition_kernel(with_positions, with_offsets),
         schema=_KERNEL_SCHEMA,
     )
     # term strings reattach at block granularity (blocks ≪ postings); the

@@ -63,7 +63,7 @@ def explode_tokens(
 def tokenize(
     docs: DataFrame, analyzer: str = ANALYZER_SIMPLE, text_col: str = "content"
 ) -> DataFrame:
-    """docs → TOKENS (docid, term, tf, dl)."""
+    """docs → (docid, term, tf, dl) rows."""
     occ = explode_tokens(docs, analyzer, text_col)
     return occ.groupBy("docid", "term").agg(
         F.count("*").cast("int").alias("tf"), F.first("dl").alias("dl")

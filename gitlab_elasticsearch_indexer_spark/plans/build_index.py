@@ -240,7 +240,7 @@ def build_index(
     # keeps dl in DL_BITS bits, exact for ≤1-token-per-char chains under the
     # 1 MiB cap, but token-EXPANDING chains (ngram ~2×/char, code
     # edge-ngrams up to ~39×/word) can exceed it; pack_docid_dl then clamps
-    # and the segments' min_dl/max_tfn block stats are computed from the
+    # and the segments' min_dl block stats are computed from the
     # understated dl (bounds stay VALID — looser — and exact scores always
     # use docs.dl).  Surface it instead of clamping silently.
     from ..operators.postings import _DL_MASK
@@ -257,7 +257,7 @@ def build_index(
             warnings.warn(
                 f"analyzer {an!r} produced a document of {mdl} tokens "
                 f"(> 2^{_DL_MASK.bit_length()} - 1); packed dl saturates, so "
-                "block min_dl/max_tfn stats are conservative for such docs "
+                "block min_dl stats are conservative for such docs "
                 "(scores stay exact via docs.dl)"
             )
     field_meta = {
@@ -386,7 +386,7 @@ def build_index(
             occ_src.write.mode("overwrite").parquet(f"{sd}/occ_tmp")
             occ_src = spark.read.parquet(f"{sd}/occ_tmp")
         segments = build_segments(
-            occ_src, avgdl=avgdl,
+            occ_src,
             with_positions=with_positions, with_offsets=with_offsets,
             est_occurrences=batch_occ.get(i, est_occ_per_batch),
         )

@@ -139,31 +139,18 @@ def _index_for(
         + ("" if source == "base" else f"_{source}")
     )
     index_dir = os.path.join(_CACHE_ROOT, tag)
-    need_build = True
     try:
         # left by a previous process run; snapshots are immutable — but only
-        # reusable if every analyzed chain's version still matches current
-        # code (an analyzer change, e.g. r5's uax29->uax29b, would otherwise
-        # poison the cache: Searcher refuses version-mismatched indexes, so
-        # a stale hit turns every entry into a hard error instead of a
-        # rebuild)
-        from ..functions.analysis import ANALYZER_VERSIONS
-
-        _c = cat.read_catalog(index_dir)
-        _checks = [(_c.analyzer, getattr(_c, "analyzer_version", None))]
-        for _fld, _meta in (_c.fields or {}).items():
-            _checks.append((_meta["analyzer"], _meta.get("analyzer_version")))
-        need_build = any(
-            stored is not None
-            and ANALYZER_VERSIONS.get(an) is not None
-            and stored != ANALYZER_VERSIONS[an]
-            for an, stored in _checks
-        )
-        if need_build:
-            shutil.rmtree(index_dir, ignore_errors=True)
-    except Exception:
+        # reusable if every analyzed chain's version is known and matches
+        # current code (an analyzer change, e.g. r5's uax29->uax29b, would
+        # otherwise poison the cache: Searcher refuses version-mismatched
+        # indexes, so a stale hit turns every entry into a hard error
+        # instead of a rebuild)
+        need_build = bool(cat.read_catalog(index_dir).analyzer_mismatches())
+    except Exception:  # no index yet, or a partial/unreadable one
         need_build = True
     if need_build:
+        shutil.rmtree(index_dir, ignore_errors=True)
         if source == "pluralized":
             from ..sources.pages import pages_pluralized
 
@@ -408,37 +395,21 @@ ORDER BY docid
 
 
 # The driver's correctness harness checks at most ~50 registry entries (r2
-# recorded exactly the first 50 of 56).  Entries in DEMOTED are redundant
-# compact-shape twins of a stronger entry that IS driver-checked; they stay
+# recorded exactly the first 50 of 56).  Entries in DEMOTED exercise a live
+# operator that a stronger, driver-checked entry also covers; they stay
 # registered (pytest parity still runs them via extra_queries()) but are
 # excluded from the driver-facing queries()/oracle_sql() so every distinct
 # capability fits inside the harness cap:
 #   doc_dates         — P6 date format, also driver-green via meta_docs
-#   dedup_lsh_bands   — banding histogram; dedup_lsh_pairs/_verified
-#                       exercise the full b×r banding join
-#   dedup_simhash     — 16-bit compat; dedup_simhash64 is the production one
-#   ann_lsh_topk      — sign-LSH; ann_lsh_rp_topk is the seeded-plane variant
-#   ann_centroids     — kmeans centroid shape; ann_ivf_topk covers the path
-#   events_windowed / events_sessionize — batch twins of the driver-green
-#                       stream_windowed / stream_sessionize entries
 #   dedup_minhash_sig — signature table; dedup_lsh_pairs/_verified consume
 #                       the same signatures end-to-end
-#   dedup_jaccard_pairs — exact-Jaccard kernel; dedup_lsh_verified runs the
-#                       identical kernel over the LSH candidate set
 #   path_tokens       — A3 token stream; ft_field_path_search drives the
 #                       path analyzer through a full build+search
 #   edge_ngram_tokens — A5 token stream; ft_field_code_search drives the
 #                       code chain (edge_ngram included) end-to-end
 DEMOTED = {
     "doc_dates",
-    "dedup_lsh_bands",
-    "dedup_simhash",
-    "ann_lsh_topk",
-    "ann_centroids",
-    "events_windowed",
-    "events_sessionize",
     "dedup_minhash_sig",
-    "dedup_jaccard_pairs",
     "path_tokens",
     "edge_ngram_tokens",
     # structurally un-oracle-able (KStem ∉ SQL): rows-only forever as a
@@ -818,23 +789,6 @@ SELECT CAST(doc_id AS BIGINT) AS docid, mh0, mh1, mh2, mh3 FROM sig
 )
 
 
-def _dedup_lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import lsh_band_buckets
-
-    return lsh_band_buckets(_documents(spark, sf_dir))
-
-
-register(
-    "dedup_lsh_bands",
-    _dedup_lsh_bands,
-    f"""
-WITH {_SHINGLE_SQL}, {_MINHASH_SQL}
-SELECT mh0 || '_' || mh1 AS band_key, CAST(count(*) AS BIGINT) AS n_docs
-FROM sig GROUP BY band_key
-""",
-)
-
-
 # --- dedup_lsh_pairs: the PRODUCTION b×r banding candidate join, at
 # SQL-expressible parameters (2 bands × 2 rows over the k=4 signature) ----
 def _dedup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -866,34 +820,9 @@ FROM bands a JOIN bands b
 )
 
 
-def _dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import jaccard_pairs
-
-    return jaccard_pairs(_documents(spark, sf_dir))
-
-
-register(
-    "dedup_jaccard_pairs",
-    _dedup_jaccard_pairs,
-    f"""
-WITH {_SHINGLE_SQL}, {_MINHASH_SQL},
-tsets AS (
-  SELECT doc_id, list_distinct(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS ts
-  FROM documents
-),
-side AS (SELECT sig.doc_id, mh0, ts FROM sig JOIN tsets ON sig.doc_id = tsets.doc_id)
-SELECT CAST(a.doc_id AS BIGINT) AS a_docid, CAST(b.doc_id AS BIGINT) AS b_docid,
-       round(CAST(len(list_filter(a.ts, x -> list_contains(b.ts, x))) AS DOUBLE)
-             / (len(a.ts) + len(b.ts) - len(list_filter(a.ts, x -> list_contains(b.ts, x)))), 4) AS jaccard
-FROM side a JOIN side b ON a.mh0 = b.mh0 AND a.doc_id < b.doc_id
-""",
-)
-
-
 # --- dedup_lsh_verified: the composed PRODUCTION near-dup path — banding
 # candidate pairs (all bands, bucket cap) → exact Jaccard over exactly those
-# pairs.  Verifies banding + verify end-to-end against one oracle; the
-# mh0-bucket jaccard_pairs entry is kept as the compat shape. -------------
+# pairs.  Verifies banding + verify end-to-end against one oracle. --------
 def _dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import lsh_verified_pairs
 
@@ -937,35 +866,6 @@ SELECT CAST(a_id AS BIGINT) AS a_docid, CAST(b_id AS BIGINT) AS b_docid,
              / (len(ta.ts) + len(tb.ts) - len(list_filter(ta.ts, x -> list_contains(tb.ts, x)))), 4) AS jaccard
 FROM pairs JOIN tsets ta ON pairs.a_id = ta.doc_id
            JOIN tsets tb ON pairs.b_id = tb.doc_id
-""",
-)
-
-
-def _dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import simhash
-
-    return simhash(_documents(spark, sf_dir))
-
-
-_SIMHASH_VOTES = ", ".join(
-    f"sum(CASE WHEN (('0x' || substring(md5(term), {j + 1}, 1))::INT & 1) = 1 THEN 1 ELSE -1 END) AS v{j}"
-    for j in range(16)
-)
-_SIMHASH_SUM = " + ".join(
-    f"CASE WHEN v{j} > 0 THEN {1 << j} ELSE 0 END" for j in range(16)
-)
-
-register(
-    "dedup_simhash",
-    _dedup_simhash,
-    f"""
-WITH toks AS (
-  SELECT DISTINCT doc_id, term FROM (
-    SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS term FROM documents
-  ) WHERE term <> ''
-),
-votes AS (SELECT doc_id, {_SIMHASH_VOTES} FROM toks GROUP BY doc_id)
-SELECT CAST(doc_id AS BIGINT) AS docid, CAST({_SIMHASH_SUM} AS BIGINT) AS simhash FROM votes
 """,
 )
 
@@ -1045,30 +945,6 @@ ORDER BY cosine DESC, vec_id ASC LIMIT 10
 )
 
 
-_BUCKET_SQL = " || ".join(
-    f"(CASE WHEN embedding[{i + 1}] >= 0 THEN '1' ELSE '0' END)" for i in range(8)
-)
-
-
-def _ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.ann import lsh_bucket_topk
-
-    return lsh_bucket_topk(_embeddings(spark, sf_dir), query_vec_id=0, k=5)
-
-
-register(
-    "ann_lsh_topk",
-    _ann_lsh,
-    f"""
-WITH b AS (SELECT vec_id, embedding, {_BUCKET_SQL} AS bucket FROM embeddings)
-SELECT CAST(e.vec_id AS BIGINT) AS vec_id, {_COS_SQL} AS cosine
-FROM b e JOIN (SELECT embedding, bucket FROM b WHERE vec_id = 0) q ON e.bucket = q.bucket
-WHERE e.vec_id <> 0
-ORDER BY cosine DESC, vec_id ASC LIMIT 5
-""",
-)
-
-
 # --- ann_lsh_rp_topk: seeded random-projection sign-LSH (the production
 # hash family — axis-sign buckets have poor recall on real embeddings).
 # 6 planes → the probe bucket holds ~15 of sf0.01's 500 vectors, so the
@@ -1111,24 +987,6 @@ SELECT CAST(e.vec_id AS BIGINT) AS vec_id, {_COS_SQL} AS cosine
 FROM b e JOIN (SELECT embedding, bucket FROM b WHERE vec_id = 0) q ON e.bucket = q.bucket
 WHERE e.vec_id <> 0
 ORDER BY cosine DESC, vec_id ASC LIMIT 10
-""",
-)
-
-
-def _ann_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.ann import label_centroids
-
-    return label_centroids(_embeddings(spark, sf_dir), dims=8)
-
-
-register(
-    "ann_centroids",
-    _ann_centroids,
-    """
-SELECT CAST(label AS INT) AS label, CAST(i AS INT) AS dim,
-       round(avg(CAST(embedding[i] AS DOUBLE)), 4) AS centroid
-FROM embeddings, unnest(generate_series(1, 8)) AS t(i)
-GROUP BY label, i
 """,
 )
 
@@ -1265,69 +1123,6 @@ FROM (SELECT doc_id, lower(text) AS lt, text FROM documents)
 
 
 # ===========================================================================
-# Events entries (windowed agg + sessionization — streaming-shaped batch)
-# ===========================================================================
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
-def _events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    return (
-        ev.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-        )
-        .agg(F.count("*").cast("long").alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
-    )
-
-
-register(
-    "events_windowed",
-    _events_windowed,
-    """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-       event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       round(sum(value), 4) AS sum_value
-FROM events GROUP BY 1, 2
-""",
-)
-
-
-def _events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    ev = _events(spark, sf_dir)
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    flagged = ev.withColumn(
-        "new_sess", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    )
-    return flagged.groupBy("user_id").agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.sum("new_sess").cast("long").alias("n_sessions"),
-    )
-
-
-register(
-    "events_sessionize",
-    _events_sessionize,
-    """
-WITH g AS (
-  SELECT user_id,
-         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                OR date_diff('second', lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id), ts) > 1800
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-)
-SELECT user_id, CAST(count(*) AS BIGINT) AS n_events, CAST(sum(new_sess) AS BIGINT) AS n_sessions
-FROM g GROUP BY user_id
-""",
-)
-
-
-# ===========================================================================
 # Parent-child rollup (Q6 denormalized join analog)
 # ===========================================================================
 def _parent_child_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1425,8 +1220,8 @@ def _stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_windowed_batch_equivalent(spark, f"{sf_dir}/events.parquet")
 
 
-# the streaming windowed agg is the batch events_windowed computed through
-# Structured Streaming — same result table, same oracle
+# hourly (event_type) counts and value sums over events.parquet, computed
+# through Structured Streaming
 register(
     "stream_windowed",
     _stream_windowed,
@@ -1442,8 +1237,8 @@ FROM events GROUP BY 1, 2
 
 def _stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState): per-user
-    sessionization with carried state — same result set as the batch
-    events_sessionize, same oracle."""
+    sessionization (a gap over 30 minutes starts a new session) with
+    carried state."""
     from ..streaming.sessionize import run_sessionize_batch_equivalent
 
     return run_sessionize_batch_equivalent(spark, f"{sf_dir}/events.parquet")
@@ -1717,6 +1512,12 @@ def _dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("cosine") >= 0.95)
     )
+
+
+# sign_bucket's SQL twin: the sign bits of the first 8 components
+_BUCKET_SQL = " || ".join(
+    f"(CASE WHEN embedding[{i + 1}] >= 0 THEN '1' ELSE '0' END)" for i in range(8)
+)
 
 
 _COS_AB_SQL = """

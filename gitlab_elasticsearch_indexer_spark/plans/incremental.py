@@ -85,27 +85,21 @@ def apply_delta(
     # the merged index silently mixes two analyzers — detected only later,
     # at search time, after the damage is committed.  Refuse up front (the
     # search-time guard is the backstop, not the gate).
-    from ..functions.analysis import ANALYZER_VERSIONS
-
-    _pairs = [(old.analyzer, old.analyzer_version)] + [
-        (m["analyzer"], m.get("analyzer_version")) for m in fields_meta.values()
-    ]
-    for _an, _stored in _pairs:
-        _current = ANALYZER_VERSIONS.get(_an)
-        if _stored is None or _current is None or _stored == _current:
+    for an, stored, current in old.analyzer_mismatches():
+        if stored is None:  # built before versions were recorded
             continue
-        _msg = (
+        msg = (
             f"apply_delta would mix analyzers: index {index_dir!r} snapshot "
-            f"{old.snapshot!r} was built with {_an!r} version {_stored!r}, "
-            f"but this code implements {_current!r}.  Rebuild the index "
+            f"{old.snapshot!r} was built with {an!r} version {stored!r}, "
+            f"but this code implements {current!r}.  Rebuild the index "
             "instead, or pass allow_analyzer_mismatch=True to force."
         )
         if allow_analyzer_mismatch:
             import warnings
 
-            warnings.warn(_msg)
+            warnings.warn(msg)
         else:
-            raise ValueError(_msg)
+            raise ValueError(msg)
 
     removals = delta.filter(F.col("op").isin("DELETED", "RENAMED")).select(
         F.coalesce(F.col("old_url"), F.col("url")).alias("url")
@@ -207,7 +201,7 @@ def apply_delta(
         with_offsets=old.with_offsets,
     )
     seg_new = build_segments(
-        rebuild_occ, avgdl=avgdl, with_positions=old.with_positions,
+        rebuild_occ, with_positions=old.with_positions,
         with_offsets=old.with_offsets,
     )
     if materialize:

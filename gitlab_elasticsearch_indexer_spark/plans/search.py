@@ -73,19 +73,11 @@ class Searcher:
         from the current code's: query terms would be stemmed/tokenized
         differently than the stored postings — silent wrong results (the
         catalog used to record only the analyzer NAME, which stayed
-        'default' across the r1→r2 EnglishMinimalStemmer→KStem change)."""
-        from ..functions.analysis import ANALYZER_VERSIONS
-
-        # every analyzed chain must match: the content field's AND each
-        # extra field's (path/code chains are analyzed at query time too —
-        # a fold-table change in the code chain with an unchanged default
-        # chain is exactly the silent mismatch this guard exists to catch)
-        checks = [(self.catalog.analyzer, getattr(self.catalog, "analyzer_version", None))]
-        for fld, meta in (self.catalog.fields or {}).items():
-            checks.append((meta["analyzer"], meta.get("analyzer_version")))
-        for analyzer, stored in checks:
-            current = ANALYZER_VERSIONS.get(analyzer)
-            if stored is None or current is None or stored == current:
+        'default' across the r1→r2 EnglishMinimalStemmer→KStem change).
+        Every analyzed chain is checked: extra fields are analyzed at query
+        time too."""
+        for analyzer, stored, current in self.catalog.analyzer_mismatches():
+            if stored is None:  # built before versions were recorded
                 continue
             msg = (
                 f"index {self.index_dir!r} was built with analyzer "

@@ -13,9 +13,9 @@ Layout:
     <index_dir>/
       current                 — file holding the active snapshot name
       <snapshot>/catalog.json — {n_docs, avgdl, analyzer, ...}
-      <snapshot>/docs/        — DOCS + dl (parquet)
+      <snapshot>/docs/        — extracted docs + dl (parquet)
       <snapshot>/segments/    — SEGMENTS, partitionBy(bucket)  [term routing]
-      <snapshot>/term_stats/  — TERM_STATS
+      <snapshot>/term_stats/  — (term, df, cf, idf)
       <snapshot>/lineage/     — LINEAGE (per docid_range build metrics)
 """
 
@@ -61,8 +61,32 @@ class Catalog:
     # analyzer IMPLEMENTATION version (functions/analysis.ANALYZER_VERSIONS
     # at build time).  Searcher refuses a version mismatch: same analyzer
     # name + different token output = silent wrong results otherwise.
-    # None on indexes built before this field existed (warn-only).
+    # None on indexes built before this field existed (the guards let it
+    # pass; see analyzer_mismatches).
     analyzer_version: str | None = None
+
+    def analyzer_mismatches(self) -> list[tuple[str, str | None, str | None]]:
+        """(analyzer, stored version, current version) for every analyzed
+        chain — the content field's and each extra field's — whose stored
+        implementation version differs from this code's
+        (functions/analysis.ANALYZER_VERSIONS).  The same analyzer name with
+        different token output makes query terms miss the stored postings.
+
+        A stored ``None`` (a catalog written before versions were recorded)
+        is listed too, so a caller can tell it from a real mismatch: the
+        search and delta guards let it pass, a cache that can rebuild
+        treats it as stale."""
+        from ..functions.analysis import ANALYZER_VERSIONS
+
+        chains = [(self.analyzer, self.analyzer_version)] + [
+            (m["analyzer"], m.get("analyzer_version"))
+            for m in (self.fields or {}).values()
+        ]
+        return [
+            (an, stored, ANALYZER_VERSIONS.get(an))
+            for an, stored in chains
+            if stored != ANALYZER_VERSIONS.get(an)
+        ]
 
 
 def snapshot_dir(index_dir: str, snapshot: str) -> str:

@@ -6,9 +6,9 @@ pipeline needs for session-windowed training-data curation).
 State per user_id: (last_ts epoch seconds, n_events, n_sessions).  Each
 micro-batch's rows are sorted by (ts, event_id) inside the state function
 and folded into the carried state: a gap > ``gap_seconds`` (or the first
-event ever) opens a new session — exactly the batch sessionization's
-window-lag semantics (entry ``events_sessionize``), so the bounded-source
-result is identical to the batch oracle.
+event ever) opens a new session — exactly a batch window-lag
+sessionization (the ``stream_sessionize`` entry's SQL oracle), so the
+bounded-source result is identical to the batch oracle.
 
 Production notes: pair with a watermark-driven ``GroupStateTimeout`` so
 idle users' state is evicted (here the source is bounded and the smoke

@@ -7,7 +7,6 @@ from conftest import SF_MED
 from gitlab_elasticsearch_indexer_spark.operators.ann import (
     brute_force_topk,
     ivf_topk,
-    lsh_bucket_topk,
 )
 
 
@@ -89,12 +88,6 @@ class TestIvfStoredTable:
         # layout check: one directory per cell, vectors nowhere else
         cells = [p for p in os.listdir(ivf_dir + "/vectors") if p.startswith("cell=")]
         assert len(cells) == 8
-
-
-def test_lsh_subset_of_corpus(spark, emb):
-    hits = lsh_bucket_topk(emb, 0, 5).collect()
-    assert len(hits) <= 5
-    assert all(r["vec_id"] != 0 for r in hits)
 
 
 def test_rp_bucket_matches_brute_within_bucket(spark, emb):

@@ -190,6 +190,11 @@ class TestAnalyzers:
             'שב"כ agents': ['שב"כ', "agent"],
             # WB7a (r5): trailing geresh kept on a Hebrew letter
             "צ' בשעה": ["צ'", "בשעה"],
+            # ...and ends the token before a digit or "_"; geresh between
+            # Hebrew letters still joins (WB6/7)
+            "צ'1": ["צ'", "1"],
+            "צ'_x": ["צ'", "_x"],
+            "צ'ב": ["צ'ב"],
             # ...but double quote/WB7a do NOT apply to non-Hebrew letters
             'a"b': ["a", "b"],
             "boys' toys": ["boy", "toy"],
@@ -786,6 +791,7 @@ class TestProgLanguage:
             # keyword-heavy ENGLISH PROSE must not classify: the code-shape
             # gate requires code punctuation before keyword evidence counts
             ("my use of strict words in my sub", "Text"),
+            ("my use of strict words (in my sub)", "Text"),
             ("The data frame library has a vector of NA values", "Text"),
             ("SELECT committee FROM the GROUP", "Text"),
             ("use of the end repeat function in local dance pairs", "Text"),

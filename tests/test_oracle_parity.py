@@ -98,6 +98,20 @@ def test_every_query_has_callable(entry_mod):
         assert callable(fn), name
 
 
+def test_driver_registry_pinned(entry_mod):
+    """The driver sees exactly 50 entries; every demoted or ordered name is
+    registered and every oracle belongs to a driver entry, so removing an
+    entry can neither leave a stale name behind nor change what the driver
+    sees."""
+    from gitlab_elasticsearch_indexer_spark.plans import entry_queries as eq
+
+    qs = entry_mod.queries()
+    assert len(qs) == 50
+    assert set(eq.DEMOTED) <= set(eq.QUERIES)
+    assert set(eq._ORDER) <= set(eq.QUERIES)
+    assert set(entry_mod.oracle_sql()) <= set(qs)
+
+
 def _ids():
     import sys
 

@@ -255,7 +255,7 @@ class TestStreamingKernel:
 
         monkeypatch.setattr(postings, "_KERNEL_CHUNK_ROWS", chunk_rows)
         kernel = postings.make_partition_kernel(
-            100.0, with_positions=True, with_offsets=with_offsets
+            with_positions=True, with_offsets=with_offsets
         )
         batches = [
             pa.RecordBatch.from_pandas(pdf.iloc[i : i + batch_rows], preserve_index=False)
@@ -318,12 +318,10 @@ class TestKernelByteIdentity:
         return rows
 
     @staticmethod
-    def _reference(rows, avgdl, with_positions, with_offsets):
+    def _reference(rows, with_positions, with_offsets):
         import numpy as np
 
-        from gitlab_elasticsearch_indexer_spark.config import (
-            BLOCK_SIZE, BM25_B, BM25_K1, DOCS_PER_RANGE,
-        )
+        from gitlab_elasticsearch_indexer_spark.config import BLOCK_SIZE, DOCS_PER_RANGE
         from gitlab_elasticsearch_indexer_spark.functions import codec
 
         poss = np.array([r[3] for r in rows], dtype=np.int64)
@@ -351,10 +349,6 @@ class TestKernelByteIdentity:
                     "n_docs": len(blk), "first_docid": int(d[0]),
                     "max_docid": int(d[-1]), "max_tf": int(tf.max()),
                     "min_dl": min(p[2] for p in blk), "sum_tf": int(tf.sum()),
-                    "max_tfn": max(
-                        t / (t + BM25_K1 * (1.0 - BM25_B + BM25_B * (p[2] / avgdl)))
-                        for t, p in zip(tf.tolist(), blk)
-                    ),
                     "docids_enc": codec.encode_docids(d, base=rng * DOCS_PER_RANGE),
                     "tfs_enc": codec.encode_tfs(tf),
                     "positions_enc": codec.encode_positions_block(poss, occ_s, occ_e)
@@ -365,7 +359,7 @@ class TestKernelByteIdentity:
         return out
 
     @staticmethod
-    def _kernel(rows, avgdl, with_positions, with_offsets, batch_rows):
+    def _kernel(rows, with_positions, with_offsets, batch_rows):
         import pyarrow as pa
 
         from gitlab_elasticsearch_indexer_spark.operators import postings
@@ -380,7 +374,7 @@ class TestKernelByteIdentity:
             cols["start"] = pa.array([r[4] for r in rows], pa.int32())
             cols["end"] = pa.array([r[5] for r in rows], pa.int32())
         batch = pa.RecordBatch.from_pydict(cols)
-        kernel = postings.make_partition_kernel(avgdl, with_positions, with_offsets)
+        kernel = postings.make_partition_kernel(with_positions, with_offsets)
         out = kernel(
             iter(batch.slice(i, batch_rows) for i in range(0, len(rows), batch_rows))
         )
@@ -394,20 +388,20 @@ class TestKernelByteIdentity:
         from gitlab_elasticsearch_indexer_spark.config import BLOCK_SIZE
 
         rows = self._occurrences(seed)
-        want = self._reference(rows, 123.4, with_positions, with_offsets)
+        want = self._reference(rows, with_positions, with_offsets)
         assert max(b["block_idx"] for b in want) >= 2  # head group spans 3+ blocks
         assert len({b["docid_range"] for b in want}) > 2
         assert max(b["max_tf"] for b in want) > 1
         assert any(b["n_docs"] == BLOCK_SIZE for b in want)
         for batch_rows in (len(rows), 997):
-            got = self._kernel(rows, 123.4, with_positions, with_offsets, batch_rows)
+            got = self._kernel(rows, with_positions, with_offsets, batch_rows)
             key = lambda b: (b["tid"], b["docid_range"], b["block_idx"])  # noqa: E731
             assert sorted(got, key=key) == sorted(want, key=key)
 
     def test_unsorted_docids_raise(self):
         rows = [(7, 5, 10, 0, 0, 1), (7, 3, 10, 0, 0, 1)]
         with pytest.raises(ValueError, match="sorted ascending"):
-            self._kernel(rows, 10.0, False, False, len(rows))
+            self._kernel(rows, False, False, len(rows))
 
 
 class TestTermDictionary:
@@ -854,6 +848,84 @@ class TestRankIdentity:
             kstem._cache.clear()
             analysis.refresh_analyzer_versions()
             assert analysis.ANALYZER_VERSIONS["default"] == before
+
+    def test_catalog_analyzer_mismatches(self):
+        """The one analyzer-compatibility check: every analyzed chain whose
+        stored version differs from the code's, a stored None included."""
+        from gitlab_elasticsearch_indexer_spark.functions.analysis import (
+            ANALYZER_VERSIONS as V,
+        )
+        from gitlab_elasticsearch_indexer_spark.sources.catalog import Catalog
+
+        base = dict(
+            n_docs=1, avgdl=1.0, analyzer="simple", block_size=128,
+            docs_per_range=8192, n_term_buckets=64, snapshot="s1",
+        )
+        url = {"analyzer": "path", "dl_col": "dl_url", "avgdl": 1.0}
+
+        def fields(version):
+            return {"url": {**url, "analyzer_version": version}}
+
+        ok = Catalog(**base, analyzer_version=V["simple"], fields=fields(V["path"]))
+        assert ok.analyzer_mismatches() == []
+        stale = Catalog(**base, analyzer_version=V["simple"], fields=fields("old"))
+        assert stale.analyzer_mismatches() == [("path", "old", V["path"])]
+        unknown = Catalog(**base, fields={"url": url})
+        assert unknown.analyzer_mismatches() == [
+            ("simple", None, V["simple"]), ("path", None, V["path"]),
+        ]
+
+    def test_entry_cache_rebuilds_unversioned_or_unreadable(
+        self, tmp_path, monkeypatch
+    ):
+        """The entry-index cache reuses an index only when every chain's
+        stored version matches: a stored None or a catalog that fails to
+        parse rebuilds, into an emptied directory."""
+        import json
+        import os
+
+        from gitlab_elasticsearch_indexer_spark.functions.analysis import (
+            ANALYZER_VERSIONS,
+        )
+        from gitlab_elasticsearch_indexer_spark.plans import entry_queries as eq
+        from gitlab_elasticsearch_indexer_spark.sources import catalog as cat
+
+        leftovers = []
+
+        def fake_build(spark, pages, index_dir, analyzer, snapshot, **kw):
+            leftovers.append(
+                sorted(os.listdir(index_dir)) if os.path.exists(index_dir) else []
+            )
+            cat.write_catalog(index_dir, cat.Catalog(
+                n_docs=1, avgdl=1.0, analyzer=analyzer, block_size=128,
+                docs_per_range=8192, n_term_buckets=64, snapshot=snapshot,
+                analyzer_version=ANALYZER_VERSIONS[analyzer],
+            ))
+            cat.commit_snapshot(index_dir, snapshot)
+
+        monkeypatch.setattr(eq, "_CACHE_ROOT", str(tmp_path / "cache"))
+        monkeypatch.setattr(eq, "build_index", fake_build)
+        monkeypatch.setattr(eq, "pages_from_documents", lambda spark, sf: None)
+
+        def lookup():
+            monkeypatch.setattr(eq, "_built", {})
+            return eq._index_for(None, str(tmp_path / "sf"))
+
+        index_dir = lookup()
+        assert leftovers == [[]]
+        assert lookup() == index_dir and len(leftovers) == 1  # cache hit
+        cpath = os.path.join(index_dir, "s1", "catalog.json")
+        with open(cpath) as f:
+            doc = json.load(f)
+        doc["analyzer_version"] = None
+        with open(cpath, "w") as f:
+            json.dump(doc, f)
+        lookup()
+        assert leftovers[1:] == [[]]
+        with open(cpath, "w") as f:
+            f.write("{not json")
+        lookup()
+        assert leftovers[2:] == [[]]
 
 
 def _specials_pdf(spark):
