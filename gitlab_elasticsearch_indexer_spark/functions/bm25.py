@@ -1,13 +1,19 @@
 """BM25 scoring math (Lucene-default parameters k1=1.2, b=0.75 — the
 reference mapping sets no similarity override, elastic/index.go:97-345).
 
-One canonical formula, float64 everywhere, used by ALL paths (DataFrame
-exhaustive scorer, block-max scorer, pandas oracle, DuckDB oracle SQL):
+One canonical formula, float64 everywhere:
 
-    idf(t)   = ln(1 + (N - df + 0.5) / (df + 0.5))          (Lucene BM25 idf)
+    idf(t)   = ln(1 + (N - df + 0.5) / (df + 0.5))          (Lucene BM25 idf,
+                                                             stored per term in
+                                                             term_stats)
     tfn      = tf / (tf + k1 * (1 - b + b * dl / avgdl))    (Lucene >=8 drops
                                                              the (k1+1) factor)
     score(d) = sum over matched query terms of idf(t) * tfn
+
+``bm25`` below is the per-term expression; the exhaustive scorer
+(operators/search.bm25_score_col), the range kernel (operators/wand.
+score_range) and both block-max bounds evaluate it.  The DuckDB oracle SQL
+spells the same formula.
 
 Tie-break for rank identity: (score DESC, docid ASC) — fixed here, never
 revisited (SURVEY.md §7 hard part #1).
@@ -15,24 +21,17 @@ revisited (SURVEY.md §7 hard part #1).
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
-
 from ..config import BM25_B, BM25_K1
 
 
-def idf(n_docs: int, df: int) -> float:
-    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+def bm25(idf, tf, dl, avgdl: float):
+    """idf·tf / (tf + k1·(1 − b + b·dl/avgdl)): one term's score, over
+    float64 numpy arrays or scalars, or over double Spark Columns.
 
-
-def idf_np(n_docs: int, df: np.ndarray) -> np.ndarray:
-    return np.log1p((n_docs - df + 0.5) / (df + 0.5))
-
-
-def tf_norm_np(
-    tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float = BM25_K1, b: float = BM25_B
-) -> np.ndarray:
-    """tf / (tf + k1*(1-b+b*dl/avgdl)) as float64 arrays."""
-    tf = tf.astype(np.float64)
-    return tf / (tf + k1 * (1.0 - b + b * (dl.astype(np.float64) / avgdl)))
+    The operation order is part of the contract: (idf·tf) is formed first,
+    then divided.  A block bound is this same expression at (max_tf,
+    min_dl), so it rounds exactly like the score of a posting with that tf
+    and dl and never falls below the scores it covers; a bound written as
+    ``idf · (tf / den)`` can round one ulp below ``(idf · tf) / den`` and
+    lose a doc that ties the k-th score."""
+    return idf * tf / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))

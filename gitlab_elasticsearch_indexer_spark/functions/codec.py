@@ -275,64 +275,6 @@ def encode_offsets(offset_lists: list[tuple[np.ndarray, np.ndarray]]) -> bytes:
     return varint_encode(np.concatenate(parts))
 
 
-def encode_positions_block(
-    poss: np.ndarray, occ_start: np.ndarray, occ_end: np.ndarray
-) -> bytes:
-    """Byte-identical twin of ``encode_positions`` over FLAT arrays.
-
-    ``poss`` holds every occurrence's position for a partition; posting ``i``
-    of this block spans ``poss[occ_start[i]:occ_end[i]]``, postings
-    contiguous (``occ_end[i] == occ_start[i+1]``).  The per-posting list
-    version costs one numpy slice + diff + concatenate PER POSTING — tens of
-    millions of tiny-array calls on a positions-enabled build; this one does
-    a single vectorized delta over the block's whole occurrence span and one
-    ``np.insert`` for the per-posting counts."""
-    counts = (occ_end - occ_start).astype(np.int64)
-    if counts.size == 0:
-        return b""
-    a0, a1 = int(occ_start[0]), int(occ_end[-1])
-    seg = poss[a0:a1].astype(np.int64, copy=True)
-    rel = (occ_start - a0).astype(np.int64)
-    seg[1:] -= poss[a0 : a1 - 1]  # in-posting deltas...
-    seg[rel] = poss[occ_start]    # ...first of each posting absolute (delta vs 0)
-    flat = np.insert(seg, rel, counts)
-    return varint_encode(flat.astype(np.uint64))
-
-
-def encode_offsets_block(
-    starts_flat: np.ndarray,
-    ends_flat: np.ndarray,
-    occ_start: np.ndarray,
-    occ_end: np.ndarray,
-) -> bytes:
-    """Byte-identical twin of ``encode_offsets`` over FLAT arrays (see
-    ``encode_positions_block``).  Layout per posting: varint(n) +
-    delta-coded starts + (end-start) lengths — two variable-size sections
-    per posting, so the interleave is a vectorized scatter instead of
-    ``np.insert``."""
-    counts = (occ_end - occ_start).astype(np.int64)
-    if counts.size == 0:
-        return b""
-    a0, a1 = int(occ_start[0]), int(occ_end[-1])
-    n_occ = a1 - a0
-    sdelta = starts_flat[a0:a1].astype(np.int64, copy=True)
-    rel = (occ_start - a0).astype(np.int64)
-    sdelta[1:] -= starts_flat[a0 : a1 - 1]
-    sdelta[rel] = starts_flat[occ_start]
-    lens = ends_flat[a0:a1].astype(np.int64) - starts_flat[a0:a1]
-
-    base = np.cumsum(1 + 2 * counts) - (1 + 2 * counts)  # out idx of each n
-    rep_base = np.repeat(base, counts)
-    rep_counts = np.repeat(counts, counts)
-    # occurrence's index within its posting
-    k = np.arange(n_occ, dtype=np.int64) - np.repeat(rel, counts)
-    out = np.empty(n_occ * 2 + counts.size, dtype=np.int64)
-    out[base] = counts
-    out[rep_base + 1 + k] = sdelta
-    out[rep_base + 1 + rep_counts + k] = lens
-    return varint_encode(out.astype(np.uint64))
-
-
 def decode_offsets(buf: bytes, n_postings: int) -> list[tuple[np.ndarray, np.ndarray]]:
     flat = varint_decode(buf).astype(np.int64)
     out: list[tuple[np.ndarray, np.ndarray]] = []

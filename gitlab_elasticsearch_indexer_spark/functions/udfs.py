@@ -46,32 +46,6 @@ def classify_prog_lang_udf(heads: pd.Series) -> pd.Series:
     return heads.map(classify_content, na_action="ignore")
 
 
-def make_offsets_tokenizer_udf(analyzer: str):
-    """Offset-aware tokenizer: ArrayType(Struct(term, start, end)) pandas
-    UDF for chains supporting index_options=offsets (simple, default).
-
-    LEGACY REFERENCE TWIN — production builds use ``offsets_occurrences``
-    below (flat columnar emitter, ~2.7× faster end-to-end; BENCH.md §2).
-    Kept because tests assert the flat path reproduces this row stream
-    exactly (tests/test_pipeline.py::test_flat_occurrences_equal_struct_udf_path)."""
-    fn = analysis.OFFSET_ANALYZERS[analyzer]
-    schema = T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("term", T.StringType()),
-                T.StructField("start", T.IntegerType()),
-                T.StructField("end", T.IntegerType()),
-            ]
-        )
-    )
-
-    @F.pandas_udf(schema)
-    def tokenize_offsets_udf(texts: pd.Series) -> pd.Series:
-        return texts.fillna("").map(fn)
-
-    return tokenize_offsets_udf
-
-
 OCCURRENCE_OFFSETS_SCHEMA = (
     "docid long, dl int, pos int, term string, start int, end int"
 )
@@ -81,15 +55,14 @@ def offsets_occurrences(docs, analyzer: str):
     """docs (docid, dl, content) → flat occurrence rows
     (docid, dl, pos, term, start, end) in ONE ``mapInPandas`` pass.
 
-    Replaces the pandas_udf(Array<Struct(term,start,end)>) + JVM
-    ``posexplode`` pipeline: a list-of-struct cell forces pyarrow to build a
-    Python tuple and convert it to an Arrow struct PER TOKEN, then Spark
-    runs a generate stage over the nested column.  Emitting the already-
-    exploded rows keeps everything columnar — docid/dl fan out via
-    ``np.repeat``, positions are a closed-form arange difference, and only
-    the term strings remain Python objects (unavoidable: they're strings).
-    Output rows are identical to the old path (same values, same types), so
-    segments stay byte-identical.
+    Emits already-exploded rows instead of an Array<Struct(term,start,end)>
+    column + JVM ``posexplode``: a list-of-struct cell forces pyarrow to
+    build a Python tuple and convert it to an Arrow struct PER TOKEN, then
+    Spark runs a generate stage over the nested column.  Here everything
+    stays columnar — docid/dl fan out via ``np.repeat``, positions are a
+    closed-form arange difference, and only the term strings remain Python
+    objects (unavoidable: they're strings).  A document's rows are its
+    ``analysis.OFFSET_ANALYZERS`` tokens in order (asserted by tests).
     """
     import numpy as np
 

@@ -23,8 +23,8 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config import BM25_B, BM25_K1
 from ..functions.analysis import ANALYZERS
+from ..functions.bm25 import bm25
 from .postings import bucket_col, decode_segments
 
 
@@ -58,9 +58,7 @@ def hits_frame(spark, docids=(), scores=()) -> DataFrame:
 
 
 def bm25_score_col(tf: Column, dl: Column, idf: Column, avgdl: float) -> Column:
-    k1, b = F.lit(BM25_K1), F.lit(BM25_B)
-    tf_d = tf.cast("double")
-    return idf * tf_d / (tf_d + k1 * (F.lit(1.0) - b + b * dl.cast("double") / F.lit(avgdl)))
+    return bm25(idf, tf.cast("double"), dl.cast("double"), avgdl)
 
 
 def filter_segments_for_terms(segments: DataFrame, terms: list[str]) -> DataFrame:

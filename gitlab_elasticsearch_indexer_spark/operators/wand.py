@@ -8,7 +8,7 @@ on Spark for larger indexes or a ``doc_filter``, skipping at two
 granularities that ARE Spark-friendly:
 
 1. **Range-level skipping (distributed).**  Per docid_range,
-   ``bound(range) = Σ_t idf_t · max_block(tfn(max_tf, min_dl))`` is aggregated
+   ``bound(range) = Σ_t max_block(bm25(idf_t, max_tf, min_dl))`` is aggregated
    SPARK-SIDE from segment *metadata only* (a few bytes per block — no
    posting bytes read); the driver collects just the per-range aggregate —
    or, above ``super_threshold`` ranges, only per-SUPER-range maxima with
@@ -20,15 +20,17 @@ granularities that ARE Spark-friendly:
    Spark job over the pruned parquet partitions.
 
 2. **Block-level skipping (within a range, single-term queries, both
-   drivers).**  Blocks sorted by idf·tfn(max_tf, min_dl) descending (the
-   bound ``_block_bound_tfn`` derives at the current avgdl); once k local hits
-   exist and the next block's bound is below the local k-th score,
-   remaining blocks are not decoded.  (Multi-term queries score the range's
+   drivers).**  Blocks sorted by bm25(idf, max_tf, min_dl) descending (at
+   the current avgdl); once k local hits exist and the next block's bound
+   is below the local k-th score, remaining blocks are not decoded.  (Multi-term queries score the range's
    candidate blocks with one vectorized numpy accumulation — exact, and
    still only the blocks of the query's terms.)
 
-Safety: bounds are true upper bounds, so every driver is rank-identical to
-the exhaustive scorer — asserted in tests/test_pipeline.py and
+Safety: a bound is the scoring expression itself (functions/bm25.bm25)
+evaluated at a block's (max_tf, min_dl), so it rounds exactly like the
+score of a posting with that tf and dl and never falls below a score it
+covers, not even by one ulp on a tie; every driver is rank-identical to the
+exhaustive scorer — asserted in tests/test_pipeline.py and
 tests/test_local_search.py.
 
 The Spark driver joins doc lengths via ``cogroup(segments,
@@ -44,8 +46,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config import BM25_B, BM25_K1, DOCS_PER_RANGE
+from ..config import DOCS_PER_RANGE
 from ..functions import codec
+from ..functions.bm25 import bm25
 from .search import HITS, filter_segments_for_terms, hits_frame
 
 # block columns the range kernel reads (positions/offsets payloads are never
@@ -54,15 +57,6 @@ BLOCK_COLS = ["term", "n_docs", "max_tf", "min_dl", "docids_enc", "tfs_enc"]
 # ranges scored per Spark batch; an index with at most this many ranges is
 # served in process (plans/search.py) and never reaches search_blockmax
 RANGE_BATCH = 256
-
-
-def _block_bound_tfn(max_tf, min_dl, avgdl: float):
-    """Upper bound of tf/(tf+k1·(1−b+b·dl/avgdl)) over a block, from stored
-    (max_tf, min_dl) and the CURRENT avgdl — valid across incremental
-    snapshots (monotone ↑ in tf, ↓ in dl)."""
-    max_tf = np.asarray(max_tf, dtype=np.float64)
-    min_dl = np.asarray(min_dl, dtype=np.float64)
-    return max_tf / (max_tf + BM25_K1 * (1.0 - BM25_B + BM25_B * min_dl / avgdl))
 
 
 def score_range(
@@ -81,7 +75,6 @@ def score_range(
     arrays; the *_enc columns hold bytes); ``dl_docids`` (sorted) and
     ``dl_vals`` are the range's docs after any metadata filter — postings of
     docs not listed there never score."""
-    k1, b = BM25_K1, BM25_B
     empty = np.empty(0, np.int64), np.empty(0, np.float64)
     terms = blocks["term"]
     if len(terms) == 0 or len(dl_docids) == 0:
@@ -89,7 +82,12 @@ def score_range(
     idf = np.array([idf_by_term[t] for t in terms], dtype=np.float64)
     single_term = len(set(terms)) == 1
     if single_term:
-        bound = idf * _block_bound_tfn(blocks["max_tf"], blocks["min_dl"], avgdl)
+        bound = bm25(
+            idf,
+            np.asarray(blocks["max_tf"], dtype=np.float64),
+            np.asarray(blocks["min_dl"], dtype=np.float64),
+            avgdl,
+        )
         order = np.argsort(-bound, kind="stable")
     else:
         # term order: every doc sums its per-term scores in the same order,
@@ -114,7 +112,7 @@ def score_range(
             continue
         docids, tfs, pos = docids[valid], tfs[valid], pos[valid]
         dl = dl_vals[pos].astype(np.float64)
-        scores = idf[i] * tfs / (tfs + k1 * (1.0 - b + b * dl / avgdl))
+        scores = bm25(idf[i], tfs, dl, avgdl)
         all_docids.append(docids)
         all_scores.append(scores)
         if single_term:
@@ -163,19 +161,19 @@ def _make_range_scorer(idf_by_term: dict[str, float], avgdl: float, k: int):
 
 def _range_bounds_df(seg: DataFrame, stats_df: DataFrame, avgdl: float) -> DataFrame:
     """(docid_range, bound) computed ENTIRELY Spark-side from block metadata:
-    per-(range, term) max of idf·bound_tfn, summed per range.  The driver
+    per-(range, term) max of the block bounds, summed per range.  The driver
     never sees per-block rows — only the per-range aggregate (n_docs/8192
     rows), or per-super-range above that (see search_blockmax)."""
-    tf_d = F.col("max_tf").cast("double")
-    tfn_bound = tf_d / (
-        tf_d
-        + F.lit(BM25_K1)
-        * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("min_dl").cast("double") / F.lit(avgdl))
+    bound = bm25(
+        F.col("idf"),
+        F.col("max_tf").cast("double"),
+        F.col("min_dl").cast("double"),
+        avgdl,
     )
     return (
         seg.join(F.broadcast(stats_df), "term")
         .groupBy("docid_range", "term")
-        .agg(F.max(tfn_bound * F.col("idf")).alias("tb"))
+        .agg(F.max(bound).alias("tb"))
         .groupBy("docid_range")
         .agg(F.sum("tb").alias("bound"))
     )

@@ -15,15 +15,19 @@ Pipeline (two scans, exactly ONE wide exchange over the big data):
                               docid_range) → sorted partition kernel
                               (operators/postings.py) → write
                               partitionBy(bucket)
-4. term_stats                 aggregated from written segment *metadata*
-                              (column-pruned parquet read — no re-scan of
-                              posting bytes)
-5. lineage + catalog          per-docid_range metrics, then the atomic
-                              ``current`` pointer flip (commit barrier, K4)
+   + lineage                  one LINEAGE row per docid_range, written
+                              after its batch's segments
+4. commit                     ``commit`` — the one commit path of build,
+                              apply_delta and compact, in order: the '-'
+                              lineage row of a snapshot that claims no
+                              range, catalog.json, term_stats (aggregated
+                              from segment *metadata*: a column-pruned read,
+                              no posting bytes), then the atomic ``current``
+                              pointer flip (commit barrier, K4)
 
 Checkpointed resume (north rule, O1/O7): ``resume=True`` skips docid_ranges
-already marked done in an interrupted snapshot's lineage and appends only
-the remainder.
+an interrupted snapshot's lineage already claims and appends only the
+remainder.
 """
 
 from __future__ import annotations
@@ -40,11 +44,82 @@ from ..functions.analysis import ANALYZER_VERSIONS
 from ..operators.docs import build_docs
 from ..operators.postings import build_segments, term_stats_from_segments
 from ..operators.tokenize import tokens_expr
-from ..schemas import LINEAGE
+from ..schemas import LINEAGE, SEGMENTS
 from ..sources import catalog as cat
 
 
 FIELD_SEP = "\x1f"  # namespaces non-default fields' terms (Lucene field:term)
+
+
+def write_segments(segments: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Write block rows ``partitionBy(bucket)``, clustered by bucket first:
+    without the repartition every write task emits a file per bucket
+    directory (tasks × 64 small files) and the driver's serial
+    commit/rename phase dominates small-core runs."""
+    segments.repartition("bucket").write.mode(mode).partitionBy("bucket").parquet(path)
+
+
+def lineage_rows(
+    claims: DataFrame, base: str | None, snapshot: str, wall_ms: int = 0
+) -> DataFrame:
+    """LINEAGE rows: ``snapshot`` claims each ``claims.docid_range``,
+    derived from snapshot ``base`` (None for a build).  ``claims`` may
+    carry per-range ``n_docs``/``n_tokens`` (a build's range stats); absent
+    columns are written 0."""
+
+    def count(c: str):
+        return (F.col(c) if c in claims.columns else F.lit(0)).cast("long").alias(c)
+
+    return claims.select(
+        F.col("docid_range").cast("string").alias("partition_key"),
+        F.lit(base).cast("string").alias("from_snapshot"),
+        F.lit(snapshot).alias("to_snapshot"),
+        count("n_docs"),
+        count("n_tokens"),
+        F.lit("done").alias("status"),
+        F.lit(wall_ms).cast("long").alias("wall_ms"),
+    )
+
+
+def commit(
+    spark: SparkSession,
+    index_dir: str,
+    catalog: cat.Catalog,
+    claims_nothing: bool,
+    base: str | None = None,
+) -> cat.Catalog:
+    """Commit a snapshot whose docs, segments and range lineage are
+    written: the one commit path of ``build_index``, ``apply_delta`` and
+    ``compact``.  In order:
+
+    1. a snapshot that claims no docid_range gets the one-row ``'-'``
+       lineage (from ``base``, as ``lineage_rows``), so its lineage table
+       exists for chain resolution and resume;
+    2. ``catalog.json``;
+    3. ``term_stats`` from the snapshot's logical segments — block metadata
+       only; ``read_table`` resolves a chained snapshot through the catalog
+       and lineage written above.  A snapshot without block rows (an empty
+       build, a delta that only deletes or changes nothing) first gets one
+       empty segments file carrying the schema: a partitioned write of no
+       rows leaves no file that Spark or pyarrow could read;
+    4. the ``current`` flip, the commit barrier: a failure in any earlier
+       step leaves readers on the previous snapshot, and a re-run commits."""
+    sd = cat.snapshot_dir(index_dir, catalog.snapshot)
+    if claims_nothing:
+        spark.createDataFrame(
+            [("-", base, catalog.snapshot, 0, 0, "done", 0)], LINEAGE
+        ).coalesce(1).write.mode("overwrite").parquet(f"{sd}/lineage")
+    cat.write_catalog(index_dir, catalog)
+    if not any(n.startswith("bucket=") for n in os.listdir(f"{sd}/segments")):
+        spark.createDataFrame([], SEGMENTS).write.mode("overwrite").parquet(
+            f"{sd}/segments"
+        )
+    segments = cat.read_table(spark, index_dir, "segments", catalog.snapshot)
+    term_stats_from_segments(segments, catalog.n_docs).write.mode(
+        "overwrite"
+    ).parquet(f"{sd}/term_stats")
+    cat.commit_snapshot(index_dir, catalog.snapshot)
+    return catalog
 
 
 def field_occurrences(
@@ -185,13 +260,7 @@ def build_index(
     done_df: DataFrame | None = None
     if resume:
         try:
-            done_df = (
-                spark.read.parquet(f"{sd}/lineage")
-                .filter((F.col("status") == "done") & (F.col("partition_key") != "-"))
-                .select(F.col("partition_key").cast("long").alias("rng"))
-                .distinct()
-                .cache()
-            )
+            done_df = cat.claimed_ranges(spark, index_dir, snapshot).cache()
             if done_df.limit(1).count() == 0:
                 done_df.unpersist()
                 done_df = None
@@ -281,9 +350,9 @@ def build_index(
     }
 
     # per-range metrics as a DataFrame (the future lineage rows)
-    range_stats = docs.groupBy(range_expr.alias("rng")).agg(
-        F.count("*").cast("long").alias("rng_docs"),
-        F.sum("dl").cast("long").alias("rng_tokens"),
+    range_stats = docs.groupBy(range_expr.alias("docid_range")).agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.sum("dl").cast("long").alias("n_tokens"),
     )
 
     def occurrences_for(batch_docs: DataFrame) -> DataFrame:
@@ -306,17 +375,14 @@ def build_index(
         # before resuming.  (On Iceberg this whole step is a metadata-only
         # DELETE WHERE docid_range NOT IN done.)
         has_pending = (
-            range_stats.join(done_df, "rng", "left_anti").limit(1).count() > 0
+            range_stats.join(done_df, "docid_range", "left_anti").limit(1).count()
+            > 0
         )
         if has_pending:
             keep = spark.read.parquet(f"{sd}/segments").join(
-                done_df.select(F.col("rng").alias("docid_range")),
-                "docid_range",
-                "left_semi",
+                done_df, "docid_range", "left_semi"
             )
-            keep.repartition("bucket").write.mode("overwrite").partitionBy(
-                "bucket"
-            ).parquet(f"{sd}/segments_compact")
+            write_segments(keep, f"{sd}/segments_compact")
             shutil.rmtree(f"{sd}/segments")
             os.rename(f"{sd}/segments_compact", f"{sd}/segments")
 
@@ -339,25 +405,19 @@ def build_index(
     batch_occ: dict[int, int] = {}
     if _est_occ_total and n_batches > 1:
         _stats_src = (
-            range_stats.join(done_df, "rng", "left_anti")
+            range_stats.join(done_df, "docid_range", "left_anti")
             if done_df is not None
             else range_stats
         )
         _scale = _est_occ_total / total_tokens if total_tokens else 1.0
         for row in (
-            _stats_src.groupBy(F.pmod(F.col("rng"), F.lit(n_batches)).alias("b"))
-            .agg(F.sum("rng_tokens").alias("t"))
+            _stats_src.groupBy(
+                F.pmod(F.col("docid_range"), F.lit(n_batches)).alias("b")
+            )
+            .agg(F.sum("n_tokens").alias("t"))
             .collect()
         ):
             batch_occ[int(row["b"])] = int((row["t"] or 0) * _scale)
-    lineage_cols = [
-        F.col("rng").cast("string").alias("partition_key"),
-        F.lit(None).cast("string").alias("from_snapshot"),
-        F.lit(snapshot).alias("to_snapshot"),
-        F.col("rng_docs").alias("n_docs"),
-        F.col("rng_tokens").alias("n_tokens"),
-        F.lit("done").alias("status"),
-    ]
     for i in range(n_batches):
         if done_df is None and n_batches == 1:
             batch_docs, batch_stats = occ_docs, range_stats  # fast path
@@ -365,15 +425,15 @@ def build_index(
             in_batch = F.pmod(range_expr, F.lit(n_batches)) == i
             batch_docs = occ_docs.filter(in_batch)
             batch_stats = range_stats.filter(
-                F.pmod(F.col("rng"), F.lit(n_batches)) == i
+                F.pmod(F.col("docid_range"), F.lit(n_batches)) == i
             )
             if done_df is not None:
                 batch_docs = batch_docs.join(
-                    done_df.select(F.col("rng").alias("__done_rng")),
+                    done_df.select(F.col("docid_range").alias("__done_rng")),
                     range_expr == F.col("__done_rng"),
                     "left_anti",
                 )
-                batch_stats = batch_stats.join(done_df, "rng", "left_anti")
+                batch_stats = batch_stats.join(done_df, "docid_range", "left_anti")
         occ_src = occurrences_for(batch_docs)
         if with_offsets:
             # offsets builds source occurrences from the Python emitter
@@ -391,25 +451,17 @@ def build_index(
             est_occurrences=batch_occ.get(i, est_occ_per_batch),
         )
         mode = "append" if (done_df is not None or i > 0) else "overwrite"
-        # cluster block rows by bucket first: without this every write task
-        # emits a file per bucket directory (tasks × 64 small files) and the
-        # driver's serial commit/rename phase dominates small-core runs
-        segments.repartition("bucket").write.mode(mode).partitionBy("bucket").parquet(
-            f"{sd}/segments"
-        )
+        write_segments(segments, f"{sd}/segments", mode)
         wall_ms = int((time.time() - t0) * 1000)
         # lineage written distributively from the per-range stats DataFrame
-        batch_stats.select(
-            *lineage_cols, F.lit(wall_ms).cast("long").alias("wall_ms")
-        ).write.mode(mode).parquet(f"{sd}/lineage")
+        lineage_rows(batch_stats, None, snapshot, wall_ms).write.mode(mode).parquet(
+            f"{sd}/lineage"
+        )
         if _fail_after_batches is not None and i + 1 >= _fail_after_batches:
             raise RuntimeError(
                 f"injected failure after batch {i + 1}/{n_batches} (test hook)"
             )
-    if n_docs == 0 and done_df is None:
-        spark.createDataFrame(
-            [("-", None, snapshot, 0, 0, "done", 0)], LINEAGE
-        ).coalesce(1).write.mode("overwrite").parquet(f"{sd}/lineage")
+    claims_nothing = n_docs == 0 and done_df is None
     if done_df is not None:
         done_df.unpersist()
     if use_stored:
@@ -419,13 +471,6 @@ def build_index(
         shutil.rmtree(f"{sd}/tokens_tmp", ignore_errors=True)
     if with_offsets:
         shutil.rmtree(f"{sd}/occ_tmp", ignore_errors=True)
-
-    # term stats from block METADATA of the freshly written table — the scan
-    # prunes the posting-bytes columns entirely (ReadSchema: term,n_docs,sum_tf)
-    seg_read = spark.read.parquet(f"{sd}/segments")
-    term_stats_from_segments(seg_read, n_docs).write.mode("overwrite").parquet(
-        f"{sd}/term_stats"
-    )
 
     catalog = cat.Catalog(
         n_docs=n_docs,
@@ -441,6 +486,4 @@ def build_index(
         total_tokens=total_tokens,
         analyzer_version=ANALYZER_VERSIONS.get(analyzer),
     )
-    cat.write_catalog(index_dir, catalog)
-    cat.commit_snapshot(index_dir, snapshot)
-    return catalog
+    return commit(spark, index_dir, catalog, claims_nothing)

@@ -38,7 +38,12 @@ from ..operators.search import search_exhaustive
 from ..plans.build_index import build_index
 from ..plans.search import Searcher
 from ..sources import catalog as cat
-from ..sources.pages import pages_from_documents
+from ..sources.pages import (
+    pages_from_documents,
+    pages_phrase,
+    pages_pluralized,
+    pages_uax29,
+)
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments (DuckDB dialect, ANSI-compatible subset)
@@ -117,71 +122,62 @@ from .. import __version__ as _pkg_version
 _CACHE_ROOT = os.path.join(
     tempfile.gettempdir(), f"ges_entry_indexes_{_pkg_version}"
 )
-_built: dict[tuple[str, bool], str] = {}
+_built: dict[tuple[str, str], str] = {}
+_COMPLETE = "complete"  # marker file: every step of a cached build finished
 
 
 def _index_for(
     spark: SparkSession,
     sf_dir: str,
-    with_positions: bool = False,
+    flavor: str = "",
+    pages: Callable[[SparkSession, str], DataFrame] | None = None,
+    build: Callable[..., object] | None = None,
+    index: str = "",
     analyzer: str = "simple",
-    source: str = "base",
-    with_offsets: bool = False,
+    **build_args,
 ) -> str:
-    key = (os.path.abspath(sf_dir), with_positions, analyzer, source, with_offsets)
+    """Directory of the cached entry index ``flavor`` over ``sf_dir``, built
+    at most once per process as ``build(spark, pages(spark, sf_dir), dir,
+    analyzer=analyzer, snapshot="s1", **build_args)``.  ``pages`` defaults
+    to ``pages_from_documents`` and ``build`` to ``build_index``; an entry
+    whose index takes a second step (a delta, a routed build's commits
+    table) passes a ``build`` that runs it, and ``index`` names the
+    sub-directory holding the index when it is not the directory itself.
+
+    A directory left by an earlier process is reused only if its build
+    finished (the marker written after ``build`` returns) and every analyzed
+    chain's stored version matches this code (``analyzer_mismatches``, a
+    stored None included): an analyzer change would otherwise poison the
+    cache — Searcher refuses version-mismatched indexes, so a stale hit
+    turns every entry into a hard error instead of a rebuild.  Anything
+    else, a partial or unreadable index included, rebuilds into an emptied
+    directory."""
+    key = (os.path.abspath(sf_dir), flavor)
     if key in _built:
         return _built[key]
-    tag = (
-        os.path.abspath(sf_dir).strip("/").replace("/", "_")
-        + ("_pos" if with_positions else "")
-        + ("_off" if with_offsets else "")
-        + ("" if analyzer == "simple" else f"_{analyzer}")
-        + ("" if source == "base" else f"_{source}")
+    index_dir = os.path.join(
+        _CACHE_ROOT,
+        key[0].strip("/").replace("/", "_") + (f"_{flavor}" if flavor else ""),
     )
-    index_dir = os.path.join(_CACHE_ROOT, tag)
     try:
-        # left by a previous process run; snapshots are immutable — but only
-        # reusable if every analyzed chain's version is known and matches
-        # current code (an analyzer change, e.g. r5's uax29->uax29b, would
-        # otherwise poison the cache: Searcher refuses version-mismatched
-        # indexes, so a stale hit turns every entry into a hard error
-        # instead of a rebuild)
-        need_build = bool(cat.read_catalog(index_dir).analyzer_mismatches())
-    except Exception:  # no index yet, or a partial/unreadable one
-        need_build = True
-    if need_build:
-        shutil.rmtree(index_dir, ignore_errors=True)
-        if source == "pluralized":
-            from ..sources.pages import pages_pluralized
-
-            pages = pages_pluralized(spark, sf_dir)
-        elif source == "uax29":
-            from ..sources.pages import pages_uax29
-
-            pages = pages_uax29(spark, sf_dir)
-        else:
-            pages = pages_from_documents(spark, sf_dir)
-        build_index(
-            spark, pages, index_dir, analyzer=analyzer,
-            with_positions=with_positions, with_offsets=with_offsets,
-            snapshot="s1",
+        stale = not os.path.exists(os.path.join(index_dir, _COMPLETE)) or bool(
+            cat.read_catalog(os.path.join(index_dir, index)).analyzer_mismatches()
         )
+    except Exception:  # no index yet, or a partial/unreadable one
+        stale = True
+    if stale:
+        shutil.rmtree(index_dir, ignore_errors=True)
+        (build or build_index)(
+            spark, (pages or pages_from_documents)(spark, sf_dir), index_dir,
+            analyzer=analyzer, snapshot="s1", **build_args,
+        )
+        open(os.path.join(index_dir, _COMPLETE), "w").close()
     _built[key] = index_dir
     return index_dir
 
 
-def _searcher(
-    spark: SparkSession,
-    sf_dir: str,
-    with_positions: bool = False,
-    analyzer: str = "simple",
-    source: str = "base",
-    with_offsets: bool = False,
-) -> Searcher:
-    return Searcher(
-        spark,
-        _index_for(spark, sf_dir, with_positions, analyzer, source, with_offsets),
-    )
+def _searcher(spark: SparkSession, sf_dir: str, flavor: str = "", **kw) -> Searcher:
+    return Searcher(spark, _index_for(spark, sf_dir, flavor, **kw))
 
 
 def _topk_entry(query: str, k: int, mode: str, doc_filter_expr: str | None = None):
@@ -370,7 +366,7 @@ SELECT CAST(doc_id AS BIGINT) AS docid, tf FROM tf WHERE term = 'customer' ORDER
 
 # --- ft_phrase_match: positions-backed phrase query (§1.4 positions) -------
 def _ft_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _searcher(spark, sf_dir, with_positions=True)
+    s = _searcher(spark, sf_dir, "pos", with_positions=True)
     from ..operators.search import phrase_filter_docids
 
     return phrase_filter_docids(s.segments, ["data", "query"]).select("docid")
@@ -524,11 +520,7 @@ FROM documents
 
 
 # --- incremental_merge: F4 op dispatch + K1/K2 merge semantics ---------------
-_incr_cache: dict[str, str] = {}
-
-
-def _synth_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pages = pages_from_documents(spark, sf_dir)
+def _synth_delta(pages: DataFrame) -> DataFrame:
     m = F.col("doc_id") % 10
     op = (
         F.when(m == 0, "DELETED").when(m == 1, "MODIFIED").when(m == 2, "RENAMED")
@@ -556,23 +548,19 @@ def _synth_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _build_with_delta(spark: SparkSession, pages: DataFrame, index_dir: str, **kw) -> None:
     from ..plans.incremental import apply_delta
 
-    key = os.path.abspath(sf_dir)
-    if key not in _incr_cache:
-        index_dir = os.path.join(
-            _CACHE_ROOT, "incr_" + key.strip("/").replace("/", "_")
-        )
-        try:
-            c = cat.read_catalog(index_dir)
-            assert c.snapshot == "s2"
-        except Exception:
-            pages = pages_from_documents(spark, sf_dir)
-            build_index(spark, pages, index_dir, analyzer="simple", snapshot="s1")
-            apply_delta(spark, index_dir, _synth_delta(spark, sf_dir), new_snapshot="s2")
-        _incr_cache[key] = index_dir
-    docs = cat.read_table(spark, _incr_cache[key], "docs")
+    build_index(spark, pages, index_dir, **kw)
+    apply_delta(spark, index_dir, _synth_delta(pages), new_snapshot="s2")
+
+
+def _incremental_index(spark: SparkSession, sf_dir: str) -> str:
+    return _index_for(spark, sf_dir, "incr", build=_build_with_delta)
+
+
+def _incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = cat.read_table(spark, _incremental_index(spark, sf_dir), "docs")
     return docs.select(
         "docid", "url", F.md5(F.encode("content", "UTF-8")).alias("content_md5")
     )
@@ -593,8 +581,7 @@ WHERE doc_id % 10 <> 0
 
 # --- incremental search: the merged index still answers correctly ------------
 def _incremental_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _incremental_merge(spark, sf_dir)  # ensure built
-    s = Searcher(spark, _incr_cache[os.path.abspath(sf_dir)])
+    s = Searcher(spark, _incremental_index(spark, sf_dir))
     hits = s.search("updated", k=60, mode="exhaustive", with_docs=False)
     return (
         hits.select("docid", F.round("score", 4).alias("score"))
@@ -1687,28 +1674,10 @@ SELECT CAST(NULL AS BIGINT), url, 'DELETED', url FROM base WHERE m = 5
 # Multi-field index: per-field analyzers (blob.path → path_analyzer,
 # blob.file_name → code_analyzer; elastic/index.go:115-146)
 # ===========================================================================
-_mf_cache: dict[str, str] = {}
-
-
 def _multifield_searcher(spark: SparkSession, sf_dir: str) -> Searcher:
-    key = os.path.abspath(sf_dir)
-    if key not in _mf_cache:
-        index_dir = os.path.join(_CACHE_ROOT, "mf_" + key.strip("/").replace("/", "_"))
-        try:
-            c = cat.read_catalog(index_dir)
-            assert c.fields and "url" in c.fields
-        except Exception:
-            pages = pages_from_documents(spark, sf_dir)
-            build_index(
-                spark,
-                pages,
-                index_dir,
-                analyzer="simple",
-                snapshot="s1",
-                extra_fields={"url": "path", "file_name": "code"},
-            )
-        _mf_cache[key] = index_dir
-    return Searcher(spark, _mf_cache[key])
+    return _searcher(
+        spark, sf_dir, "mf", extra_fields={"url": "path", "file_name": "code"}
+    )
 
 
 def _ft_field_path_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1862,23 +1831,12 @@ ORDER BY round(raw, 4) DESC, docid ASC LIMIT 10
 # --- routed_two_tables: F5/K5 — one job routes blob docs into the full-text
 # index AND commit/meta docs into their own table (main.go:125-133,
 # elastic/client.go:60-62); checked via per-doc-type counts + probes.
-_routed_cache: dict[str, object] = {}
-
-
 def _routed_two_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.routed_build import build_routed
 
-    key = os.path.abspath(sf_dir)
-    if key not in _routed_cache:
-        root = os.path.join(_CACHE_ROOT, "routed_" + key.strip("/").replace("/", "_"))
-        res_dir = os.path.join(root, "blob_index")
-        try:
-            cat.read_catalog(res_dir)
-            assert os.path.exists(os.path.join(root, "commits"))
-        except Exception:
-            build_routed(spark, pages_from_documents(spark, sf_dir), root)
-        _routed_cache[key] = root
-    root = _routed_cache[key]
+    root = _index_for(
+        spark, sf_dir, "routed", build=build_routed, index="blob_index"
+    )
     blob_docs = cat.read_table(spark, os.path.join(root, "blob_index"), "docs")
     commits = spark.read.parquet(os.path.join(root, "commits"))
     blob_row = blob_docs.agg(
@@ -1916,7 +1874,7 @@ FROM documents
 # the chain is closed instead by the independent pandas BM25 oracle in
 # tests/test_pipeline.py::TestDefaultAnalyzerEndToEnd.
 def _ft_bm25_default(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _searcher(spark, sf_dir, analyzer="default")
+    s = _searcher(spark, sf_dir, "default", analyzer="default")
     hits = s.search("tables values queries", k=60, mode="exhaustive", with_docs=False)
     return (
         hits.select("docid", F.round("score", 4).alias("score"))
@@ -1955,7 +1913,9 @@ def _minimal_stem_sql(col: str) -> str:
 
 
 def _ft_bm25_minimal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _searcher(spark, sf_dir, analyzer="minimal_english", source="pluralized")
+    s = _searcher(
+        spark, sf_dir, "pluralized", pages=pages_pluralized, analyzer="minimal_english"
+    )
     hits = s.search("tables values queries", k=60, mode="blockmax", with_docs=False)
     return (
         hits.select("docid", F.round("score", 4).alias("score"))
@@ -2034,7 +1994,6 @@ from ..sources.pages import UAX29_TEXT_SQL, UAX29_ORACLE_TOKEN_RE
 
 def _uax29_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.udfs import make_tokenizer_udf
-    from ..sources.pages import pages_uax29
 
     tok = make_tokenizer_udf("standard")
     return (
@@ -2069,7 +2028,7 @@ FROM arr
 
 
 def _ft_bm25_uax29(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _searcher(spark, sf_dir, analyzer="standard", source="uax29")
+    s = _searcher(spark, sf_dir, "uax29", pages=pages_uax29, analyzer="standard")
     hits = s.search("don't foo_bar u.s.a", k=60, mode="blockmax", with_docs=False)
     return (
         hits.select("docid", F.round("score", 4).alias("score"))
@@ -2137,7 +2096,7 @@ LIMIT 10
 # [a-z]+ words, so token start offsets are a running sum of token lengths
 # plus one space per preceding token.
 def _ft_highlight(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _searcher(spark, sf_dir, with_offsets=True)
+    s = _searcher(spark, sf_dir, "off", with_offsets=True)
     return s.highlight("spark", window=30).filter(F.col("docid") < 200)
 
 
@@ -2206,30 +2165,11 @@ ORDER BY cosine DESC, vec_id ASC LIMIT 10
 # ("data/mid/query") in doc_id%3==1: a regression that dropped field
 # positions or fell back to bag-of-words would pull the residue-1 docids
 # into the result set and fail the hash.
-_fp_cache: dict[str, str] = {}
-
-
 def _field_phrase_searcher(spark: SparkSession, sf_dir: str) -> Searcher:
-    key = os.path.abspath(sf_dir)
-    if key not in _fp_cache:
-        index_dir = os.path.join(_CACHE_ROOT, "fp_" + key.strip("/").replace("/", "_"))
-        try:
-            c = cat.read_catalog(index_dir)
-            assert c.with_positions and c.fields and "url" in c.fields
-        except Exception:
-            from ..sources.pages import pages_phrase
-
-            build_index(
-                spark,
-                pages_phrase(spark, sf_dir),
-                index_dir,
-                analyzer="simple",
-                with_positions=True,
-                snapshot="s1",
-                extra_fields={"url": "simple"},
-            )
-        _fp_cache[key] = index_dir
-    return Searcher(spark, _fp_cache[key])
+    return _searcher(
+        spark, sf_dir, "fp", pages=pages_phrase, with_positions=True,
+        extra_fields={"url": "simple"},
+    )
 
 
 def _ft_field_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,15 +36,17 @@ Spark shape — delta-proportional writes (the 100 TB property):
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DOCS_PER_RANGE
 from ..operators.docs import build_docs
-from ..operators.postings import build_segments, term_stats_from_segments
+from ..operators.postings import build_segments
 from ..operators.tokenize import tokens_expr
-from ..schemas import LINEAGE
 from ..sources import catalog as cat
+from .build_index import commit, field_occurrences, lineage_rows, write_segments
 
 
 def compact(
@@ -189,8 +191,6 @@ def apply_delta(
     # generation goes through the SAME path as the full build
     # (field_occurrences) so positions payloads, offsets, and
     # field-namespaced terms are reproduced exactly
-    from .build_index import field_occurrences
-
     # even when compacting, only affected ranges are re-encoded — the
     # untouched ranges' blocks are carried over via seg_keep below
     rebuild_docs = snap_docs_read.join(
@@ -211,58 +211,34 @@ def apply_delta(
     else:
         segments = seg_new  # delta ranges only — the untouched 99.9% is
         #                     reached through the snapshot chain
-    segments.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(f"{sd}/segments")
+    write_segments(segments, f"{sd}/segments")
 
     # lineage = this snapshot's range claims (chain-resolution ownership),
-    # written distributively from the affected DataFrame
-    claim_src = (
-        snap_docs_read.select(range_expr.alias("docid_range")).distinct()
-        if materialize
-        else affected
-    )
-    lineage = claim_src.select(
-        F.col("docid_range").cast("string").alias("partition_key"),
-        F.lit(old.snapshot).alias("from_snapshot"),
-        F.lit(new_snapshot).alias("to_snapshot"),
-        F.lit(0).cast("long").alias("n_docs"),
-        F.lit(0).cast("long").alias("n_tokens"),
-        F.lit("done").alias("status"),
-        F.lit(0).cast("long").alias("wall_ms"),
-    )
-    lineage.write.mode("overwrite").parquet(f"{sd}/lineage")
-    if spark.read.parquet(f"{sd}/lineage").isEmpty():
-        spark.createDataFrame(
-            [("-", old.snapshot, new_snapshot, 0, 0, "done", 0)], LINEAGE
-        ).coalesce(1).write.mode("overwrite").parquet(f"{sd}/lineage")
+    # written distributively; the counts already say whether it claims any:
+    # every surviving doc's range when materializing, else the delta's
+    claims_nothing = n_docs == 0 if materialize else n_removed + n_added == 0
+    if not claims_nothing:
+        claim_src = (
+            snap_docs_read.select(range_expr.alias("docid_range")).distinct()
+            if materialize
+            else affected
+        )
+        lineage_rows(claim_src, old.snapshot, new_snapshot).write.mode(
+            "overwrite"
+        ).parquet(f"{sd}/lineage")
 
-    catalog = cat.Catalog(
+    # every other catalog field (analyzer, versions, layout) carries forward
+    catalog = dataclasses.replace(
+        old,
         n_docs=n_docs,
         avgdl=avgdl,
-        analyzer=old.analyzer,
-        block_size=old.block_size,
-        docs_per_range=old.docs_per_range,
-        n_term_buckets=old.n_term_buckets,
         snapshot=new_snapshot,
-        with_positions=old.with_positions,
         fields=new_fields_meta or None,
-        with_offsets=old.with_offsets,
         parent_snapshot=None if materialize else old.snapshot,
         chain_depth=0 if materialize else old.chain_depth + 1,
         total_tokens=totals["dl"],
-        analyzer_version=old.analyzer_version,
     )
-    cat.write_catalog(index_dir, catalog)
-
-    # exact term stats over the LOGICAL segments view (block metadata only;
-    # needs the new catalog+lineage on disk for chain resolution)
-    seg_view = cat.read_table(spark, index_dir, "segments", new_snapshot)
-    term_stats_from_segments(seg_view, n_docs).write.mode("overwrite").parquet(
-        f"{sd}/term_stats"
-    )
-
-    cat.commit_snapshot(index_dir, new_snapshot)
+    commit(spark, index_dir, catalog, claims_nothing, base=old.snapshot)
     new_docs.unpersist()
     removed_rows.unpersist()
     affected.unpersist()

@@ -39,8 +39,9 @@ PAGES_DELTA = T.StructType(
 #              time (Spark analog of ES routing, elastic/index.go:90-92).
 # docid_range— docid >> log2(DOCS_PER_RANGE): explicit salt for head terms +
 #              the unit of query-time parallelism.
-# max_tf, min_dl — block-max metadata: idf * tfn(max_tf, min_dl) at the
-#              query's avgdl is the block's BM25 upper bound (block-max WAND).
+# max_tf, min_dl — block-max metadata: functions/bm25.bm25(idf, max_tf,
+#              min_dl) at the query's avgdl is the block's BM25 upper bound
+#              (block-max WAND).
 SEGMENTS = T.StructType(
     [
         T.StructField("term", T.StringType(), False),
@@ -50,10 +51,10 @@ SEGMENTS = T.StructType(
         T.StructField("n_docs", T.IntegerType(), False),
         T.StructField("first_docid", T.LongType(), False),
         T.StructField("max_docid", T.LongType(), False),   # skip pointer
-        # Block-max bound is derived at query time as
-        # idf * tfn(max_tf, min_dl, current avgdl) — tfn is monotone ↑ in tf
-        # and ↓ in dl, so (max_tf, min_dl) gives a true upper bound that stays
-        # valid when incremental updates shift the collection's avgdl.
+        # Block-max bound is derived at query time as the scoring
+        # expression at (max_tf, min_dl, current avgdl) — the score is
+        # monotone ↑ in tf and ↓ in dl, so (max_tf, min_dl) gives a true upper
+        # bound that stays valid when incremental updates shift avgdl.
         T.StructField("max_tf", T.IntegerType(), False),
         T.StructField("min_dl", T.IntegerType(), False),
         T.StructField("sum_tf", T.LongType(), False),  # → term_stats.cf without re-scan

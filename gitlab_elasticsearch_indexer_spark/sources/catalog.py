@@ -16,7 +16,14 @@ Layout:
       <snapshot>/docs/        — extracted docs + dl (parquet)
       <snapshot>/segments/    — SEGMENTS, partitionBy(bucket)  [term routing]
       <snapshot>/term_stats/  — (term, df, cf, idf)
-      <snapshot>/lineage/     — LINEAGE (per docid_range build metrics)
+      <snapshot>/lineage/     — LINEAGE: one row per docid_range the snapshot
+                                claims (a build's rows carry per-range
+                                n_docs/n_tokens); a snapshot that claims
+                                none holds the one row partition_key '-'
+
+Every writer (build_index, apply_delta, compact) commits through
+plans/build_index.commit: the '-' lineage row when the snapshot claims no
+range, catalog.json, term_stats, then the ``current`` flip.
 """
 
 from __future__ import annotations
@@ -126,8 +133,9 @@ def table_path(index_dir: str, table: str, snapshot: str | None = None) -> str:
     return os.path.join(snapshot_dir(index_dir, snapshot), table)
 
 
-def _claimed_ranges(spark: SparkSession, index_dir: str, snapshot: str) -> DataFrame:
-    """docid_ranges owned by ``snapshot`` = its lineage partition_keys."""
+def claimed_ranges(spark: SparkSession, index_dir: str, snapshot: str) -> DataFrame:
+    """docid_ranges owned by ``snapshot`` = its lineage partition_keys
+    (chain resolution, and the ranges a resumed build skips)."""
     from pyspark.sql import functions as F
 
     return (
@@ -196,7 +204,7 @@ def read_table(
                 "left_anti",
             )
         out = df if out is None else out.unionByName(df, allowMissingColumns=True)
-        mine = _claimed_ranges(spark, index_dir, snap)
+        mine = claimed_ranges(spark, index_dir, snap)
         claimed = mine if claimed is None else claimed.unionByName(mine).distinct()
         snap = sc.parent_snapshot
     return out

@@ -11,7 +11,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from gitlab_elasticsearch_indexer_spark.functions import analysis, codec, encoding, ids
-from gitlab_elasticsearch_indexer_spark.functions.bm25 import idf, idf_np, tf_norm_np
+from gitlab_elasticsearch_indexer_spark.functions.bm25 import bm25
 
 
 class TestIds:
@@ -397,64 +397,62 @@ class TestCodec:
         enc = codec.encode_docids(docids)
         assert np.array_equal(codec.decode_docids(enc, count=len(docids)), docids)
 
-    # The kernel now encodes positions/offsets from the partition's FLAT
-    # occurrence arrays (encode_*_block) — these must be BYTE-identical to
-    # the per-posting-list encoders so indexes built before/after the
-    # vectorization (and any mixed incremental chain) stay compatible.
-    @settings(max_examples=100, deadline=None)
-    @given(st.data())
-    def test_block_encoders_byte_identical(self, data):
-        rng_counts = data.draw(
-            st.lists(st.integers(min_value=1, max_value=20), min_size=1, max_size=25)
-        )
-        counts = np.array(rng_counts, dtype=np.int64)
-        occ_end = np.cumsum(counts)
-        occ_start = occ_end - counts
-        total = int(occ_end[-1])
-        pos_vals = data.draw(
-            st.lists(
-                st.integers(min_value=0, max_value=2**19),
-                min_size=total,
-                max_size=total,
-            )
-        )
-        poss = np.concatenate(
-            [
-                np.sort(np.array(pos_vals[s:e], dtype=np.int64))
-                for s, e in zip(occ_start, occ_end)
-            ]
-        )
-        starts = poss * 7  # any sorted-within-posting values
-        ends = starts + 1 + (poss % 13)
-        # simulate partition context: block arrays sit at an offset
-        pad = data.draw(st.integers(min_value=0, max_value=5))
-        padv = np.zeros(pad, dtype=np.int64)
-        assert codec.encode_positions_block(
-            np.concatenate([padv, poss]), occ_start + pad, occ_end + pad
-        ) == codec.encode_positions(
-            [poss[s:e] for s, e in zip(occ_start, occ_end)]
-        )
-        assert codec.encode_offsets_block(
-            np.concatenate([padv, starts]),
-            np.concatenate([padv, ends]),
-            occ_start + pad,
-            occ_end + pad,
-        ) == codec.encode_offsets(
-            [(starts[s:e], ends[s:e]) for s, e in zip(occ_start, occ_end)]
-        )
-
 
 class TestBM25:
-    def test_idf_matches_formula(self):
+    def test_tf_norm(self):
+        out = bm25(1.0, np.array([2.0]), np.array([100.0]), avgdl=100.0)
+        # idf=1: tf/(tf + k1*(1-b+b*1)) = 2/(2+1.2)
+        assert out[0] == pytest.approx(2 / 3.2)
+
+    def test_block_bound_covers_tied_score(self):
+        """A block whose best doc ties the k-th score must be scored: its
+        bound used to round one ulp below that doc's score (2.9113766403810972
+        vs ...977), so the block was skipped and docid 1 lost to docid 12."""
         import math
 
-        assert idf(1000, 10) == pytest.approx(math.log(1 + (1000 - 10 + 0.5) / 10.5))
-        assert np.allclose(idf_np(1000, np.array([10])), [idf(1000, 10)])
+        from gitlab_elasticsearch_indexer_spark.operators.wand import score_range
 
-    def test_tf_norm(self):
-        out = tf_norm_np(np.array([2]), np.array([100]), avgdl=100.0)
-        # tf/(tf + k1*(1-b+b*1)) = 2/(2+1.2)
-        assert out[0] == pytest.approx(2 / 3.2)
+        n_docs, df, avgdl = 7616, 126, 274.6991174105393
+        blocks = {
+            "term": np.array(["t", "t"], dtype=object),
+            "n_docs": np.array([1, 3]),
+            "max_tf": np.array([4, 5]),
+            "min_dl": np.array([406, 406]),
+            "docids_enc": np.array(
+                [codec.encode_docids(np.array([1])),
+                 codec.encode_docids(np.array([10, 11, 12]))],
+                dtype=object,
+            ),
+            "tfs_enc": np.array(
+                [codec.encode_tfs(np.array([4])), codec.encode_tfs(np.array([5, 4, 4]))],
+                dtype=object,
+            ),
+        }
+        idf = math.log1p((n_docs - df + 0.5) / (df + 0.5))
+        docids, _ = score_range(
+            0, blocks, np.array([1, 10, 11, 12]), np.full(4, 406), {"t": idf}, avgdl, k=3
+        )
+        assert docids.tolist() == [10, 1, 11]
+
+    @settings(max_examples=300, deadline=None)
+    @given(
+        st.integers(2, 10**7), st.floats(0.01, 1.0), st.floats(1.0, 5000.0),
+        st.integers(1, 200), st.integers(0, 50), st.integers(1, 5000),
+        st.integers(0, 5000),
+    )
+    def test_block_bound_never_below_score(self, n, df_frac, avgdl, tf, dtf, dl, ddl):
+        """bm25 at a block's (max_tf, min_dl) bounds every posting's score
+        in float64: same tf and dl give the same bits, and the score falls
+        as tf falls or dl grows."""
+        import math
+
+        df = max(1, int(n * df_frac))
+        idf = math.log1p((n - df + 0.5) / (df + 0.5))
+        bound = bm25(idf, float(tf + dtf), float(dl), avgdl)
+        assert bound >= bm25(idf, float(tf), float(dl + ddl), avgdl)
+        assert bm25(idf, float(tf), float(dl), avgdl) == bm25(
+            np.float64(idf), np.array([float(tf)]), np.array([float(dl)]), avgdl
+        )[0]
 
 
 class TestForCodec:

@@ -351,10 +351,12 @@ class TestKernelByteIdentity:
                     "min_dl": min(p[2] for p in blk), "sum_tf": int(tf.sum()),
                     "docids_enc": codec.encode_docids(d, base=rng * DOCS_PER_RANGE),
                     "tfs_enc": codec.encode_tfs(tf),
-                    "positions_enc": codec.encode_positions_block(poss, occ_s, occ_e)
-                    if with_positions else None,
-                    "offsets_enc": codec.encode_offsets_block(starts, ends, occ_s, occ_e)
-                    if with_offsets else None,
+                    "positions_enc": codec.encode_positions(
+                        [poss[a:b] for a, b in zip(occ_s, occ_e)]
+                    ) if with_positions else None,
+                    "offsets_enc": codec.encode_offsets(
+                        [(starts[a:b], ends[a:b]) for a, b in zip(occ_s, occ_e)]
+                    ) if with_offsets else None,
                 })
         return out
 
@@ -927,6 +929,66 @@ class TestRankIdentity:
         lookup()
         assert leftovers[2:] == [[]]
 
+    def test_entry_cache_rebuilds_unfinished_build(self, tmp_path, monkeypatch):
+        """A cached index whose build stopped after its first commit (a
+        delta or routed step that failed) is rebuilt, not served."""
+        from gitlab_elasticsearch_indexer_spark.functions.analysis import (
+            ANALYZER_VERSIONS,
+        )
+        from gitlab_elasticsearch_indexer_spark.plans import entry_queries as eq
+        from gitlab_elasticsearch_indexer_spark.sources import catalog as cat
+
+        runs = []
+
+        def build(spark, pages, index_dir, analyzer, snapshot, fail=False):
+            runs.append(os.path.exists(index_dir))
+            cat.write_catalog(index_dir, cat.Catalog(
+                n_docs=1, avgdl=1.0, analyzer=analyzer, block_size=128,
+                docs_per_range=8192, n_term_buckets=64, snapshot=snapshot,
+                analyzer_version=ANALYZER_VERSIONS[analyzer],
+            ))
+            cat.commit_snapshot(index_dir, snapshot)
+            if fail:
+                raise RuntimeError("second step failed")
+
+        monkeypatch.setattr(eq, "_CACHE_ROOT", str(tmp_path / "cache"))
+        monkeypatch.setattr(eq, "pages_from_documents", lambda spark, sf: None)
+
+        def lookup(fail=False):
+            monkeypatch.setattr(eq, "_built", {})
+            return eq._index_for(None, str(tmp_path / "sf"), "two_step", build=build, fail=fail)
+
+        with pytest.raises(RuntimeError, match="second step"):
+            lookup(fail=True)
+        index_dir = lookup()
+        assert runs == [False, False]  # rebuilt into an emptied directory
+        assert lookup() == index_dir and len(runs) == 2  # finished: cache hit
+
+    def test_stale_field_chain_rebuilds_entry_index(self, spark, tmp_path, monkeypatch):
+        """The multi-field entry index is cached like every entry index: a
+        stale ``code`` chain version rebuilds it, so ``ft_field_code_search``
+        answers instead of raising Searcher's analyzer-mismatch error."""
+        import glob
+        import json
+
+        from gitlab_elasticsearch_indexer_spark.plans import entry_queries as eq
+
+        monkeypatch.setattr(eq, "_CACHE_ROOT", str(tmp_path / "cache"))
+        monkeypatch.setattr(eq, "_built", {})
+        want = eq._ft_field_code_search(spark, SF_SMALL).toPandas()
+        [cpath] = glob.glob(str(tmp_path / "cache" / "*" / "s1" / "catalog.json"))
+        with open(cpath) as f:
+            doc = json.load(f)
+        assert doc["fields"]["file_name"]["analyzer"] == "code"
+        doc["fields"]["file_name"]["analyzer_version"] = "stale"
+        with open(cpath, "w") as f:
+            json.dump(doc, f)
+        monkeypatch.setattr(eq, "_built", {})  # a later process
+        got = eq._ft_field_code_search(spark, SF_SMALL).toPandas()
+        assert len(want) > 0 and got.equals(want)
+        with open(cpath) as f:
+            assert json.load(f)["fields"]["file_name"]["analyzer_version"] != "stale"
+
 
 def _specials_pdf(spark):
     from gitlab_elasticsearch_indexer_spark.sources.pages import special_pages
@@ -1037,14 +1099,15 @@ class TestOffsetsAndHighlight:
         return d
 
     def test_flat_occurrences_equal_struct_udf_path(self, spark):
-        """The r4 flat mapInPandas occurrence emitter (udfs.offsets_occurrences)
-        must produce row-for-row the same (docid, dl, pos, term, start, end)
-        stream as the legacy Array<Struct> pandas UDF + posexplode it
-        replaced — the legacy UDF is kept precisely as this reference twin."""
+        """The flat mapInPandas occurrence emitter (udfs.offsets_occurrences)
+        must produce row for row the (docid, dl, pos, term, start, end)
+        stream of ``analysis.OFFSET_ANALYZERS`` applied per document."""
         from pyspark.sql import functions as F
 
+        from gitlab_elasticsearch_indexer_spark.functions.analysis import (
+            OFFSET_ANALYZERS,
+        )
         from gitlab_elasticsearch_indexer_spark.functions.udfs import (
-            make_offsets_tokenizer_udf,
             offsets_occurrences,
         )
 
@@ -1064,19 +1127,18 @@ class TestOffsetsAndHighlight:
                 ).cast("int"),
             )
         )
+        docs_pdf = docs.toPandas()
         for analyzer in ("simple", "default"):
-            offs = make_offsets_tokenizer_udf(analyzer)(F.col("content"))
-            legacy = (
-                docs.select("docid", "dl", F.posexplode(offs).alias("pos", "t"))
-                .select(
-                    "docid", "dl", "pos",
-                    F.col("t.term").alias("term"),
-                    F.col("t.start").alias("start"),
-                    F.col("t.end").alias("end"),
-                )
-            )
+            fn = OFFSET_ANALYZERS[analyzer]
+            a = pd.DataFrame(
+                [
+                    (d.docid, d.dl, pos, term, start, end)
+                    for d in docs_pdf.itertuples(index=False)
+                    for pos, (term, start, end) in enumerate(fn(d.content or ""))
+                ],
+                columns=["docid", "dl", "pos", "term", "start", "end"],
+            ).sort_values(["docid", "pos"]).reset_index(drop=True)
             flat = offsets_occurrences(docs, analyzer)
-            a = legacy.toPandas().sort_values(["docid", "pos"]).reset_index(drop=True)
             b = flat.toPandas().sort_values(["docid", "pos"]).reset_index(drop=True)
             assert len(a) == len(b) and len(a) > 0
             for col in ("docid", "dl", "pos", "start", "end"):
