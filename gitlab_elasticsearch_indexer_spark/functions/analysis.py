@@ -38,7 +38,7 @@ from __future__ import annotations
 
 import re
 import unicodedata
-from typing import Callable, Iterable
+from typing import Callable
 
 import pandas as pd
 

@@ -90,11 +90,13 @@ class LocalIndex:
 
     def search(
         self, terms: list[str], k: int, avgdl: float, dl_col: str,
-        with_docs: bool, profile: dict,
+        with_docs: bool, profile: dict, require_all: bool = False,
     ) -> pa.Table:
         """→ (docid, score[, url, lang]) top-k, (score desc, docid asc)."""
         t0 = time.perf_counter()
         idf_by_term = self.idf_of(terms)
+        if require_all and len(idf_by_term) < len(set(terms)):
+            idf_by_term = {}  # a term the index lacks: no doc has them all
         blocks = self.read_blocks(list(idf_by_term)) if idf_by_term else None
         t1 = time.perf_counter()
         docids, scores = np.empty(0, np.int64), np.empty(0, np.float64)
@@ -112,7 +114,7 @@ class LocalIndex:
                 score_range(
                     int(r) * DOCS_PER_RANGE,
                     {c: v[s:e] for c, v in cols.items()},
-                    self.docid[a:z], dl[a:z], idf_by_term, avgdl, k,
+                    self.docid[a:z], dl[a:z], idf_by_term, avgdl, k, require_all,
                 )
                 for r, s, e, a, z in zip(ranges, starts, ends, lo, hi)
             ]

@@ -14,7 +14,7 @@ commit-log table and the expressions are unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

@@ -42,7 +42,7 @@ Why this shape:
 Scale properties:
 
 - **Explicit head-term salting (O11).**  The shuffle key is
-  (term, docid_range) — a Zipf head term occupying 10^11 docs lands in
+  (tid, docid_range) — a Zipf head term occupying 10^11 docs lands in
   n_docs/8192 bounded groups, never one reducer.  This is the explicit
   two-stage salted build the north rule demands; the merge stage is free
   because blocks are the persisted unit and query-time scoring treats

@@ -22,10 +22,11 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.analysis import ANALYZERS
 from ..functions.bm25 import bm25
-from .postings import bucket_col, decode_segments
+from .postings import decode_segments
 
 
 def analyze_query(query: str, analyzer: str) -> list[str]:
@@ -45,7 +46,12 @@ def analyze_query_seq(query: str, analyzer: str) -> list[str]:
     return list(ANALYZERS[analyzer](query))
 
 
-HITS = "docid long, score double"  # every scorer's result schema
+# every scorer's result schema, and with the doc columns search() joins; a
+# StructType, since a DDL string is parsed over py4j on every createDataFrame
+HITS = T.StructType([T.StructField("docid", T.LongType()), T.StructField("score", T.DoubleType())])
+HITS_WITH_DOCS = T.StructType(
+    HITS.fields + [T.StructField("url", T.StringType()), T.StructField("lang", T.StringType())]
+)
 
 
 def hits_frame(spark, docids=(), scores=()) -> DataFrame:

@@ -26,6 +26,11 @@ granularities that ARE Spark-friendly:
    candidate blocks with one vectorized numpy accumulation — exact, and
    still only the blocks of the query's terms.)
 
+Conjunctive queries (``operator="and"``) run the same kernel with
+``require_all``: a range lacking a query term returns before any decode, and
+a doc scores only if its valid postings cover every term (one count from the
+``np.unique`` that sums the scores).  A term without idf empties the query.
+
 Safety: a bound is the scoring expression itself (functions/bm25.bm25)
 evaluated at a block's (max_tf, min_dl), so it rounds exactly like the
 score of a posting with that tf and dl and never falls below a score it
@@ -67,6 +72,7 @@ def score_range(
     idf_by_term: dict[str, float],
     avgdl: float,
     k: int,
+    require_all: bool = False,
 ) -> tuple[np.ndarray, np.ndarray]:
     """The range kernel: exact BM25 top-k of one docid_range → (docids,
     scores) ordered (score desc, docid asc).
@@ -74,13 +80,17 @@ def score_range(
     ``blocks`` maps each of BLOCK_COLS to the range's block column (numpy
     arrays; the *_enc columns hold bytes); ``dl_docids`` (sorted) and
     ``dl_vals`` are the range's docs after any metadata filter — postings of
-    docs not listed there never score."""
+    docs not listed there never score, nor, under ``require_all``
+    (``operator="and"``), docs lacking a term of ``idf_by_term``."""
     empty = np.empty(0, np.int64), np.empty(0, np.float64)
     terms = blocks["term"]
     if len(terms) == 0 or len(dl_docids) == 0:
         return empty
+    n_terms = len(set(terms))
+    if require_all and n_terms < len(idf_by_term):
+        return empty  # a query term has no block in this range
     idf = np.array([idf_by_term[t] for t in terms], dtype=np.float64)
-    single_term = len(set(terms)) == 1
+    single_term = n_terms == 1
     if single_term:
         bound = bm25(
             idf,
@@ -123,9 +133,14 @@ def score_range(
 
     if not all_docids:
         return empty
-    uniq, inv = np.unique(np.concatenate(all_docids), return_inverse=True)
+    uniq, inv, *counts = np.unique(
+        np.concatenate(all_docids), return_inverse=True, return_counts=require_all
+    )
     totals = np.zeros(len(uniq), dtype=np.float64)
     np.add.at(totals, inv, np.concatenate(all_scores))
+    if require_all:  # one posting per (doc, term) in a range: count = terms matched
+        full = counts[0] == n_terms
+        uniq, totals = uniq[full], totals[full]
     return top_k(uniq, totals, k)
 
 
@@ -139,7 +154,7 @@ def top_k(docids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, n
     return docids[order], scores[order]
 
 
-def _make_range_scorer(idf_by_term: dict[str, float], avgdl: float, k: int):
+def _make_range_scorer(idf_by_term: dict[str, float], avgdl: float, k: int, require_all: bool):
     """The range kernel as a cogroup ``applyInPandas`` function."""
 
     def score_range_pdf(key, seg_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -152,7 +167,7 @@ def _make_range_scorer(idf_by_term: dict[str, float], avgdl: float, k: int):
             {c: seg_pdf[c].to_numpy() for c in BLOCK_COLS},
             dl_docids[dl_order],
             docs_pdf["dl"].to_numpy(dtype=np.int64)[dl_order],
-            idf_by_term, avgdl, k,
+            idf_by_term, avgdl, k, require_all,
         )
         return pd.DataFrame({"docid": docids, "score": scores})
 
@@ -193,8 +208,10 @@ def search_blockmax(
     super_shift: int = 10,
     super_threshold: int = 1 << 16,
     profile: dict | None = None,
+    require_all: bool = False,
 ) -> DataFrame:
-    """→ (docid, score) top-k, rank-identical to search_exhaustive.
+    """→ (docid, score) top-k, rank-identical to search_exhaustive (with the
+    same ``require_all``).
 
     Two regimes, chosen by corpus size (``n_ranges_hint`` — callers pass
     ceil(n_docs / DOCS_PER_RANGE) from the catalog, so no job is needed to
@@ -204,7 +221,7 @@ def search_blockmax(
     2. **default**: per-range bounds aggregated Spark-side
        (_range_bounds_df) and collected — n_docs/8192 rows, never per-block
        metadata — then descending-bound batches with θ-pruning.
-    3. **hint > super_threshold** (10^9+ ranges — 10^12+ docs): two-level.
+    3. **hint > super_threshold** (default 65,536 ranges, ≈5·10^8 docs): two-level.
        Only per-SUPER-range bounds (ranges >> super_shift, 1024× fewer) are
        collected up front; each super batch lazily fetches its members'
        per-range bounds.  Driver memory is O(n_ranges / 1024 + batch),
@@ -223,7 +240,7 @@ def search_blockmax(
     )
     stats = {r["term"]: float(r["idf"]) for r in stats_df.collect()}
     live_terms = [t for t in query_terms if t in stats]
-    if not live_terms:
+    if not live_terms or (require_all and len(stats) < len(set(query_terms))):
         return hits_frame(spark)
 
     # project away the payload columns the scorer never decodes (positions/
@@ -237,7 +254,7 @@ def search_blockmax(
         "dl",
         (F.col("docid") / F.lit(DOCS_PER_RANGE)).cast("long").alias("docid_range"),
     )
-    scorer = _make_range_scorer(stats, avgdl, k)
+    scorer = _make_range_scorer(stats, avgdl, k, require_all)
 
     def cogroup_score(seg_part: DataFrame, docs_part: DataFrame) -> DataFrame:
         return (

@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from ..config import BM25_B, BM25_K1
 from ..functions.analysis import light_english_stem
 from ..operators.postings import decode_segments
-from ..operators.search import search_exhaustive
 from ..plans.build_index import build_index
 from ..plans.search import Searcher
 from ..sources import catalog as cat

@@ -2,7 +2,8 @@
 SURVEY.md §3.3 — the ES query contract, served natively).
 
 ``Searcher`` loads the catalog once, keeps docs/term_stats DataFrames cached,
-and serves top-k queries through one of four paths (``profile["path"]``):
+and serves top-k queries through one of three paths (``profile["path"]``),
+chosen by ``mode``, ``doc_filter`` and index size alone:
 
 - ``local``: ``mode="blockmax"`` (default) on an index of at most
   ``RANGE_BATCH`` docid_ranges (ceil(n_docs / docs_per_range), from the
@@ -14,8 +15,11 @@ and serves top-k queries through one of four paths (``profile["path"]``):
   (operators/wand.py) — larger indexes, and any ``doc_filter``.
 - ``exhaustive``: pure-DataFrame scorer (operators/search.py) — the
   oracle-verifiable path; rank-identical by construction.
-- ``and``: conjunctive match query (``operator="and"``) on the exhaustive
-  scorer.
+
+``operator`` applies on each path: ``"or"`` (the ES match default) scores
+every doc holding a query term, ``"and"`` only docs holding all of them —
+the local and blockmax paths pass it to the range kernel as
+``require_all``, the exhaustive scorer filters on its matched-term count.
 
 ``search(..., profile={})`` fills the dict with the path, the analyzed
 ``terms``, ``ranges_scored`` (None on the exhaustive scorer) and wall ms per
@@ -33,6 +37,7 @@ from pyspark.sql import functions as F
 from ..operators.local_search import LocalIndex
 from ..operators.search import (
     HITS,
+    HITS_WITH_DOCS,
     analyze_query,
     analyze_query_seq,
     phrase_filter_docids,
@@ -128,16 +133,19 @@ class Searcher:
         operator: str = "or",
         profile: dict | None = None,
     ) -> DataFrame:
-        """``operator``: 'or' (ES match default) or 'and' (every term must
-        match; conjunctive queries run on the exhaustive scorer).
-        ``profile``: optional dict filled as the module doc describes."""
+        """``mode``: 'blockmax' or 'exhaustive'; ``operator``: 'or' or 'and'
+        (module doc).  ``profile``: optional dict filled as the module doc
+        describes."""
+        if mode not in ("blockmax", "exhaustive"):
+            raise ValueError(f"mode must be 'blockmax' or 'exhaustive', not {mode!r}")
+        if operator not in ("or", "and"):
+            raise ValueError(f"operator must be 'or' or 'and', not {operator!r}")
+        require_all = operator == "and"
         prof = {} if profile is None else profile
         t0 = time.perf_counter()
         _, _, avgdl, dl_col = self._field_conf(field)
         terms = self.query_terms(query, field)
-        if operator == "and":
-            path = "and"
-        elif mode == "exhaustive":
+        if mode == "exhaustive":
             path = "exhaustive"
         elif self.local is not None and doc_filter is None:
             path = "local"
@@ -146,13 +154,13 @@ class Searcher:
         t1 = time.perf_counter()
         prof.update(
             path=path, terms=terms, analyze_ms=(t1 - t0) * 1000,
-            ranges_scored=None if path in ("exhaustive", "and") else 0,
+            ranges_scored=None if path == "exhaustive" else 0,
         )
 
         if path == "local":
-            table = self.local.search(terms, k, avgdl, dl_col, with_docs, prof)
+            table = self.local.search(terms, k, avgdl, dl_col, with_docs, prof, require_all)
             t2 = time.perf_counter()
-            schema = HITS + (", url string, lang string" if with_docs else "")
+            schema = HITS_WITH_DOCS if with_docs else HITS
             out = self.spark.createDataFrame(table, schema)  # job-free, see hits_frame
             prof["result_ms"] = (time.perf_counter() - t2) * 1000
             return out
@@ -164,11 +172,12 @@ class Searcher:
             hits = search_blockmax(
                 self.spark, self.segments, self.term_stats, docs_side, terms, k,
                 avgdl, doc_filter, n_ranges_hint=self.n_ranges, profile=prof,
+                require_all=require_all,
             )
         else:
             hits = search_exhaustive(
                 self.segments, self.term_stats, docs_side, terms, k, avgdl,
-                doc_filter, require_all=path == "and",
+                doc_filter, require_all=require_all,
             )
         t2 = time.perf_counter()
         prof["score_ms"] = (t2 - t1) * 1000

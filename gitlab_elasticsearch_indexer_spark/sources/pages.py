@@ -82,15 +82,27 @@ def pages_pluralized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The UAX#29-divergent words pages_uax29 plants, one of each list per doc
+# (picked by doc_id residue).  tests/test_functions.py pins every one of
+# them against the engine, UAX29_ORACLE_TOKEN_RE and the [^\W_]+ split.
+UAX29_CONTRACTIONS = ("don't", "can't", "won't", "o'clock", "isn't")
+UAX29_UNDERSCORED = ("foo_bar", "max_len", "tmp_dir")
+UAX29_ACRONYMS = ("u.s.a", "e.g", "i.e", "a.b.c")
+
+
+def _sql_pick(words: tuple[str, ...]) -> str:
+    quoted = ",".join("'" + w.replace("'", "''") + "'" for w in words)
+    return f"[{quoted}][CAST(doc_id % {len(words)} AS INT) + 1]"
+
+
 # DuckDB twin of pages_uax29's text derivation (kept adjacent so the two
 # stay in lockstep; entry_queries interpolates it into the oracle SQL).
 UAX29_TEXT_SQL = (
-    "text || ' ' || ['don''t','can''t','won''t','o''clock','isn''t']"
-    "[CAST(doc_id % 5 AS INT) + 1]"
+    f"text || ' ' || {_sql_pick(UAX29_CONTRACTIONS)}"
     " || ' ' || CAST(doc_id % 7 AS VARCHAR) || '.' || CAST(doc_id % 13 AS VARCHAR)"
     " || ' 1,' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')"
-    " || ' ' || ['foo_bar','max_len','tmp_dir'][CAST(doc_id % 3 AS INT) + 1]"
-    " || ' ' || ['u.s.a','e.g','i.e','a.b.c'][CAST(doc_id % 4 AS INT) + 1]"
+    f" || ' ' || {_sql_pick(UAX29_UNDERSCORED)}"
+    f" || ' ' || {_sql_pick(UAX29_ACRONYMS)}"
 )
 
 # RE2-compatible tokenizer (DuckDB regexp_extract_all) that is EXACT for
@@ -123,22 +135,17 @@ def pages_uax29(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules regress.  Reference: standard tokenizer in the mapping,
     elastic/index.go:30-36."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    contr = F.element_at(
-        F.array(*[F.lit(x) for x in ("don't", "can't", "won't", "o'clock", "isn't")]),
-        (F.col("doc_id") % 5 + 1).cast("int"),
-    )
-    under = F.element_at(
-        F.array(*[F.lit(x) for x in ("foo_bar", "max_len", "tmp_dir")]),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    )
-    acro = F.element_at(
-        F.array(*[F.lit(x) for x in ("u.s.a", "e.g", "i.e", "a.b.c")]),
-        (F.col("doc_id") % 4 + 1).cast("int"),
-    )
+
+    def pick(words: tuple[str, ...]):
+        return F.element_at(
+            F.array(*[F.lit(x) for x in words]),
+            (F.col("doc_id") % len(words) + 1).cast("int"),
+        )
+
     text2 = F.concat(
         F.col("text"),
         F.lit(" "),
-        contr,
+        pick(UAX29_CONTRACTIONS),
         F.lit(" "),
         (F.col("doc_id") % 7).cast("string"),
         F.lit("."),
@@ -146,9 +153,9 @@ def pages_uax29(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(" 1,"),
         F.lpad((F.col("doc_id") % 1000).cast("string"), 3, "0"),
         F.lit(" "),
-        under,
+        pick(UAX29_UNDERSCORED),
         F.lit(" "),
-        acro,
+        pick(UAX29_ACRONYMS),
     )
     return docs.select(
         F.concat(

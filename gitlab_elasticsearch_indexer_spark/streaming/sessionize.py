@@ -17,7 +17,7 @@ by user_id hash partitioning, the natural key."""
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession

@@ -225,25 +225,31 @@ class TestAnalyzers:
         import re
 
         from gitlab_elasticsearch_indexer_spark.sources.pages import (
+            UAX29_ACRONYMS,
+            UAX29_CONTRACTIONS,
             UAX29_ORACLE_TOKEN_RE,
+            UAX29_UNDERSCORED,
         )
 
-        cases = {
-            "don't o'clock isn't": ["don't", "o'clock", "isn't"],
-            "3.14 1,042 0.12": ["3.14", "1,042", "0.12"],
-            "foo_bar max_len tmp_dir": ["foo_bar", "max_len", "tmp_dir"],
-            "u.s.a e.g i.e a.b.c": ["u.s.a", "e.g", "i.e", "a.b.c"],
-            "key agg row scan": ["key", "agg", "row", "scan"],
-        }
+        # every word the corpus plants, plus samples of its two numeric forms
+        # (doc_id % 7 "." doc_id % 13, and "1," followed by three digits)
+        planted = [
+            *UAX29_CONTRACTIONS, *UAX29_UNDERSCORED, *UAX29_ACRONYMS,
+            "3.14", "1,042", "0.12",
+        ]
         oracle_re = re.compile(UAX29_ORACLE_TOKEN_RE.replace("''", "'"))
         old_re = re.compile(r"[^\W_]+", re.UNICODE)
-        for text, want in cases.items():
-            got = analysis.analyze_standard(text)
-            assert got == want, text
-            assert oracle_re.findall(text.lower()) == want, text
-            old = [t.lower() for t in old_re.findall(text)]
-            if text != "key agg row scan":  # plain words: no divergence
-                assert old != want, (text, "old approximation should diverge")
+        for word in planted:
+            assert analysis.analyze_standard(word) == [word], word
+            assert oracle_re.findall(word) == [word], word
+            old = [t.lower() for t in old_re.findall(word)]
+            assert old != [word], (word, "old approximation should diverge")
+        text = " ".join(planted)
+        assert analysis.analyze_standard(text) == planted
+        assert oracle_re.findall(text) == planted
+        plain = "key agg row scan"  # plain words: no divergence
+        assert analysis.analyze_standard(plain) == plain.split()
+        assert oracle_re.findall(plain) == old_re.findall(plain) == plain.split()
 
     def test_offset_and_plain_chains_tokenize_identically(self):
         """Both paths tokenize the ORIGINAL string then lower per token —

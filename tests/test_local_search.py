@@ -1,7 +1,7 @@
 """The in-process block-max path (operators/local_search.py): rank identity
-with the Spark scorers on every test index and on chained snapshots, one
-output schema for every path, the query profile, zero Spark jobs per local
-query, and thread safety of a shared Searcher."""
+with the Spark scorers on every test index and on chained snapshots, under
+both operators, one output schema for every path, the query profile, zero
+Spark jobs per local query, and thread safety of a shared Searcher."""
 
 import json
 import os
@@ -12,6 +12,7 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
+from gitlab_elasticsearch_indexer_spark.operators import wand
 from gitlab_elasticsearch_indexer_spark.operators.wand import search_blockmax
 from gitlab_elasticsearch_indexer_spark.plans.build_index import build_index
 from gitlab_elasticsearch_indexer_spark.plans.incremental import apply_delta
@@ -100,64 +101,92 @@ def _rank_equal(got, want):
     assert got["score"].tolist() == pytest.approx(want["score"].tolist(), rel=1e-12)
 
 
-def _check_paths(spark, s: Searcher, query: str, k: int, field: str = "content"):
-    prof: dict = {}
-    local = s.search(query, k=k, with_docs=False, field=field, profile=prof).toPandas()
-    assert prof["path"] == "local"
-    ex = s.search(query, k=k, mode="exhaustive", with_docs=False, field=field).toPandas()
-    _rank_equal(local, ex)
+# search_blockmax forced into regime 2, then regime 3, on a small index
+REGIMES = (
+    {"range_batch": 1, "n_ranges_hint": 1},
+    {"range_batch": 1, "n_ranges_hint": 10**6, "super_threshold": 1, "super_shift": 1},
+)
+
+
+def _spark_blockmax(spark, s: Searcher, query, k, field="content", operator="or",
+                    doc_filter=None, **regime):
     _, _, avgdl, dl_col = s._field_conf(field)
-    regime2 = search_blockmax(
+    return search_blockmax(
         spark, s.segments, s.term_stats, s.docs.withColumn("dl", F.col(dl_col)),
-        s.query_terms(query, field), k, avgdl, range_batch=1, n_ranges_hint=10**6,
+        s.query_terms(query, field), k, avgdl, doc_filter,
+        require_all=operator == "and", **regime,
     ).toPandas()
-    _rank_equal(local, regime2)
+
+
+def _check_paths(spark, s: Searcher, query: str, k: int, field: str = "content",
+                 operator: str = "or"):
+    """local ≡ exhaustive ≡ Spark blockmax in regimes 2 and 3, under ``operator``."""
+    prof: dict = {}
+    kw = dict(k=k, with_docs=False, field=field, operator=operator)
+    local = s.search(query, profile=prof, **kw).toPandas()
+    assert prof["path"] == "local"
+    _rank_equal(local, s.search(query, mode="exhaustive", **kw).toPandas())
+    for regime in REGIMES:
+        _rank_equal(local, _spark_blockmax(spark, s, query, k, field, operator, **regime))
     return local
 
 
-@pytest.mark.parametrize("query,k", QUERIES)
-def test_simple_index(spark, simple_idx, query, k):
+def under_operators(cases):
+    """Each case under ``or`` (id unchanged) and under ``and`` (id + "-and")."""
+    return [
+        pytest.param(*case, op, id="-".join(map(str, case)) + suffix)
+        for op, suffix in (("or", ""), ("and", "-and"))
+        for case in cases
+    ]
+
+
+@pytest.mark.parametrize("query,k,operator", under_operators(QUERIES))
+def test_simple_index(spark, simple_idx, query, k, operator):
     s = Searcher(spark, simple_idx)
-    got = _check_paths(spark, s, query, k)
+    got = _check_paths(spark, s, query, k, operator=operator)
     if query in ("", "?! ... ,;", "zzzqqq xyzzy"):
         assert len(got) == 0
     if k == 1000:
         assert 0 < len(got) < k  # every match returned
 
 
-@pytest.mark.parametrize("query,k", [("tables values queries", 10), *QUERIES])
-def test_default_index(spark, default_idx, query, k):
-    _check_paths(spark, Searcher(spark, default_idx), query, k)
+@pytest.mark.parametrize(
+    "query,k,operator", under_operators([("tables values queries", 10), *QUERIES])
+)
+def test_default_index(spark, default_idx, query, k, operator):
+    _check_paths(spark, Searcher(spark, default_idx), query, k, operator=operator)
 
 
-@pytest.mark.parametrize("query,k", QUERIES)
-def test_offsets_index(spark, offsets_idx, query, k):
-    _check_paths(spark, Searcher(spark, offsets_idx), query, k)
+@pytest.mark.parametrize("query,k,operator", under_operators(QUERIES))
+def test_offsets_index(spark, offsets_idx, query, k, operator):
+    _check_paths(spark, Searcher(spark, offsets_idx), query, k, operator=operator)
 
 
-@pytest.mark.parametrize("query,k", [("doc7.html", 5), ("example.com src3", 50), ("", 5)])
-def test_url_field(spark, chain_idx, query, k):
+@pytest.mark.parametrize(
+    "query,k,operator", under_operators([("doc7.html", 5), ("example.com src3", 50), ("", 5)])
+)
+def test_url_field(spark, chain_idx, query, k, operator):
     s = Searcher(spark, chain_idx, snapshot="s1")  # the chain's base: a url path field
-    got = _check_paths(spark, s, query, k, field="url")
+    got = _check_paths(spark, s, query, k, field="url", operator=operator)
     if query == "doc7.html":
         assert got["docid"].tolist() == [7 * 64]
 
 
 @pytest.mark.parametrize("snap", ["d1", "d2"])
 @pytest.mark.parametrize(
-    "query,k,field",
-    [
+    "query,k,field,operator",
+    under_operators([
         ("query", 20, "content"),
         ("edited0 edited1", 1000, "content"),
         ("added0 added1 spark", 1000, "content"),
         ("customer data", 50, "content"),
         ("doc1.html doc5.html", 5, "url"),
-    ],
+    ]),
 )
-def test_chained_snapshot(spark, chain_idx, snap, query, k, field):
+def test_chained_snapshot(spark, chain_idx, snap, query, k, field, operator):
     s = Searcher(spark, chain_idx, snapshot=snap)
     assert s.catalog.chain_depth == int(snap[1]) and s.local is not None
-    got = _check_paths(spark, s, query, k, field)
+    got = _check_paths(spark, s, query, k, field, operator)
     live = set(s.docs.select("docid").toPandas()["docid"])
     assert set(got["docid"]) <= live  # no deleted or replaced doc scores
 
@@ -175,6 +204,76 @@ def test_chain_marks_every_delta_doc(spark, chain_idx):
     assert s.local.docid.size == s.catalog.n_docs
 
 
+def test_and_absent_term_reads_no_block(spark, simple_idx, monkeypatch):
+    """A query term the index lacks empties an ``and`` query on every path,
+    and neither block-max driver reads a block for it."""
+    s = Searcher(spark, simple_idx)
+    query = "spark data zzzqqq"
+    assert len(s.search(query, with_docs=False).toPandas()) > 0  # `or` matches
+
+    def no_block_read(*args, **kwargs):
+        raise AssertionError("blocks read for a query that cannot match")
+
+    monkeypatch.setattr(s.local, "read_blocks", no_block_read)
+    monkeypatch.setattr(wand, "filter_segments_for_terms", no_block_read)
+    prof: dict = {}
+    assert len(s.search(query, operator="and", profile=prof).toPandas()) == 0
+    assert prof["path"] == "local" and prof["ranges_scored"] == 0
+    assert len(s.search(query, operator="and", doc_filter=F.lit(True)).toPandas()) == 0
+    for regime in REGIMES:
+        assert len(_spark_blockmax(spark, s, query, 10, operator="and", **regime)) == 0
+    assert len(s.search(query, mode="exhaustive", operator="and").toPandas()) == 0
+
+
+@pytest.mark.parametrize("query", ["query", "customer"])
+def test_single_term_and_equals_or(spark, simple_idx, query):
+    s = Searcher(spark, simple_idx)
+    for kwargs in ({}, {"mode": "exhaustive"}, {"doc_filter": F.lit(True)}):
+        want = s.search(query, k=10, with_docs=False, **kwargs).toPandas()
+        got = s.search(query, k=10, with_docs=False, operator="and", **kwargs).toPandas()
+        assert len(want) > 0
+        assert got.to_dict("list") == want.to_dict("list"), kwargs
+
+
+def test_and_with_doc_filter(spark, simple_idx):
+    """``and`` plus a ``doc_filter`` (the Spark blockmax path) matches the
+    exhaustive scorer and the forced regimes, and the filter bites."""
+    s = Searcher(spark, simple_idx)
+    query, flt = "spark data", F.col("lang") == "en"
+    prof: dict = {}
+    got = s.search(query, k=1000, operator="and", doc_filter=flt, with_docs=False, profile=prof)
+    got = got.toPandas()
+    assert prof["path"] == "blockmax"
+    ex = s.search(query, k=1000, mode="exhaustive", operator="and", doc_filter=flt, with_docs=False)
+    _rank_equal(got, ex.toPandas())
+    for regime in REGIMES:
+        _rank_equal(got, _spark_blockmax(spark, s, query, 1000, "content", "and", flt, **regime))
+    unfiltered = s.search(query, k=1000, operator="and", with_docs=False).toPandas()
+    assert 0 < len(got) and set(got["docid"]) < set(unfiltered["docid"])
+
+
+def test_and_terms_in_disjoint_ranges(spark, chain_idx):
+    """Terms that never share a docid_range: every range lacks a term, so
+    ``and`` returns nothing on every path."""
+    s = Searcher(spark, chain_idx, snapshot="d2")
+    query = "added0 added1"
+    terms = s.query_terms(query)
+    blocks = s.local.read_blocks(terms).to_pandas()
+    ranges = [set(blocks["docid_range"][blocks["term"] == t]) for t in terms]
+    assert all(ranges) and not ranges[0] & ranges[1]
+    assert len(s.search(query, k=10, with_docs=False).toPandas()) > 0  # `or` matches
+    assert len(_check_paths(spark, s, query, 10, operator="and")) == 0
+
+
+@pytest.mark.parametrize(
+    "kwargs", [{"mode": "exhastive"}, {"mode": "BLOCKMAX"}, {"operator": "AND"}, {"operator": "must"}]
+)
+def test_unknown_mode_or_operator_raises(spark, simple_idx, kwargs):
+    s = Searcher(spark, simple_idx)
+    with pytest.raises(ValueError, match=next(iter(kwargs))):
+        s.search("spark data query", **kwargs)
+
+
 def test_output_schema_matches_spark_paths(spark, simple_idx):
     s = Searcher(spark, simple_idx)
 
@@ -188,7 +287,7 @@ def test_output_schema_matches_spark_paths(spark, simple_idx):
             for spark_df in (
                 s.search(query, k=5, with_docs=with_docs, mode="exhaustive"),
                 s.search(query, k=5, with_docs=with_docs, doc_filter=keep_all),
-                s.search(query, k=5, with_docs=with_docs, operator="and"),
+                s.search(query, k=5, with_docs=with_docs, mode="exhaustive", operator="and"),
             ):
                 assert fields(local) == fields(spark_df)
             ex = s.search(query, k=5, with_docs=with_docs, mode="exhaustive")
@@ -202,15 +301,18 @@ def test_local_query_launches_no_spark_job(spark, simple_idx):
     s = Searcher(spark, simple_idx)
     sc = spark.sparkContext
     try:
-        for i, (query, k) in enumerate(QUERIES):
+        for i, ((query, k), operator) in enumerate(
+            (q, op) for q in QUERIES for op in ("or", "and")
+        ):
             group = f"local-query-{i}"
             sc.setJobGroup(group, group)
             prof: dict = {}
-            rows = s.search(query, k=k, profile=prof).collect()
-            assert sc.statusTracker().getJobIdsForGroup(group) == [], query
+            rows = s.search(query, k=k, operator=operator, profile=prof).collect()
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], (query, operator)
             assert prof["path"] == "local"
             assert prof["terms"] == s.query_terms(query)
-            assert (prof["ranges_scored"] > 0) == bool(rows)
+            if rows or operator == "or":  # an `and` may score ranges and match nothing
+                assert (prof["ranges_scored"] > 0) == bool(rows)
             for phase in ("analyze_ms", "read_ms", "score_ms", "result_ms"):
                 assert prof[phase] >= 0.0
     finally:
@@ -221,15 +323,17 @@ def test_profile_on_spark_paths(spark, simple_idx):
     s = Searcher(spark, simple_idx)
     cases = [
         ({"mode": "exhaustive"}, "exhaustive"),
-        ({"operator": "and"}, "and"),
+        ({"operator": "and"}, "local"),
+        ({"mode": "exhaustive", "operator": "and"}, "exhaustive"),
         ({"doc_filter": F.col("lang") == "en"}, "blockmax"),
+        ({"doc_filter": F.col("lang") == "en", "operator": "and"}, "blockmax"),
     ]
     for kwargs, path in cases:
         prof: dict = {}
         s.search("spark data query", k=5, profile=prof, **kwargs).collect()
         assert prof["path"] == path
         assert prof["terms"] == ["spark", "data", "query"]
-        assert (prof["ranges_scored"] is None) == (path != "blockmax")
+        assert (prof["ranges_scored"] is None) == (path == "exhaustive")
         assert {"analyze_ms", "score_ms", "result_ms"} <= prof.keys()
 
 

@@ -722,7 +722,7 @@ class TestRankIdentity:
         ).toPandas()
         batched = search_blockmax(
             spark, s.segments, s.term_stats, s.docs, terms, k, s.catalog.avgdl,
-            range_batch=1, n_ranges_hint=10**6,  # hint forces regime 2
+            range_batch=1, n_ranges_hint=1,  # a hint ≤ super_threshold: regime 2
         ).toPandas()
         assert batched["docid"].tolist() == ex["docid"].tolist(), query
         two_level = search_blockmax(
@@ -1585,7 +1585,7 @@ class TestBlockmaxSkipping:
         terms = ["customer"]
         bm = search_blockmax(
             spark, s.segments, s.term_stats, s.docs, terms, 5, s.catalog.avgdl,
-            range_batch=4, n_ranges_hint=10**6,  # force regime 2
+            range_batch=4, n_ranges_hint=1,  # force regime 2
             profile=stats,
         ).toPandas()
         ex = search_exhaustive(
