@@ -244,16 +244,20 @@ def encode_positions(position_lists: list[np.ndarray]) -> bytes:
     return varint_encode(np.concatenate(parts))
 
 
-def decode_positions(buf: bytes, n_postings: int) -> list[np.ndarray]:
+def decode_positions(buf: bytes, tfs: np.ndarray) -> np.ndarray:
+    """Every posting's positions, concatenated in posting order, in whole-block
+    numpy passes: posting i holds ``tfs[i]`` positions, so its length prefix
+    sits at a known offset and no per-posting loop is needed."""
+    tfs = np.asarray(tfs, dtype=np.int64)
     flat = varint_decode(buf).astype(np.int64)
-    out: list[np.ndarray] = []
-    i = 0
-    for _ in range(n_postings):
-        n = int(flat[i])
-        deltas = flat[i + 1 : i + 1 + n]
-        out.append(np.cumsum(deltas))
-        i += 1 + n
-    return out
+    heads = np.cumsum(tfs + 1) - (tfs + 1)
+    if flat.size != heads.size + tfs.sum() or not np.array_equal(flat[heads], tfs):
+        raise ValueError("positions payload does not match the block's tfs")
+    body = np.ones(flat.size, dtype=bool)
+    body[heads] = False
+    pos = np.cumsum(flat[body])  # deltas; each posting's first value is absolute
+    before = np.concatenate(([0], pos))[np.cumsum(tfs) - tfs]
+    return pos - np.repeat(before, tfs)
 
 
 def encode_offsets(offset_lists: list[tuple[np.ndarray, np.ndarray]]) -> bytes:

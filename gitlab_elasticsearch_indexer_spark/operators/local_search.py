@@ -33,7 +33,7 @@ import pyarrow.parquet as pq
 from ..config import DOCS_PER_RANGE
 from ..sources import catalog as cat
 from .search import query_buckets
-from .wand import BLOCK_COLS, score_range, top_k
+from .wand import BLOCK_COLS, PHRASE_COLS, score_range, top_k
 
 
 def _read_only(a: np.ndarray) -> np.ndarray:
@@ -76,12 +76,12 @@ class LocalIndex:
         pos = np.minimum(np.searchsorted(self.terms, terms), len(self.terms) - 1)
         return {t: float(self.idf[p]) for t, p in zip(terms, pos) if self.terms[p] == t}
 
-    def read_blocks(self, terms: list[str]) -> pa.Table:
-        """The terms' blocks of the live docid_ranges, across the chain."""
+    def read_blocks(self, terms: list[str], cols: list[str] = BLOCK_COLS) -> pa.Table:
+        """The terms' blocks (``cols``) of the live docid_ranges, across the chain."""
         want = ds.field("bucket").isin(query_buckets(terms)) & ds.field("term").isin(terms)
         parts = [
             seg.to_table(
-                columns=["docid_range", *BLOCK_COLS],
+                columns=["docid_range", *cols],
                 filter=want & ~ds.field("docid_range").isin(claimed) if claimed else want,
             )
             for seg, claimed in self.segments
@@ -91,20 +91,23 @@ class LocalIndex:
     def search(
         self, terms: list[str], k: int, avgdl: float, dl_col: str,
         with_docs: bool, profile: dict, require_all: bool = False,
+        phrase: list[str] | None = None,
     ) -> pa.Table:
-        """→ (docid, score[, url, lang]) top-k, (score desc, docid asc)."""
+        """→ (docid, score[, url, lang]) top-k, (score desc, docid asc);
+        ``require_all`` and ``phrase`` as in wand.score_range."""
         t0 = time.perf_counter()
         idf_by_term = self.idf_of(terms)
         if require_all and len(idf_by_term) < len(set(terms)):
             idf_by_term = {}  # a term the index lacks: no doc has them all
-        blocks = self.read_blocks(list(idf_by_term)) if idf_by_term else None
+        cols = PHRASE_COLS if phrase else BLOCK_COLS
+        blocks = self.read_blocks(list(idf_by_term), cols) if idf_by_term else None
         t1 = time.perf_counter()
         docids, scores = np.empty(0, np.int64), np.empty(0, np.float64)
         n_ranges = 0
         if blocks is not None and blocks.num_rows:
             blocks = blocks.sort_by("docid_range")
             rng = blocks["docid_range"].to_numpy()
-            cols = {c: blocks[c].to_numpy() for c in BLOCK_COLS}
+            arrays = {c: blocks[c].to_numpy() for c in cols}
             ranges, starts = np.unique(rng, return_index=True)
             ends = np.append(starts[1:], len(rng))
             lo = np.searchsorted(self.docid, ranges * DOCS_PER_RANGE)
@@ -113,8 +116,8 @@ class LocalIndex:
             per_range = [
                 score_range(
                     int(r) * DOCS_PER_RANGE,
-                    {c: v[s:e] for c, v in cols.items()},
-                    self.docid[a:z], dl[a:z], idf_by_term, avgdl, k, require_all,
+                    {c: v[s:e] for c, v in arrays.items()},
+                    self.docid[a:z], dl[a:z], idf_by_term, avgdl, k, require_all, phrase,
                 )
                 for r, s, e, a, z in zip(ranges, starts, ends, lo, hi)
             ]

@@ -32,10 +32,7 @@ from .postings import decode_segments
 def analyze_query(query: str, analyzer: str) -> list[str]:
     """Match-query semantics: analyze with the field's analyzer, then OR the
     distinct terms (elastic default operator, SURVEY.md Q2)."""
-    seen: dict[str, None] = {}
-    for t in ANALYZERS[analyzer](query):
-        seen.setdefault(t, None)
-    return list(seen)
+    return list(dict.fromkeys(ANALYZERS[analyzer](query)))
 
 
 def analyze_query_seq(query: str, analyzer: str) -> list[str]:
@@ -95,13 +92,12 @@ def search_exhaustive(
     term_stats: DataFrame,
     docs: DataFrame,
     query_terms: list[str],
-    k: int | None,
+    k: int,
     avgdl: float,
     doc_filter: Column | None = None,
     require_all: bool = False,
 ) -> DataFrame:
     """→ (docid, score) top-k, tie-break (score desc, docid asc).
-    ``k=None`` scores everything (no TakeOrdered truncation).
     ``require_all``: conjunctive match-query semantics (ES
     ``operator: and``) — only docs containing every query term score."""
     if not query_terms:
@@ -130,81 +126,4 @@ def search_exhaustive(
     if require_all:
         scored = scored.filter(F.col("n_matched") == len(set(query_terms)))
     scored = scored.drop("n_matched")
-    ranked = scored.orderBy(F.desc("score"), F.asc("docid"))
-    return ranked if k is None else ranked.limit(k)
-
-
-def phrase_filter_docids(
-    segments: DataFrame,
-    phrase_terms: list[str],
-) -> DataFrame:
-    """Positions-based phrase matching (index_options=positions, §1.4):
-    returns docids where the phrase-term SEQUENCE (order and duplicates
-    preserved) appears at consecutive positions.
-
-    Distributed shape: segments group by ``docid_range`` — the same
-    bounded-salt unit the block-max scorer parallelizes over — so a phrase
-    on two Zipf head terms fans out as n_docs/DOCS_PER_RANGE independent
-    tasks instead of funnelling every posting through one partition.
-    Within a range the kernel first intersects docid sets per distinct term
-    (numpy), then checks positional adjacency only for the surviving
-    candidates."""
-    import numpy as np
-    import pandas as pd
-
-    from ..config import DOCS_PER_RANGE
-    from ..functions import codec
-
-    n = len(phrase_terms)
-    if n == 0:
-        empty = pa.table({"docid": pa.array([], pa.int64())})  # job-free, see hits_frame
-        return segments.sparkSession.createDataFrame(empty, "docid long")
-    distinct_terms = list(dict.fromkeys(phrase_terms))
-    seg = filter_segments_for_terms(segments, distinct_terms).select(
-        "term", "docid_range", "n_docs", "docids_enc", "positions_enc"
-    )
-
-    def check_range(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"docid": pd.Series([], dtype="int64")})
-        if len(pdf) == 0:
-            return empty
-        by_term: dict[str, list] = {}
-        for r in pdf.itertuples(index=False):
-            base = int(r.docid_range) * DOCS_PER_RANGE
-            d = codec.decode_docids(r.docids_enc, base=base, count=r.n_docs)
-            p = codec.decode_positions(r.positions_enc, r.n_docs)
-            by_term.setdefault(r.term, []).append((d, p))
-        if len(by_term) < len(distinct_terms):
-            return empty  # some phrase term absent from this range entirely
-        # candidate docids: set-intersection across distinct terms (numpy)
-        cand = None
-        for t in distinct_terms:
-            docs_t = np.concatenate([c[0] for c in by_term[t]])
-            cand = docs_t if cand is None else np.intersect1d(cand, docs_t)
-            if cand.size == 0:
-                return empty
-        cand_set = set(int(x) for x in cand)
-        pos_map: dict[str, dict[int, np.ndarray]] = {t: {} for t in by_term}
-        for t, chunks in by_term.items():
-            m = pos_map[t]
-            for dd, pp in chunks:
-                for i_, d in enumerate(dd):
-                    di = int(d)
-                    if di in cand_set:
-                        m[di] = pp[i_]
-        hits = []
-        for d in sorted(cand_set):
-            # positions of the i-th phrase token shifted by -i must intersect
-            inter = None
-            ok = True
-            for idx, t in enumerate(phrase_terms):
-                shifted = pos_map[t][d] - idx
-                inter = shifted if inter is None else np.intersect1d(inter, shifted)
-                if inter.size == 0:
-                    ok = False
-                    break
-            if ok:
-                hits.append(d)
-        return pd.DataFrame({"docid": pd.Series(hits, dtype="int64")})
-
-    return seg.groupBy("docid_range").applyInPandas(check_range, schema="docid long")
+    return scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)

@@ -31,6 +31,12 @@ Conjunctive queries (``operator="and"``) run the same kernel with
 a doc scores only if its valid postings cover every term (one count from the
 ``np.unique`` that sums the scores).  A term without idf empties the query.
 
+Phrase queries (``phrase``: the token sequence) are conjunctive queries plus
+a positions check on the docs that pass the count (``_phrase_docids``; only
+phrase queries read ``positions_enc``).  A phrase can reject a doc after it
+scored, so block-level skipping is off for two or more tokens, one repeated
+term included; range-level pruning stays exact (a phrase scores ≤ ``or``).
+
 Safety: a bound is the scoring expression itself (functions/bm25.bm25)
 evaluated at a block's (max_tf, min_dl), so it rounds exactly like the
 score of a posting with that tf and dl and never falls below a score it
@@ -38,10 +44,11 @@ covers, not even by one ulp on a tie; every driver is rank-identical to the
 exhaustive scorer — asserted in tests/test_pipeline.py and
 tests/test_local_search.py.
 
-The Spark driver joins doc lengths via ``cogroup(segments,
-docs).applyInPandas`` on docid_range — both sides are partitioned by the
-same key, and the optional metadata filter (Q7: lang / permission ints) is
-applied to the docs side *before* the cogroup so filtered docs never score.
+The Spark driver scores a batch of ranges with ``score_batch``: a
+``cogroup(segments, docs).applyInPandas`` on docid_range — both sides are
+partitioned by the same key, and the optional metadata filter (Q7: lang /
+permission ints) is applied to the docs side *before* the cogroup so
+filtered docs never score.
 """
 
 from __future__ import annotations
@@ -56,9 +63,10 @@ from ..functions import codec
 from ..functions.bm25 import bm25
 from .search import HITS, filter_segments_for_terms, hits_frame
 
-# block columns the range kernel reads (positions/offsets payloads are never
-# decoded for scoring, so neither driver reads them)
+# block columns the range kernel reads: positions are decoded only under a
+# phrase and offsets never, so neither driver reads them otherwise
 BLOCK_COLS = ["term", "n_docs", "max_tf", "min_dl", "docids_enc", "tfs_enc"]
+PHRASE_COLS = BLOCK_COLS + ["positions_enc"]
 # ranges scored per Spark batch; an index with at most this many ranges is
 # served in process (plans/search.py) and never reaches search_blockmax
 RANGE_BATCH = 256
@@ -73,24 +81,28 @@ def score_range(
     avgdl: float,
     k: int,
     require_all: bool = False,
+    phrase: list[str] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """The range kernel: exact BM25 top-k of one docid_range → (docids,
     scores) ordered (score desc, docid asc).
 
-    ``blocks`` maps each of BLOCK_COLS to the range's block column (numpy
-    arrays; the *_enc columns hold bytes); ``dl_docids`` (sorted) and
-    ``dl_vals`` are the range's docs after any metadata filter — postings of
-    docs not listed there never score, nor, under ``require_all``
-    (``operator="and"``), docs lacking a term of ``idf_by_term``."""
+    ``blocks`` maps each of BLOCK_COLS (PHRASE_COLS for a phrase) to the
+    range's block column (numpy arrays; the *_enc columns hold bytes);
+    ``dl_docids`` (sorted) and ``dl_vals`` are the range's docs after any
+    metadata filter — postings of docs not listed there never score, nor,
+    under ``require_all`` (``operator="and"``), docs lacking a term of
+    ``idf_by_term``, nor, under a ``phrase`` (2+ of those terms, in order),
+    docs not holding it."""
     empty = np.empty(0, np.int64), np.empty(0, np.float64)
     terms = blocks["term"]
     if len(terms) == 0 or len(dl_docids) == 0:
         return empty
+    require_all = require_all or phrase is not None
     n_terms = len(set(terms))
     if require_all and n_terms < len(idf_by_term):
         return empty  # a query term has no block in this range
     idf = np.array([idf_by_term[t] for t in terms], dtype=np.float64)
-    single_term = n_terms == 1
+    single_term = n_terms == 1 and phrase is None  # skipping: see module doc
     if single_term:
         bound = bm25(
             idf,
@@ -106,6 +118,7 @@ def score_range(
 
     all_docids: list[np.ndarray] = []
     all_scores: list[np.ndarray] = []
+    decoded: list[tuple[int, np.ndarray, np.ndarray]] = []  # phrase only
     top = np.empty(0, np.float64)  # local top-k scores, single-term skipping only
     kth = -np.inf
     for i in order:
@@ -113,14 +126,16 @@ def score_range(
             break  # block-max skip: no remaining block can enter top-k
         n = int(blocks["n_docs"][i])
         docids = codec.decode_docids(blocks["docids_enc"][i], base=base, count=n)
-        tfs = codec.decode_tfs(blocks["tfs_enc"][i], count=n).astype(np.float64)
+        tfs = codec.decode_tfs(blocks["tfs_enc"][i], count=n)
         pos = np.searchsorted(dl_docids, docids)
         valid = (pos < len(dl_docids)) & (
             dl_docids[np.clip(pos, 0, len(dl_docids) - 1)] == docids
         )
         if not valid.any():
             continue
-        docids, tfs, pos = docids[valid], tfs[valid], pos[valid]
+        if phrase is not None:
+            decoded.append((i, docids, tfs))
+        docids, tfs, pos = docids[valid], tfs[valid].astype(np.float64), pos[valid]
         dl = dl_vals[pos].astype(np.float64)
         scores = bm25(idf[i], tfs, dl, avgdl)
         all_docids.append(docids)
@@ -141,7 +156,29 @@ def score_range(
     if require_all:  # one posting per (doc, term) in a range: count = terms matched
         full = counts[0] == n_terms
         uniq, totals = uniq[full], totals[full]
+    if phrase is not None and len(uniq):
+        held = np.isin(uniq, _phrase_docids(base, blocks, decoded, uniq, phrase))
+        uniq, totals = uniq[held], totals[held]
     return top_k(uniq, totals, k)
+
+
+def _phrase_docids(base, blocks, decoded, candidates, phrase) -> np.ndarray:
+    """The ``candidates`` holding ``phrase`` at consecutive positions: token
+    j at position p keys (doc, p - j), and a doc matches where one key is
+    shared by every token — a sorted intersection per token, so "value
+    value" needs two adjacent values.  ``decoded`` lists (block, docids,
+    tfs); only blocks holding a candidate decode their positions."""
+    keys_of: dict[str, list[np.ndarray]] = {}
+    for i, docids, tfs in decoded:
+        hit = np.repeat(np.isin(docids, candidates), tfs)
+        if hit.any():  # key: local docid in the high bits, position + n below
+            pos = codec.decode_positions(blocks["positions_enc"][i], tfs)
+            key = (np.repeat(docids - base, tfs) << 32) + pos + len(phrase)
+            keys_of.setdefault(blocks["term"][i], []).append(key[hit])
+    keys = np.concatenate(keys_of[phrase[0]])
+    for j, t in enumerate(phrase[1:], 1):
+        keys = np.intersect1d(keys, np.concatenate(keys_of[t]) - j, assume_unique=True)
+    return (keys >> 32) + base
 
 
 def top_k(docids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
@@ -154,8 +191,18 @@ def top_k(docids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, n
     return docids[order], scores[order]
 
 
-def _make_range_scorer(idf_by_term: dict[str, float], avgdl: float, k: int, require_all: bool):
-    """The range kernel as a cogroup ``applyInPandas`` function."""
+def score_batch(
+    segments: DataFrame, docs: DataFrame, idf_by_term: dict[str, float], avgdl: float,
+    k: int, batch: list[int], require_all: bool = False, phrase: list[str] | None = None,
+) -> DataFrame:
+    """One Spark scoring batch → (docid, score) top-k of each of ``batch``'s
+    docid_ranges: the terms' blocks cogrouped with ``docs`` (docid, dl, after
+    any metadata filter) on docid_range, each group scored by the range
+    kernel in ``applyInPandas``."""
+    cols = PHRASE_COLS if phrase else BLOCK_COLS
+    seg = filter_segments_for_terms(segments, list(idf_by_term)).select("docid_range", *cols)
+    in_range = (F.col("docid") / F.lit(DOCS_PER_RANGE)).cast("long").alias("docid_range")
+    doc_side = docs.select("docid", "dl", in_range)
 
     def score_range_pdf(key, seg_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(seg_pdf) == 0 or len(docs_pdf) == 0:  # a side may lack columns
@@ -164,14 +211,19 @@ def _make_range_scorer(idf_by_term: dict[str, float], avgdl: float, k: int, requ
         dl_order = np.argsort(dl_docids)
         docids, scores = score_range(
             int(key[0]) * DOCS_PER_RANGE,
-            {c: seg_pdf[c].to_numpy() for c in BLOCK_COLS},
+            {c: seg_pdf[c].to_numpy() for c in cols},
             dl_docids[dl_order],
             docs_pdf["dl"].to_numpy(dtype=np.int64)[dl_order],
-            idf_by_term, avgdl, k, require_all,
+            idf_by_term, avgdl, k, require_all, phrase,
         )
         return pd.DataFrame({"docid": docids, "score": scores})
 
-    return score_range_pdf
+    in_batch = F.col("docid_range").isin(batch)
+    return (
+        seg.filter(in_batch).groupBy("docid_range")
+        .cogroup(doc_side.filter(in_batch).groupBy("docid_range"))
+        .applyInPandas(score_range_pdf, schema=HITS)
+    )
 
 
 def _range_bounds_df(seg: DataFrame, stats_df: DataFrame, avgdl: float) -> DataFrame:
@@ -209,9 +261,11 @@ def search_blockmax(
     super_threshold: int = 1 << 16,
     profile: dict | None = None,
     require_all: bool = False,
+    phrase: list[str] | None = None,
 ) -> DataFrame:
     """→ (docid, score) top-k, rank-identical to search_exhaustive (with the
-    same ``require_all``).
+    same ``require_all``; a ``phrase``, passed with ``require_all``, keeps
+    only the docs holding it, as in score_range).
 
     Two regimes, chosen by corpus size (``n_ranges_hint`` — callers pass
     ceil(n_docs / DOCS_PER_RANGE) from the catalog, so no job is needed to
@@ -239,30 +293,10 @@ def search_blockmax(
         term_stats.filter(F.col("term").isin(query_terms)).select("term", "idf")
     )
     stats = {r["term"]: float(r["idf"]) for r in stats_df.collect()}
-    live_terms = [t for t in query_terms if t in stats]
-    if not live_terms or (require_all and len(stats) < len(set(query_terms))):
+    if not stats or (require_all and len(stats) < len(set(query_terms))):
         return hits_frame(spark)
 
-    # project away the payload columns the scorer never decodes (positions/
-    # offsets) — parquet then skips those byte columns entirely
-    seg = filter_segments_for_terms(segments, live_terms).select(
-        "docid_range", *BLOCK_COLS
-    )
     doc_side = docs if doc_filter is None else docs.filter(doc_filter)
-    doc_side = doc_side.select(
-        "docid",
-        "dl",
-        (F.col("docid") / F.lit(DOCS_PER_RANGE)).cast("long").alias("docid_range"),
-    )
-    scorer = _make_range_scorer(stats, avgdl, k, require_all)
-
-    def cogroup_score(seg_part: DataFrame, docs_part: DataFrame) -> DataFrame:
-        return (
-            seg_part.groupBy("docid_range")
-            .cogroup(docs_part.groupBy("docid_range"))
-            .applyInPandas(scorer, schema=HITS)
-        )
-
     best = [np.empty(0, np.int64), np.empty(0, np.float64)]  # global top-k
 
     def kth() -> float:
@@ -270,11 +304,10 @@ def search_blockmax(
 
     scored_count = [0]
 
-    def score_batch(batch: list[int]) -> None:
+    def run_batch(batch: list[int]) -> None:
         scored_count[0] += len(batch)
-        part = cogroup_score(
-            seg.filter(F.col("docid_range").isin(batch)),
-            doc_side.filter(F.col("docid_range").isin(batch)),
+        part = score_batch(
+            segments, doc_side, stats, avgdl, k, batch, require_all, phrase
         ).toPandas()
         best[:] = top_k(
             np.concatenate([best[0], part["docid"].to_numpy(dtype=np.int64)]),
@@ -299,10 +332,10 @@ def search_blockmax(
                 i += 1
             if not batch:
                 break
-            score_batch(batch)
+            run_batch(batch)
 
     two_level = n_ranges_hint is not None and n_ranges_hint > super_threshold
-    rb = _range_bounds_df(seg, stats_df, avgdl)
+    rb = _range_bounds_df(filter_segments_for_terms(segments, list(stats)), stats_df, avgdl)
     n_total_ranges = 0
     if not two_level:
         # ---- regime 2: collect per-range bounds (one narrow agg job) ----

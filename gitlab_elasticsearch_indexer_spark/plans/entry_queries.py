@@ -366,9 +366,7 @@ SELECT CAST(doc_id AS BIGINT) AS docid, tf FROM tf WHERE term = 'customer' ORDER
 # --- ft_phrase_match: positions-backed phrase query (§1.4 positions) -------
 def _ft_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _searcher(spark, sf_dir, "pos", with_positions=True)
-    from ..operators.search import phrase_filter_docids
-
-    return phrase_filter_docids(s.segments, ["data", "query"]).select("docid")
+    return s.phrase_search("data query", k=s.catalog.n_docs).select("docid")
 
 
 register(

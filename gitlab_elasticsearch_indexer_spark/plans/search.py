@@ -21,6 +21,11 @@ every doc holding a query term, ``"and"`` only docs holding all of them —
 the local and blockmax paths pass it to the range kernel as
 ``require_all``, the exhaustive scorer filters on its matched-term count.
 
+``phrase_search`` routes the same way (``_top_k``) to ``local`` or
+``blockmax``: the range kernel scores the phrase as an ``and`` query of its
+terms and keeps the docs holding its token sequence (operators/wand.py; no
+block-level skipping for two or more tokens).  ``k < 1`` raises.
+
 ``search(..., profile={})`` fills the dict with the path, the analyzed
 ``terms``, ``ranges_scored`` (None on the exhaustive scorer) and wall ms per
 phase: ``analyze_ms``, ``read_ms`` (local path only: on Spark the block read
@@ -40,7 +45,6 @@ from ..operators.search import (
     HITS_WITH_DOCS,
     analyze_query,
     analyze_query_seq,
-    phrase_filter_docids,
     search_exhaustive,
 )
 from ..operators.wand import RANGE_BATCH, search_blockmax
@@ -140,11 +144,43 @@ class Searcher:
             raise ValueError(f"mode must be 'blockmax' or 'exhaustive', not {mode!r}")
         if operator not in ("or", "and"):
             raise ValueError(f"operator must be 'or' or 'and', not {operator!r}")
-        require_all = operator == "and"
-        prof = {} if profile is None else profile
         t0 = time.perf_counter()
+        return self._top_k(
+            self.query_terms(query, field), k, field, t0, mode=mode, doc_filter=doc_filter,
+            with_docs=with_docs, require_all=operator == "and", profile=profile,
+        )
+
+    def phrase_search(self, phrase: str, k: int = 10, field: str = "content") -> DataFrame:
+        """Positions-based phrase query (requires with_positions index) →
+        (docid, score): docs holding the analyzed token sequence at
+        consecutive positions (repeats kept: "data data" needs two adjacent
+        occurrences), ranked by the BM25 of its distinct terms.
+
+        ``field``: phrase over an extra field's namespaced postings — the
+        ES ``match_phrase`` on a sub-field (per-field analyzers,
+        elastic/index.go:115-146): the field's analyzer and ``<field>\\x1f``
+        prefix scope both the adjacency check and the scoring."""
+        if not self.catalog.with_positions:
+            raise ValueError("index was built without positions")
+        t0 = time.perf_counter()
+        analyzer, prefix, _, _ = self._field_conf(field)
+        seq = [prefix + t for t in analyze_query_seq(phrase, analyzer)]
+        # one token: the adjacency check holds trivially, an `or` query
+        return self._top_k(
+            list(dict.fromkeys(seq)), k, field, t0, require_all=True,
+            phrase=seq if len(seq) > 1 else None,
+        )
+
+    def _top_k(
+        self, terms: list[str], k: int, field: str, t0: float, mode: str = "blockmax",
+        doc_filter: Column | None = None, with_docs: bool = False, require_all: bool = False,
+        phrase: list[str] | None = None, profile: dict | None = None,
+    ) -> DataFrame:
+        """Route analyzed ``terms`` to a path (module doc) and score them."""
+        if k < 1:
+            raise ValueError(f"k must be at least 1, not {k!r}")
+        prof = {} if profile is None else profile
         _, _, avgdl, dl_col = self._field_conf(field)
-        terms = self.query_terms(query, field)
         if mode == "exhaustive":
             path = "exhaustive"
         elif self.local is not None and doc_filter is None:
@@ -158,7 +194,9 @@ class Searcher:
         )
 
         if path == "local":
-            table = self.local.search(terms, k, avgdl, dl_col, with_docs, prof, require_all)
+            table = self.local.search(
+                terms, k, avgdl, dl_col, with_docs, prof, require_all, phrase
+            )
             t2 = time.perf_counter()
             schema = HITS_WITH_DOCS if with_docs else HITS
             out = self.spark.createDataFrame(table, schema)  # job-free, see hits_frame
@@ -172,7 +210,7 @@ class Searcher:
             hits = search_blockmax(
                 self.spark, self.segments, self.term_stats, docs_side, terms, k,
                 avgdl, doc_filter, n_ranges_hint=self.n_ranges, profile=prof,
-                require_all=require_all,
+                require_all=require_all, phrase=phrase,
             )
         else:
             hits = search_exhaustive(
@@ -187,44 +225,6 @@ class Searcher:
             ).orderBy(F.desc("score"), F.asc("docid"))
         prof["result_ms"] = (time.perf_counter() - t2) * 1000
         return hits
-
-    def phrase_search(
-        self, phrase: str, k: int = 10, field: str = "content"
-    ) -> DataFrame:
-        """Positions-based phrase query (requires with_positions index).
-
-        ``field``: phrase over an extra field's namespaced postings — the
-        ES ``match_phrase`` on a sub-field (text fields default to
-        index_options=positions, so field phrase is part of the reference
-        contract; per-field analyzers elastic/index.go:115-146).  The
-        field's analyzer produces the token sequence, its ``<field>\\x1f``
-        prefix scopes both the adjacency check and the BM25 scoring to the
-        field's own postings/dl/avgdl."""
-        if not self.catalog.with_positions:
-            raise ValueError("index was built without positions")
-        analyzer, prefix, avgdl, dl_col = self._field_conf(field)
-        # adjacency check needs the raw token SEQUENCE (duplicates kept:
-        # "data data" must match two adjacent occurrences); BM25 scoring
-        # uses the deduplicated match-query term list
-        term_seq = [prefix + t for t in analyze_query_seq(phrase, analyzer)]
-        terms = self.query_terms(phrase, field)
-        docids = phrase_filter_docids(self.segments, term_seq)
-        docs_side = self.docs
-        if dl_col != "dl":
-            docs_side = docs_side.withColumn("dl", F.col(dl_col))
-        scored = search_exhaustive(
-            self.segments,
-            self.term_stats,
-            docs_side,
-            terms,
-            k=None,
-            avgdl=avgdl,
-        )
-        return (
-            scored.join(docids, "docid")
-            .orderBy(F.desc("score"), F.asc("docid"))
-            .limit(k)
-        )
 
     def highlight(self, term: str, window: int = 30) -> DataFrame:
         """(docid, start, end, snippet) for every occurrence of ``term`` —

@@ -349,9 +349,12 @@ class TestCodec:
     def test_positions_roundtrip(self):
         lists = [np.array([1, 5, 9]), np.array([0]), np.array([], dtype=np.int64)]
         enc = codec.encode_positions(lists)
-        dec = codec.decode_positions(enc, 3)
+        tfs = np.array([len(p) for p in lists])
+        dec = np.split(codec.decode_positions(enc, tfs), np.cumsum(tfs)[:-1])
         for a, b in zip(lists, dec):
             assert np.array_equal(a, b)
+        with pytest.raises(ValueError):  # counts that disagree with the payload
+            codec.decode_positions(enc, tfs + 1)
 
     def test_offsets_roundtrip(self):
         lists = [

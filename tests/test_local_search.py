@@ -1,7 +1,8 @@
 """The in-process block-max path (operators/local_search.py): rank identity
 with the Spark scorers on every test index and on chained snapshots, under
-both operators, one output schema for every path, the query profile, zero
-Spark jobs per local query, and thread safety of a shared Searcher."""
+both operators and for phrase queries, one output schema for every path, the
+query profile, zero Spark jobs per local query, and thread safety of a
+shared Searcher."""
 
 import json
 import os
@@ -13,15 +14,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from gitlab_elasticsearch_indexer_spark.operators import wand
+from gitlab_elasticsearch_indexer_spark.operators.search import analyze_query_seq
 from gitlab_elasticsearch_indexer_spark.operators.wand import search_blockmax
 from gitlab_elasticsearch_indexer_spark.plans.build_index import build_index
 from gitlab_elasticsearch_indexer_spark.plans.incremental import apply_delta
 from gitlab_elasticsearch_indexer_spark.plans.search import Searcher
 from gitlab_elasticsearch_indexer_spark.sources import catalog as cat
-from gitlab_elasticsearch_indexer_spark.sources.pages import (
-    pages_from_documents,
-    pages_with_specials,
-)
+from gitlab_elasticsearch_indexer_spark.sources.pages import pages_from_documents, pages_phrase
 
 from conftest import SF_SMALL
 
@@ -35,27 +34,6 @@ QUERIES = [
     ("?! ... ,;", 10),
     ("zzzqqq xyzzy", 10),
 ]
-
-
-@pytest.fixture(scope="module")
-def simple_idx(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("lsimple"))
-    build_index(spark, pages_with_specials(spark, SF_SMALL), d, analyzer="simple", snapshot="s1")
-    return d
-
-
-@pytest.fixture(scope="module")
-def default_idx(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("ldefault"))
-    build_index(spark, pages_from_documents(spark, SF_SMALL), d, analyzer="default", snapshot="s1")
-    return d
-
-
-@pytest.fixture(scope="module")
-def offsets_idx(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("loffsets"))
-    build_index(spark, pages_from_documents(spark, SF_SMALL), d, snapshot="s1", with_offsets=True)
-    return d
 
 
 def _delta(pages, step: int):
@@ -86,11 +64,11 @@ def _delta(pages, step: int):
 
 @pytest.fixture(scope="module")
 def chain_idx(spark, tmp_path_factory):
-    """s1 built over docids spread across 4 ranges, then d1 and d2 chained
-    deltas, each modifying, deleting and adding docs."""
+    """s1 built over docids spread across 4 ranges, with positions, then d1
+    and d2 chained deltas, each modifying, deleting and adding docs."""
     d = str(tmp_path_factory.mktemp("lchain"))
     pages = pages_from_documents(spark, SF_SMALL).withColumn("doc_id", F.col("doc_id") * 64)
-    build_index(spark, pages, d, snapshot="s1", extra_fields={"url": "path"})
+    build_index(spark, pages, d, snapshot="s1", extra_fields={"url": "path"}, with_positions=True)
     apply_delta(spark, d, _delta(pages, 0), "d1")
     apply_delta(spark, d, _delta(pages, 1), "d2")
     return d
@@ -109,12 +87,12 @@ REGIMES = (
 
 
 def _spark_blockmax(spark, s: Searcher, query, k, field="content", operator="or",
-                    doc_filter=None, **regime):
+                    doc_filter=None, phrase=None, **regime):
     _, _, avgdl, dl_col = s._field_conf(field)
     return search_blockmax(
         spark, s.segments, s.term_stats, s.docs.withColumn("dl", F.col(dl_col)),
         s.query_terms(query, field), k, avgdl, doc_filter,
-        require_all=operator == "and", **regime,
+        require_all=operator == "and", phrase=phrase, **regime,
     ).toPandas()
 
 
@@ -380,3 +358,186 @@ def test_delta_keeps_field_analyzer_version(spark, chain_idx, tmp_path):
         json.dump(doc, f)
     with pytest.raises(ValueError, match="analyzer"):
         Searcher(spark, d, snapshot="d1")
+
+
+# --- phrase queries: the same range kernel, with a positions check ---------
+
+# (phrase, k): adjacent pair, reversed pair, three tokens, repeated term,
+# k > matches, one token, absent term, empty
+PHRASES = [
+    ("data query", 10),
+    ("query data", 10),
+    ("spark data query", 10),
+    ("value value", 5),
+    ("the table", 1000),
+    ("query", 10),
+    ("data zzzqqq", 10),
+    ("", 10),
+]
+
+
+@pytest.fixture(scope="module")
+def positions_idx(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("lpositions"))
+    build_index(spark, pages_from_documents(spark, SF_SMALL), d, snapshot="s1", with_positions=True)
+    return d
+
+
+@pytest.fixture(scope="module")
+def phrase_url_idx(spark, tmp_path_factory):
+    """Url paths hold "data query" adjacent (doc_id % 3 == 0) and apart
+    (doc_id % 3 == 1)."""
+    d = str(tmp_path_factory.mktemp("lphraseurl"))
+    build_index(spark, pages_phrase(spark, SF_SMALL), d, snapshot="s1", with_positions=True,
+                extra_fields={"url": "simple"})
+    return d
+
+
+def _token_seq(s: Searcher, phrase: str, field: str) -> list[str]:
+    analyzer, prefix, _, _ = s._field_conf(field)
+    return [prefix + t for t in analyze_query_seq(phrase, analyzer)]
+
+
+def _phrase_reference(s: Searcher, phrase: str, k: int, field: str):
+    """The exhaustive ``and`` ranking restricted to the docs whose analyzed
+    token sequence holds the phrase's (a test-side adjacency oracle)."""
+    analyzer = s._field_conf(field)[0]
+    seq = analyze_query_seq(phrase, analyzer)
+
+    def holds(text: str) -> bool:
+        toks = analyze_query_seq(text or "", analyzer)
+        return any(toks[i:i + len(seq)] == seq for i in range(len(toks) - len(seq) + 1))
+
+    text = s.docs_content() if field == "content" else s.docs.select("docid", field)
+    docids = [d for d, t in text.toPandas().itertuples(index=False) if seq and holds(t)]
+    ex = s.search(phrase, k=s.catalog.n_docs, mode="exhaustive", operator="and",
+                  field=field, with_docs=False).toPandas()
+    return ex[ex["docid"].isin(docids)].head(k)
+
+
+def _check_phrase(spark, s: Searcher, phrase: str, k: int, field: str = "content"):
+    """local ≡ reference ≡ Spark blockmax in regimes 2 and 3."""
+    assert s.local is not None
+    got = s.phrase_search(phrase, k=k, field=field).toPandas()
+    _rank_equal(got, _phrase_reference(s, phrase, k, field))
+    seq = _token_seq(s, phrase, field)
+    for regime in REGIMES:
+        bm = _spark_blockmax(spark, s, phrase, k, field, "and",
+                             phrase=seq if len(seq) > 1 else None, **regime)
+        _rank_equal(got, bm)
+    return got
+
+
+@pytest.mark.parametrize("phrase,k", PHRASES)
+def test_phrase_positions_index(spark, positions_idx, phrase, k):
+    got = _check_phrase(spark, Searcher(spark, positions_idx), phrase, k)
+    if phrase in ("data query", "the table", "value value"):
+        assert len(got) > 0
+    if k == 1000:
+        assert 0 < len(got) < k
+
+
+@pytest.mark.parametrize("phrase,k", [("data query", 10), ("value value", 5), ("the table", 1000)])
+def test_phrase_offsets_index(spark, offsets_idx, phrase, k):
+    _check_phrase(spark, Searcher(spark, offsets_idx), phrase, k)
+
+
+@pytest.mark.parametrize("phrase,k", [("data query", 1000), ("query data", 1000)])
+def test_phrase_url_field(spark, phrase_url_idx, phrase, k):
+    got = _check_phrase(spark, Searcher(spark, phrase_url_idx), phrase, k, field="url")
+    if phrase == "data query":
+        assert len(got) > 0 and set(got["docid"] % 3) == {0}
+
+
+@pytest.mark.parametrize("snap", ["d1", "d2"])
+@pytest.mark.parametrize("phrase,k", [("edited0 query", 1000), ("data query", 20)])
+def test_phrase_chained_snapshot(spark, chain_idx, snap, phrase, k):
+    s = Searcher(spark, chain_idx, snapshot=snap)
+    got = _check_phrase(spark, s, phrase, k)
+    assert len(got) > 0
+    assert set(got["docid"]) <= set(s.local.docid.tolist())
+
+
+def test_repeated_term_phrase_is_not_block_skipped(spark, tmp_path):
+    """More than a block of short docs with many non-adjacent "value"s
+    outscore the long "value value" docs after them: single-term block
+    skipping would stop after the short docs' blocks and return nothing."""
+    import pandas as pd
+    import pyspark.sql.types as T
+
+    from gitlab_elasticsearch_indexer_spark.schemas import PAGES
+
+    filler = lambda n: " ".join(f"w{j}" for j in range(n))  # noqa: E731
+    texts = ["value a value b value c value"] * 256 + [
+        f"value value {filler(n)}" for n in (200, 150, 300)
+    ]
+    pdf = pd.DataFrame({
+        "url": [f"https://example.com/v{i}.txt" for i in range(len(texts))],
+        "warc_ts": pd.Timestamp("2024-01-01"),
+        "html": [t.encode() for t in texts],
+        "text": texts,
+        "lang": "en",
+        "doc_id": range(len(texts)),
+    })
+    schema = T.StructType(list(PAGES.fields) + [T.StructField("doc_id", T.LongType())])
+    d = str(tmp_path / "trap")
+    build_index(spark, spark.createDataFrame(pdf, schema), d, snapshot="s1", with_positions=True)
+    s = Searcher(spark, d)
+    or_top = s.search("value", k=1, with_docs=False).toPandas()
+    assert or_top["docid"].tolist()[0] < 256  # a short doc has the best score
+    assert _check_phrase(spark, s, "value value", 1)["docid"].tolist() == [257]
+
+
+def test_phrase_absent_term_reads_no_block(spark, positions_idx, monkeypatch):
+    s = Searcher(spark, positions_idx)
+    assert len(s.phrase_search("data query").toPandas()) > 0
+
+    def no_block_read(*args, **kwargs):
+        raise AssertionError("blocks read for a phrase that cannot match")
+
+    monkeypatch.setattr(s.local, "read_blocks", no_block_read)
+    monkeypatch.setattr(wand, "filter_segments_for_terms", no_block_read)
+    assert len(s.phrase_search("data zzzqqq query").toPandas()) == 0
+    seq = _token_seq(s, "data zzzqqq query", "content")
+    for regime in REGIMES:
+        bm = _spark_blockmax(spark, s, "data zzzqqq query", 10, operator="and", phrase=seq, **regime)
+        assert len(bm) == 0
+
+
+@pytest.mark.parametrize("phrase", ["query", "customer"])
+def test_single_token_phrase_equals_or(spark, positions_idx, phrase):
+    s = Searcher(spark, positions_idx)
+    want = s.search(phrase, k=10, with_docs=False).toPandas()
+    assert len(want) > 0
+    assert s.phrase_search(phrase, k=10).toPandas().to_dict("list") == want.to_dict("list")
+
+
+def test_local_phrase_launches_no_spark_job(spark, positions_idx):
+    s = Searcher(spark, positions_idx)
+    sc = spark.sparkContext
+    try:
+        for i, (phrase, k) in enumerate(PHRASES):
+            group = f"local-phrase-{i}"
+            sc.setJobGroup(group, group)
+            s.phrase_search(phrase, k=k).collect()
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], phrase
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_k_below_one_raises(spark, positions_idx, k):
+    """Every path refuses k < 1 alike (the local kernel used to fail inside
+    np.partition on a single term, the exhaustive scorer to return nothing,
+    top_k to drop one row for k=-1)."""
+    s = Searcher(spark, positions_idx)
+    calls = [
+        lambda: s.search("query", k=k),
+        lambda: s.search("spark data", k=k),
+        lambda: s.search("query", k=k, mode="exhaustive"),
+        lambda: s.search("query", k=k, doc_filter=F.lit(True)),
+        lambda: s.phrase_search("data query", k=k),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="k must be at least 1"):
+            call()

@@ -5,6 +5,7 @@ exhaustive path exactly.
 """
 
 import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -35,10 +36,16 @@ QUERIES = [
 
 
 @pytest.fixture(scope="module")
-def index_dir(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("idx"))
-    pages = pages_with_specials(spark, SF_SMALL)
-    build_index(spark, pages, d, analyzer="simple", snapshot="s1")
+def index_dir(simple_idx):
+    """The session's simple index (tests/conftest.py): read only."""
+    return simple_idx
+
+
+@pytest.fixture
+def index_copy(simple_idx, tmp_path):
+    """A private copy of the simple index, for a test that edits its catalog."""
+    d = str(tmp_path / "idx")
+    shutil.copytree(simple_idx, d)
     return d
 
 
@@ -753,10 +760,11 @@ class TestRankIdentity:
         assert "content" not in s.docs.columns
         assert set(s.docs_content().columns) == {"docid", "content"}
 
-    def test_analyzer_version_guard(self, spark, index_dir):
+    def test_analyzer_version_guard(self, spark, index_copy):
         import json
         import os
 
+        index_dir = index_copy
         s = Searcher(spark, index_dir)
         assert s.catalog.analyzer_version  # written at build time
         # simulate an index built by an older analyzer implementation
@@ -777,12 +785,14 @@ class TestRankIdentity:
             with open(cpath, "w") as f:
                 json.dump(doc, f)
 
-    def test_analyzer_version_guard_extra_fields(self, spark, index_dir):
+    def test_analyzer_version_guard_extra_fields(self, spark, index_copy):
         """The guard checks EVERY analyzed chain: an extra field built by an
         older code/path analyzer must refuse too — those chains run at query
         time as well (ADVICE r3)."""
         import json
         import os
+
+        index_dir = index_copy
 
         cpath = os.path.join(index_dir, "s1", "catalog.json")
         with open(cpath) as f:
@@ -805,12 +815,14 @@ class TestRankIdentity:
             with open(cpath, "w") as f:
                 f.write(orig)
 
-    def test_apply_delta_refuses_analyzer_mismatch(self, spark, index_dir):
+    def test_apply_delta_refuses_analyzer_mismatch(self, spark, index_copy):
         """apply_delta tokenizes the delta with the CURRENT implementation;
         merging into postings from a different one would silently mix
         analyzers — must refuse up front, not at search time."""
         import json
         import os
+
+        index_dir = index_copy
 
         from gitlab_elasticsearch_indexer_spark.plans.incremental import apply_delta
 
@@ -1089,15 +1101,6 @@ class TestOffsetsAndHighlight:
     stored per posting, spans decode back to the exact regex occurrences,
     highlighting cuts snippets without re-analysis."""
 
-    @pytest.fixture(scope="class")
-    def offsets_idx(self, spark, tmp_path_factory):
-        d = str(tmp_path_factory.mktemp("offidx"))
-        build_index(
-            spark, pages_from_documents(spark, SF_SMALL), d,
-            snapshot="s1", with_offsets=True,
-        )
-        return d
-
     def test_flat_occurrences_equal_struct_udf_path(self, spark):
         """The flat mapInPandas occurrence emitter (udfs.offsets_occurrences)
         must produce row for row the (docid, dl, pos, term, start, end)
@@ -1339,15 +1342,6 @@ class TestDefaultAnalyzerEndToEnd:
     verified against the independent pandas BM25 oracle re-tokenizing the
     raw text with the same chain (closes the round-1 gap: only the simple
     analyzer was verified end-to-end)."""
-
-    @pytest.fixture(scope="class")
-    def default_idx(self, spark, tmp_path_factory):
-        d = str(tmp_path_factory.mktemp("didx"))
-        build_index(
-            spark, pages_from_documents(spark, SF_SMALL), d,
-            analyzer="default", snapshot="s1",
-        )
-        return d
 
     @pytest.mark.parametrize(
         "query,k",
