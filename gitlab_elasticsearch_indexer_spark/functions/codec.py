@@ -8,7 +8,8 @@ from-scratch equivalent: encode/decode whole uint64 arrays without
 per-element Python loops, so the posting kernel and the query-time block
 reader stay Arrow/numpy-speed.  The single-block encoders below are the
 format's reference; the kernel encodes a whole chunk of blocks at once
-(``for_blocks``, ``varint_spans``) with byte-identical output.
+(``for_blocks``, ``varint_spans``) with byte-identical output, and the
+query kernel decodes all of a query's blocks at once (``for_unpack_blocks``).
 
 Layout per block (BLOCK_SIZE=128 postings, like Lucene):
 - ``docids_enc``: encoded deltas where delta[0]=docid[0]-base, rest adjacent
@@ -138,6 +139,48 @@ def for_blocks(values: np.ndarray, starts: np.ndarray) -> tuple[np.ndarray, np.n
     # values own disjoint bits, so summing their bytes is OR-ing them
     data = np.bincount(idx, weights=byte_vals, minlength=int(offsets[-1]))
     return data[: offsets[-1]].astype(np.uint8), offsets
+
+
+def for_unpack_blocks(
+    data: np.ndarray, offsets: np.ndarray, counts: np.ndarray | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """The inverse of ``for_blocks``: block ``i`` is the FOR payload
+    ``data[offsets[i]:offsets[i + 1]]``; returns every block's values back
+    to back (uint64) and each block's start in them.  One numpy pass over
+    all blocks.  A payload that is not FOR, whose length disagrees with its
+    header, or whose header count differs from ``counts[i]`` raises
+    ``ValueError``."""
+    data = np.asarray(data, dtype=np.uint8)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    head, sizes = offsets[:-1], np.diff(offsets)
+    if head.size == 0:
+        return np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.int64)
+    if (sizes < FOR_HEADER_BYTES).any() or (data[head] != TAG_FOR).any():
+        raise ValueError("not a FOR block payload")
+    widths = data[head + 1].astype(np.int64)
+    if widths.max() > FOR_MAX_WIDTH:
+        raise ValueError(f"FOR width above {FOR_MAX_WIDTH} bits")
+    n = np.zeros(head.size, dtype=np.int64)
+    for j in range(4):  # little-endian u32 count
+        n |= data[head + 2 + j].astype(np.int64) << (8 * j)
+    if counts is not None and not np.array_equal(n, counts):
+        raise ValueError("block header counts differ from the expected counts")
+    if not np.array_equal(sizes, FOR_HEADER_BYTES + (n * widths + 7) // 8):
+        raise ValueError("FOR payload length does not match its header")
+    starts = np.zeros(head.size, dtype=np.int64)
+    np.cumsum(n[:-1], out=starts[1:])
+    blk = np.repeat(np.arange(head.size), n)
+    k = np.arange(starts[-1] + n[-1]) - starts[blk]
+    bit = (head[blk] + FOR_HEADER_BYTES) * 8 + k * widths[blk]
+    byte0 = bit >> 3
+    padded = np.zeros(data.size + 8, dtype=np.uint8)  # slack for the last value
+    padded[: data.size] = data
+    acc = np.zeros(k.size, dtype=np.uint64)
+    for j in range((int(widths.max()) + 14) // 8):
+        acc |= padded[byte0 + j].astype(np.uint64) << np.uint64(8 * j)
+    acc >>= (bit & 7).astype(np.uint64)
+    acc &= ((np.uint64(1) << widths.astype(np.uint64)) - np.uint64(1))[blk]
+    return acc, starts
 
 
 def block_decode(buf: bytes, count: int | None = None) -> np.ndarray:

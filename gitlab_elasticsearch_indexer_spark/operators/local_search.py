@@ -4,11 +4,12 @@ indexes of at most RANGE_BATCH docid_ranges.
 At that size a Spark scoring job costs far more than the work it does: the
 query's blocks are a few hundred KB of parquet.  ``LocalIndex`` reads them
 with ``pyarrow.dataset`` — the hive ``bucket`` partitions the query terms
-route to, plus a ``term`` filter pushed to the row groups — and scores each
-docid_range with the same ``score_range`` kernel the Spark driver runs
-inside ``applyInPandas``, then merges the per-range top-k lists by (score
-desc, docid asc).  Per query the driver only decodes and scores blocks: no
-Spark job, no per-posting Python.
+route to, plus a ``term`` filter pushed to the row groups — and scores
+them with ONE call of the ``score_range`` kernel the Spark driver runs
+inside ``applyInPandas``: every docid_range the query reads in one batch,
+validated against the whole live-docid array.  Per query the driver only
+decodes and scores blocks: no Spark job, no per-range, per-block or
+per-posting Python.
 
 Everything is loaded once at open and read-only afterwards, so concurrent
 ``search`` calls from several threads share one instance:
@@ -33,7 +34,7 @@ import pyarrow.parquet as pq
 from ..config import DOCS_PER_RANGE
 from ..sources import catalog as cat
 from .search import query_buckets
-from .wand import BLOCK_COLS, PHRASE_COLS, score_range, top_k
+from .wand import BLOCK_COLS, PHRASE_COLS, score_range
 
 
 def _read_only(a: np.ndarray) -> np.ndarray:
@@ -105,27 +106,9 @@ class LocalIndex:
         docids, scores = np.empty(0, np.int64), np.empty(0, np.float64)
         n_ranges = 0
         if blocks is not None and blocks.num_rows:
-            blocks = blocks.sort_by("docid_range")
-            rng = blocks["docid_range"].to_numpy()
-            arrays = {c: blocks[c].to_numpy() for c in cols}
-            ranges, starts = np.unique(rng, return_index=True)
-            ends = np.append(starts[1:], len(rng))
-            lo = np.searchsorted(self.docid, ranges * DOCS_PER_RANGE)
-            hi = np.searchsorted(self.docid, (ranges + 1) * DOCS_PER_RANGE)
-            dl = self.dl[dl_col]
-            per_range = [
-                score_range(
-                    int(r) * DOCS_PER_RANGE,
-                    {c: v[s:e] for c, v in arrays.items()},
-                    self.docid[a:z], dl[a:z], idf_by_term, avgdl, k, require_all, phrase,
-                )
-                for r, s, e, a, z in zip(ranges, starts, ends, lo, hi)
-            ]
-            n_ranges = len(ranges)
-            docids, scores = top_k(
-                np.concatenate([d for d, _ in per_range]),
-                np.concatenate([s for _, s in per_range]),
-                k,
+            n_ranges = pc.count_distinct(blocks["docid_range"]).as_py()
+            docids, scores = score_range(
+                blocks, self.docid, self.dl[dl_col], idf_by_term, avgdl, k, require_all, phrase
             )
         profile.update(
             ranges_scored=n_ranges,

@@ -19,10 +19,15 @@ Plan shape:
 
 from __future__ import annotations
 
+import os
+import tempfile
+import weakref
+
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.analysis import ANALYZERS
 from ..functions.bm25 import bm25
@@ -51,13 +56,72 @@ HITS_WITH_DOCS = T.StructType(
 )
 
 
-def hits_frame(spark, docids=(), scores=()) -> DataFrame:
-    """(docid, score) rows as a frame over an Arrow table; no arguments →
-    empty.  An Arrow-built frame plans as a LocalRelation, so collecting it
-    launches no Spark job — a list of rows, or an empty pandas frame, is
-    parallelized as an RDD instead and costs a job on every collect."""
-    table = pa.table({"docid": pa.array(docids, pa.int64()), "score": pa.array(scores, pa.float64())})
-    return spark.createDataFrame(table, HITS)
+def hits_frame(spark, table: pa.Table | None = None, schema: T.StructType = HITS) -> DataFrame:
+    """The result frame of every search path: an Arrow ``table`` (None →
+    empty) as a DataFrame of ``schema`` (no timestamp columns).
+
+    An Arrow-built frame plans as a LocalRelation, so collecting it launches
+    no Spark job — a list of rows, or an empty pandas frame, is parallelized
+    as an RDD instead and costs a job on every collect.  This does what
+    pyspark's ``createDataFrame(table, schema)`` does (cast to the schema's
+    Arrow type, one Arrow IPC stream through a temp file) in two py4j calls
+    — ``readArrowStreamFromFile``, then ``toDataFrame`` — where
+    ``createDataFrame`` makes about 20 (conf reads, reflection lookups,
+    ``setActiveSession``); every return from the JVM waits for the GIL that
+    concurrent queries hold.  The JVM members and conf values are resolved
+    once per session.  With ``spark.io.encryption.enabled`` the data must
+    not touch disk in plaintext, so pyspark's own socket path runs."""
+    jvm = _session_jvm(spark)
+    arrow_schema, schema_json = jvm.schema(schema)
+    table = pa.Table.from_batches([], arrow_schema) if table is None else table
+    sc = spark.sparkContext
+    if sc._encryption_enabled:
+        return spark.createDataFrame(table, schema)
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, arrow_schema) as writer:
+        writer.write_table(table.cast(arrow_schema), max_chunksize=jvm.batch_rows)
+    fd, path = tempfile.mkstemp(dir=sc._temp_dir)
+    try:
+        with os.fdopen(fd, "wb") as f:
+            f.write(sink.getvalue())
+        batches = jvm.read_arrow_file(path)
+    finally:
+        os.unlink(path)
+    out = DataFrame(jvm.to_data_frame(batches, schema_json, spark._jsparkSession), spark)
+    out._schema = schema
+    return out
+
+
+class _SessionJvm:
+    """A session's JVM entry points for ``hits_frame``, resolved once."""
+
+    def __init__(self, spark):
+        utils = spark._jvm.PythonSQLUtils
+        self.read_arrow_file = utils.readArrowStreamFromFile
+        self.to_data_frame = utils.toDataFrame
+        self.batch_rows = spark._jconf.arrowMaxRecordsPerBatch()
+        self.large_types = spark._jconf.arrowUseLargeVarTypes()
+        self._schemas: dict[str, pa.Schema] = {}
+
+    def schema(self, schema: T.StructType) -> tuple[pa.Schema, str]:
+        """(Arrow schema, JSON) of ``schema`` as pyspark converts it."""
+        key = schema.json()
+        if key not in self._schemas:
+            self._schemas[key] = to_arrow_schema(
+                schema, error_on_duplicated_field_names_in_struct=True,
+                prefers_large_types=self.large_types,
+            )
+        return self._schemas[key], key
+
+
+_SESSION_JVM: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _session_jvm(spark) -> _SessionJvm:
+    jvm = _SESSION_JVM.get(spark)
+    if jvm is None:  # a race resolves twice, harmlessly
+        jvm = _SESSION_JVM[spark] = _SessionJvm(spark)
+    return jvm
 
 
 def bm25_score_col(tf: Column, dl: Column, idf: Column, avgdl: float) -> Column:

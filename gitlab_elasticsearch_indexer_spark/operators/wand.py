@@ -1,10 +1,15 @@
 """Block-max top-k retrieval (SURVEY.md Q5 — the WAND-style skipping Lucene
 performs, lifted onto Spark's execution model).
 
-One range kernel (``score_range``: exact BM25 top-k of one docid_range's
-blocks), two drivers: in process for an index of at most RANGE_BATCH ranges
-(operators/local_search.py, no Spark job per query), and ``search_blockmax``
-on Spark for larger indexes or a ``doc_filter``, skipping at two
+One kernel (``score_range``: exact BM25 top-k of a batch of docid_ranges'
+blocks, one call per query), two drivers: in process for an index of at
+most RANGE_BATCH ranges (operators/local_search.py: one call over every
+range the query reads, no Spark job), and ``search_blockmax`` on Spark for
+larger indexes or a ``doc_filter`` (one call per range group of a
+``score_batch`` cogroup).  The kernel decodes all of its blocks in one
+numpy pass (``codec.for_unpack_blocks`` over the Arrow payload buffers, a
+segmented cumsum for docids, one ``searchsorted`` against the live docids)
+— no per-range or per-block Python loop.  Skipping happens at two
 granularities that ARE Spark-friendly:
 
 1. **Range-level skipping (distributed).**  Per docid_range,
@@ -19,21 +24,25 @@ granularities that ARE Spark-friendly:
    block-max pruning at the unit of parallelism: batches fan out as one
    Spark job over the pruned parquet partitions.
 
-2. **Block-level skipping (within a range, single-term queries, both
-   drivers).**  Blocks sorted by bm25(idf, max_tf, min_dl) descending (at
-   the current avgdl); once k local hits exist and the next block's bound
-   is below the local k-th score, remaining blocks are not decoded.  (Multi-term queries score the range's
-   candidate blocks with one vectorized numpy accumulation — exact, and
-   still only the blocks of the query's terms.)
+2. **Block-level skipping (single-term queries, both drivers).**  Blocks
+   sorted by bm25(idf, max_tf, min_dl) descending (at the current avgdl)
+   decode in rounds of doubling size, the first holding k postings; once k
+   hits exist, blocks whose bound is below the k-th score are not decoded
+   (``_skip_blocks``).  Multi-term queries score all their blocks in one
+   pass, summing each doc's per-term scores in term order so equal true
+   scores keep equal bits — exact, and still only the blocks of the
+   query's terms.
 
 Conjunctive queries (``operator="and"``) run the same kernel with
-``require_all``: a range lacking a query term returns before any decode, and
-a doc scores only if its valid postings cover every term (one count from the
-``np.unique`` that sums the scores).  A term without idf empties the query.
+``require_all``: the blocks of a range lacking a query term are dropped
+before any decode, and a doc scores only if its valid postings cover every
+term (one count from the ``np.unique`` that sums the scores).  A term
+without idf empties the query.
 
 Phrase queries (``phrase``: the token sequence) are conjunctive queries plus
-a positions check on the docs that pass the count (``_phrase_docids``; only
-phrase queries read ``positions_enc``).  A phrase can reject a doc after it
+a positions check on the docs that pass the count (``_phrase_candidates``:
+the candidates' blocks' positions decode as one LEB128 stream; only phrase
+queries read ``positions_enc``).  A phrase can reject a doc after it
 scored, so block-level skipping is off for two or more tokens, one repeated
 term included; range-level pruning stays exact (a phrase scores ≤ ``or``).
 
@@ -55,6 +64,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -73,8 +83,7 @@ RANGE_BATCH = 256
 
 
 def score_range(
-    base: int,
-    blocks: dict,
+    blocks: pa.Table,
     dl_docids: np.ndarray,
     dl_vals: np.ndarray,
     idf_by_term: dict[str, float],
@@ -83,111 +92,154 @@ def score_range(
     require_all: bool = False,
     phrase: list[str] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """The range kernel: exact BM25 top-k of one docid_range → (docids,
+    """The kernel: exact BM25 top-k of a batch of docid_ranges → (docids,
     scores) ordered (score desc, docid asc).
 
-    ``blocks`` maps each of BLOCK_COLS (PHRASE_COLS for a phrase) to the
-    range's block column (numpy arrays; the *_enc columns hold bytes);
-    ``dl_docids`` (sorted) and ``dl_vals`` are the range's docs after any
-    metadata filter — postings of docs not listed there never score, nor,
-    under ``require_all`` (``operator="and"``), docs lacking a term of
+    ``blocks`` holds ``docid_range`` and BLOCK_COLS (PHRASE_COLS for a
+    phrase) of the ranges' blocks; a block's docids are relative to its
+    range's first docid.  ``dl_docids`` (sorted) and ``dl_vals`` are the
+    docs that may score (the live docs, after any metadata filter) —
+    postings of docs not listed there never score, nor, under
+    ``require_all`` (``operator="and"``), docs lacking a term of
     ``idf_by_term``, nor, under a ``phrase`` (2+ of those terms, in order),
-    docs not holding it."""
+    docs not holding it.  All blocks decode in one numpy pass (block-max
+    skipping: see the module doc)."""
     empty = np.empty(0, np.int64), np.empty(0, np.float64)
-    terms = blocks["term"]
-    if len(terms) == 0 or len(dl_docids) == 0:
+    if blocks.num_rows == 0 or len(dl_docids) == 0:
         return empty
     require_all = require_all or phrase is not None
-    n_terms = len(set(terms))
-    if require_all and n_terms < len(idf_by_term):
-        return empty  # a query term has no block in this range
-    idf = np.array([idf_by_term[t] for t in terms], dtype=np.float64)
-    single_term = n_terms == 1 and phrase is None  # skipping: see module doc
-    if single_term:
-        bound = bm25(
-            idf,
-            np.asarray(blocks["max_tf"], dtype=np.float64),
-            np.asarray(blocks["min_dl"], dtype=np.float64),
-            avgdl,
-        )
-        order = np.argsort(-bound, kind="stable")
-    else:
-        # term order: every doc sums its per-term scores in the same order,
-        # so equal true scores stay bitwise equal whatever the block order
-        order = np.argsort(terms, kind="stable")
+    terms, tcode = np.unique(blocks["term"].to_numpy(), return_inverse=True)
+    n_terms = len(terms)
+    if require_all:
+        if n_terms < len(idf_by_term):
+            return empty  # a query term has no block at all
+        # keep the ranges holding blocks of every term, before any decode
+        rng = blocks["docid_range"].to_numpy()
+        ranges, n_held = np.unique(np.unique(rng * n_terms + tcode) // n_terms, return_counts=True)
+        full = np.isin(rng, ranges[n_held == n_terms])
+        if not full.all():
+            blocks, tcode = blocks.filter(full), tcode[full]
+            if blocks.num_rows == 0:
+                return empty
+    idf = np.array([idf_by_term[t] for t in terms], dtype=np.float64)[tcode]
+    live = dl_docids, dl_vals, avgdl
+    if n_terms == 1 and phrase is None:
+        return top_k(*_skip_blocks(blocks, idf, live, k), k)
 
-    all_docids: list[np.ndarray] = []
-    all_scores: list[np.ndarray] = []
-    decoded: list[tuple[int, np.ndarray, np.ndarray]] = []  # phrase only
-    top = np.empty(0, np.float64)  # local top-k scores, single-term skipping only
-    kth = -np.inf
-    for i in order:
-        if single_term and bound[i] < kth:
-            break  # block-max skip: no remaining block can enter top-k
-        n = int(blocks["n_docs"][i])
-        docids = codec.decode_docids(blocks["docids_enc"][i], base=base, count=n)
-        tfs = codec.decode_tfs(blocks["tfs_enc"][i], count=n)
-        pos = np.searchsorted(dl_docids, docids)
-        valid = (pos < len(dl_docids)) & (
-            dl_docids[np.clip(pos, 0, len(dl_docids) - 1)] == docids
-        )
-        if not valid.any():
-            continue
-        if phrase is not None:
-            decoded.append((i, docids, tfs))
-        docids, tfs, pos = docids[valid], tfs[valid].astype(np.float64), pos[valid]
-        dl = dl_vals[pos].astype(np.float64)
-        scores = bm25(idf[i], tfs, dl, avgdl)
-        all_docids.append(docids)
-        all_scores.append(scores)
-        if single_term:
-            top = np.concatenate([top, scores])
-            if len(top) >= k:
-                top = np.partition(top, len(top) - k)[-k:]
-                kth = top[0]
-
-    if not all_docids:
-        return empty
-    uniq, inv, *counts = np.unique(
-        np.concatenate(all_docids), return_inverse=True, return_counts=require_all
-    )
-    totals = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(totals, inv, np.concatenate(all_scores))
-    if require_all:  # one posting per (doc, term) in a range: count = terms matched
+    # term order: every doc sums its per-term scores in the same order, so
+    # equal true scores stay bitwise equal whatever the block order
+    order = np.argsort(tcode, kind="stable")
+    blocks, tcode = blocks.take(order), tcode[order]
+    docids, tfs, blk, valid, scores = _score_blocks(blocks, idf[order], live)
+    uniq, inv, *counts = np.unique(docids[valid], return_inverse=True, return_counts=require_all)
+    totals = np.bincount(inv, weights=scores, minlength=len(uniq))  # adds in posting order
+    if require_all:  # one posting per (doc, term): count = terms matched
         full = counts[0] == n_terms
         uniq, totals = uniq[full], totals[full]
     if phrase is not None and len(uniq):
-        held = np.isin(uniq, _phrase_docids(base, blocks, decoded, uniq, phrase))
+        held = _phrase_candidates(blocks, tcode, terms, docids, tfs, blk, uniq, phrase)
         uniq, totals = uniq[held], totals[held]
     return top_k(uniq, totals, k)
 
 
-def _phrase_docids(base, blocks, decoded, candidates, phrase) -> np.ndarray:
-    """The ``candidates`` holding ``phrase`` at consecutive positions: token
-    j at position p keys (doc, p - j), and a doc matches where one key is
-    shared by every token — a sorted intersection per token, so "value
-    value" needs two adjacent values.  ``decoded`` lists (block, docids,
-    tfs); only blocks holding a candidate decode their positions."""
-    keys_of: dict[str, list[np.ndarray]] = {}
-    for i, docids, tfs in decoded:
-        hit = np.repeat(np.isin(docids, candidates), tfs)
-        if hit.any():  # key: local docid in the high bits, position + n below
-            pos = codec.decode_positions(blocks["positions_enc"][i], tfs)
-            key = (np.repeat(docids - base, tfs) << 32) + pos + len(phrase)
-            keys_of.setdefault(blocks["term"][i], []).append(key[hit])
-    keys = np.concatenate(keys_of[phrase[0]])
-    for j, t in enumerate(phrase[1:], 1):
-        keys = np.intersect1d(keys, np.concatenate(keys_of[t]) - j, assume_unique=True)
-    return (keys >> 32) + base
+def _payloads(col) -> tuple[np.ndarray, np.ndarray]:
+    """A binary column's value bytes and its ``len + 1`` offsets into them,
+    zero-copy from the Arrow buffers."""
+    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    _, offsets, data = arr.buffers()
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offsets = np.frombuffer(offsets, width)[arr.offset: arr.offset + len(arr) + 1]
+    return np.frombuffer(data, np.uint8) if data is not None else np.zeros(0, np.uint8), offsets
+
+
+def _score_blocks(blocks: pa.Table, idf: np.ndarray, live: tuple):
+    """Decode every posting of ``blocks`` in one pass → (docids, tfs, block
+    of each posting, mask of the postings whose doc may score, scores of
+    those postings)."""
+    dl_docids, dl_vals, avgdl = live
+    n = blocks["n_docs"].to_numpy().astype(np.int64)
+    deltas, starts = codec.for_unpack_blocks(*_payloads(blocks["docids_enc"]), n)
+    tfs = codec.for_unpack_blocks(*_payloads(blocks["tfs_enc"]), n)[0].astype(np.int64)
+    blk = np.repeat(np.arange(len(n)), n)
+    # segmented cumsum: each block restarts at its range's first docid
+    run = np.cumsum(deltas.astype(np.int64))
+    before = np.concatenate(([0], run))[starts]
+    base = blocks["docid_range"].to_numpy().astype(np.int64) * DOCS_PER_RANGE
+    docids = run + (base - before)[blk]
+    pos = np.searchsorted(dl_docids, docids)
+    valid = dl_docids[np.minimum(pos, len(dl_docids) - 1)] == docids
+    tf = tfs[valid].astype(np.float64)
+    scores = bm25(idf[blk[valid]], tf, dl_vals[pos[valid]].astype(np.float64), avgdl)
+    return docids, tfs, blk, valid, scores
+
+
+def _skip_blocks(blocks: pa.Table, idf: np.ndarray, live: tuple, k: int):
+    """A single-term query's (docid, score) candidates with block-max
+    skipping: blocks in descending bound order, decoded in rounds of
+    doubling size (the first holds k postings); a round stops at the first
+    block whose bound is below the k-th score so far."""
+    bound = bm25(
+        idf,
+        blocks["max_tf"].to_numpy().astype(np.float64),
+        blocks["min_dl"].to_numpy().astype(np.float64),
+        live[2],
+    )
+    order = np.argsort(-bound, kind="stable")
+    neg_bound = -bound[order]
+    step = int(np.searchsorted(np.cumsum(blocks["n_docs"].to_numpy()[order]), k)) + 1
+    docids, scores = [], []
+    top, kth, taken = np.empty(0, np.float64), -np.inf, 0
+    while True:
+        # strict <: a block whose bound equals the k-th score may hold a tie
+        end = min(taken + step, int(np.searchsorted(neg_bound, -kth, side="right")))
+        if end <= taken:
+            break
+        sel = order[taken:end]
+        d, _, blk, valid, s = _score_blocks(blocks.take(sel), idf[sel], live)
+        docids.append(d[valid])
+        scores.append(s)
+        top = np.concatenate([top, s])
+        if len(top) >= k:
+            top = np.partition(top, len(top) - k)[-k:]
+            kth = top[0]
+        taken, step = end, 2 * step
+    return np.concatenate(docids), np.concatenate(scores)
+
+
+def _phrase_candidates(blocks, tcode, terms, docids, tfs, blk, candidates, phrase) -> np.ndarray:
+    """Mask of the (sorted) ``candidates`` holding ``phrase`` at consecutive
+    positions: token j at position p keys (candidate index, p - j), and a
+    doc matches where one key is shared by every token — a sorted
+    intersection per token, so "value value" needs two adjacent values.
+    The positions of the blocks holding a candidate decode as one LEB128
+    stream."""
+    hit = np.isin(docids, candidates)
+    holds = np.unique(blk[hit])
+    mine = np.isin(blk, holds)
+    data, offsets = _payloads(blocks["positions_enc"].take(holds))
+    tf = tfs[mine]
+    pos = codec.decode_positions(data[offsets[0]: offsets[-1]], tf)
+    cand = np.searchsorted(candidates, docids[mine])
+    key = np.repeat((cand << 32) + len(phrase), tf) + pos
+    key_hit = np.repeat(hit[mine], tf)
+    key_term = np.repeat(tcode[blk[mine]], tf)
+    token = np.searchsorted(terms, phrase)
+    keys = key[key_hit & (key_term == token[0])]
+    for j in range(1, len(phrase)):
+        keys = np.intersect1d(keys, key[key_hit & (key_term == token[j])] - j, assume_unique=True)
+    held = np.zeros(len(candidates), dtype=bool)
+    held[keys >> 32] = True
+    return held
 
 
 def top_k(docids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-    """The k best (docid, score) pairs in exact (score desc, docid asc) order."""
+    """The k best (docid, score) pairs in exact (score desc, docid asc)
+    order: every doc scoring at least the k-th score competes in the sort,
+    so a tie across the k-th place keeps the lowest docids."""
     if len(docids) > k:
-        part = np.argpartition(-scores, k - 1)[:k]
-        order = part[np.lexsort((docids[part], -scores[part]))]
-    else:
-        order = np.lexsort((docids, -scores))
+        keep = scores >= np.partition(scores, len(scores) - k)[len(scores) - k]
+        docids, scores = docids[keep], scores[keep]
+    order = np.lexsort((docids, -scores))[:k]
     return docids[order], scores[order]
 
 
@@ -197,21 +249,20 @@ def score_batch(
 ) -> DataFrame:
     """One Spark scoring batch → (docid, score) top-k of each of ``batch``'s
     docid_ranges: the terms' blocks cogrouped with ``docs`` (docid, dl, after
-    any metadata filter) on docid_range, each group scored by the range
-    kernel in ``applyInPandas``."""
+    any metadata filter) on docid_range, each group scored by one
+    ``score_range`` call in ``applyInPandas``."""
     cols = PHRASE_COLS if phrase else BLOCK_COLS
     seg = filter_segments_for_terms(segments, list(idf_by_term)).select("docid_range", *cols)
     in_range = (F.col("docid") / F.lit(DOCS_PER_RANGE)).cast("long").alias("docid_range")
     doc_side = docs.select("docid", "dl", in_range)
 
-    def score_range_pdf(key, seg_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
+    def score_range_pdf(seg_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(seg_pdf) == 0 or len(docs_pdf) == 0:  # a side may lack columns
             return pd.DataFrame({"docid": np.empty(0, np.int64), "score": np.empty(0)})
         dl_docids = docs_pdf["docid"].to_numpy(dtype=np.int64)
         dl_order = np.argsort(dl_docids)
         docids, scores = score_range(
-            int(key[0]) * DOCS_PER_RANGE,
-            {c: seg_pdf[c].to_numpy() for c in cols},
+            pa.Table.from_pandas(seg_pdf, preserve_index=False),
             dl_docids[dl_order],
             docs_pdf["dl"].to_numpy(dtype=np.int64)[dl_order],
             idf_by_term, avgdl, k, require_all, phrase,
@@ -374,4 +425,4 @@ def search_blockmax(
         profile["ranges_total"] = n_total_ranges
         profile["ranges_scored"] = scored_count[0]
 
-    return hits_frame(spark, *best)
+    return hits_frame(spark, pa.table({"docid": best[0], "score": best[1]}))

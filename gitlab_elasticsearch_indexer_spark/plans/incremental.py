@@ -124,15 +124,20 @@ def apply_delta(
     ).cache()
 
     # ---- exact arithmetic collection stats from delta-sized aggregates ----
-    def _sums(df: DataFrame) -> tuple[int, dict[str, int]]:
-        row = df.agg(
-            F.count("*").alias("n"),
-            *[F.sum(c).cast("long").alias(c) for c in dl_cols],
-        ).collect()[0]
-        return int(row["n"]), {c: int(row[c] or 0) for c in dl_cols}
-
-    n_removed, rem_sums = _sums(removed_rows)
-    n_added, add_sums = _sums(new_docs)
+    # one job: the removed and the added docs' counts and net dl sums
+    added = F.col("added")
+    sums = (
+        removed_rows.select(F.lit(False).alias("added"), *dl_cols)
+        .unionByName(new_docs.select(F.lit(True).alias("added"), *dl_cols))
+        .agg(
+            F.count_if(~added).alias("n_removed"),
+            F.count_if(added).alias("n_added"),
+            *[F.sum(F.when(added, F.col(c)).otherwise(-F.col(c))).cast("long").alias(c)
+              for c in dl_cols],
+        )
+        .collect()[0]
+    )
+    n_removed, n_added = int(sums["n_removed"]), int(sums["n_added"])
     n_docs = old.n_docs - n_removed + n_added
 
     have_totals = old.total_tokens is not None and all(
@@ -148,9 +153,7 @@ def apply_delta(
             *[F.sum(c).cast("long").alias(c) for c in dl_cols]
         ).collect()[0]
         totals = {c: int(row[c] or 0) for c in dl_cols}
-    totals = {
-        c: totals[c] - rem_sums[c] + add_sums[c] for c in dl_cols
-    }
+    totals = {c: totals[c] + int(sums[c] or 0) for c in dl_cols}
     avgdl = (totals["dl"] / n_docs) if n_docs else 0.0
     # every key carries forward (analyzer_version too: the search and
     # apply guards read it per field); only the length stats change

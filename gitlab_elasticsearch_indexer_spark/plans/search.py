@@ -1,18 +1,22 @@
 """Search API over a committed index snapshot (reference entry point 3,
 SURVEY.md §3.3 — the ES query contract, served natively).
 
-``Searcher`` loads the catalog once, keeps docs/term_stats DataFrames cached,
-and serves top-k queries through one of three paths (``profile["path"]``),
-chosen by ``mode``, ``doc_filter`` and index size alone:
+``Searcher`` loads the catalog once and serves top-k queries through one of
+three paths (``profile["path"]``), chosen by ``mode``, ``doc_filter`` and
+index size alone:
 
 - ``local``: ``mode="blockmax"`` (default) on an index of at most
   ``RANGE_BATCH`` docid_ranges (ceil(n_docs / docs_per_range), from the
   catalog) without a ``doc_filter``.  The query's blocks are read with
-  pyarrow and scored in process by the block-max range kernel
-  (operators/local_search.py); the result is an Arrow-built frame, so the
-  query launches no Spark job.  The state it needs is loaded at open.
+  pyarrow and scored in process by one call of the block-max kernel
+  (operators/local_search.py); the result is an Arrow-built frame made in
+  two py4j calls (operators/search.hits_frame), so the query launches no
+  Spark job.  The state it needs is loaded at open with pyarrow: opening a
+  local-eligible index launches no Spark job either.
 - ``blockmax``: the same kernel driven by Spark with range-level θ-pruning
-  (operators/wand.py) — larger indexes, and any ``doc_filter``.
+  (operators/wand.py) — larger indexes, and any ``doc_filter``.  This path
+  and the exhaustive one read the ``segments``, ``term_stats`` and ``docs``
+  DataFrames, built (and the last two cached) on first use.
 - ``exhaustive``: pure-DataFrame scorer (operators/search.py) — the
   oracle-verifiable path; rank-identical by construction.
 
@@ -35,6 +39,7 @@ happens inside the scoring jobs), ``score_ms`` and ``result_ms``.
 from __future__ import annotations
 
 import time
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +50,7 @@ from ..operators.search import (
     HITS_WITH_DOCS,
     analyze_query,
     analyze_query_seq,
+    hits_frame,
     search_exhaustive,
 )
 from ..operators.wand import RANGE_BATCH, search_blockmax
@@ -63,19 +69,30 @@ class Searcher:
         self.index_dir = index_dir
         self.catalog = cat.read_catalog(index_dir, snapshot)
         self._check_analyzer_version(allow_analyzer_mismatch)
-        snap = self.catalog.snapshot
-        self.segments = cat.read_table(spark, index_dir, "segments", snap)
-        self.term_stats = cat.read_table(spark, index_dir, "term_stats", snap).cache()
-        # Cache only metadata + per-field dl columns: `content` is the doc
-        # body — at corpus scale caching it would hold ~the whole corpus in
-        # executor memory for queries that never read it.  Display/snippet
-        # columns are fetched lazily per result page (docs_content below).
-        self.docs = (
-            cat.read_table(spark, index_dir, "docs", snap).drop("content").cache()
-        )
         self.n_ranges = -(-max(self.catalog.n_docs, 1) // self.catalog.docs_per_range)
         # small index: the blockmax path is served in process (module doc)
         self.local = LocalIndex(index_dir, self.catalog) if self.n_ranges <= RANGE_BATCH else None
+
+    # The Spark-side tables: built on first use (a blockmax or exhaustive
+    # query, highlight, a caller), so opening a local-eligible index reads
+    # no table with Spark and launches no job.
+    @cached_property
+    def segments(self) -> DataFrame:
+        return cat.read_table(self.spark, self.index_dir, "segments", self.catalog.snapshot)
+
+    @cached_property
+    def term_stats(self) -> DataFrame:
+        return cat.read_table(self.spark, self.index_dir, "term_stats", self.catalog.snapshot).cache()
+
+    @cached_property
+    def docs(self) -> DataFrame:
+        """Metadata + per-field dl columns, cached: ``content`` is the doc
+        body — at corpus scale caching it would hold ~the whole corpus in
+        executor memory for queries that never read it.  Display/snippet
+        columns are fetched per result page (``docs_content``)."""
+        return cat.read_table(
+            self.spark, self.index_dir, "docs", self.catalog.snapshot
+        ).drop("content").cache()
 
     def _check_analyzer_version(self, allow_mismatch: bool) -> None:
         """Refuse to search an index whose analyzer implementation differs
@@ -198,8 +215,7 @@ class Searcher:
                 terms, k, avgdl, dl_col, with_docs, prof, require_all, phrase
             )
             t2 = time.perf_counter()
-            schema = HITS_WITH_DOCS if with_docs else HITS
-            out = self.spark.createDataFrame(table, schema)  # job-free, see hits_frame
+            out = hits_frame(self.spark, table, HITS_WITH_DOCS if with_docs else HITS)
             prof["result_ms"] = (time.perf_counter() - t2) * 1000
             return out
 

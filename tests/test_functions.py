@@ -6,6 +6,7 @@ user of the reference sees identical per-document behavior.
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -422,7 +423,8 @@ class TestBM25:
         from gitlab_elasticsearch_indexer_spark.operators.wand import score_range
 
         n_docs, df, avgdl = 7616, 126, 274.6991174105393
-        blocks = {
+        blocks = pa.table({
+            "docid_range": np.array([0, 0]),
             "term": np.array(["t", "t"], dtype=object),
             "n_docs": np.array([1, 3]),
             "max_tf": np.array([4, 5]),
@@ -436,10 +438,10 @@ class TestBM25:
                 [codec.encode_tfs(np.array([4])), codec.encode_tfs(np.array([5, 4, 4]))],
                 dtype=object,
             ),
-        }
+        })
         idf = math.log1p((n_docs - df + 0.5) / (df + 0.5))
         docids, _ = score_range(
-            0, blocks, np.array([1, 10, 11, 12]), np.full(4, 406), {"t": idf}, avgdl, k=3
+            blocks, np.array([1, 10, 11, 12]), np.full(4, 406), {"t": idf}, avgdl, k=3
         )
         assert docids.tolist() == [10, 1, 11]
 
@@ -462,6 +464,71 @@ class TestBM25:
         assert bm25(idf, float(tf), float(dl), avgdl) == bm25(
             np.float64(idf), np.array([float(tf)]), np.array([float(dl)]), avgdl
         )[0]
+
+
+class TestTopK:
+    def test_tie_across_kth_keeps_lowest_docids(self):
+        """1,000 shuffled docids at two score levels, k=600: every high doc,
+        then the 100 lowest docids of the tied low level — the k-th place
+        falls inside the tie, where argpartition keeps arbitrary docs."""
+        from gitlab_elasticsearch_indexer_spark.operators.wand import top_k
+
+        rng = np.random.default_rng(3)
+        docids = rng.permutation(np.arange(1000, dtype=np.int64) * 7)
+        scores = np.where(rng.permutation(1000) < 500, 2.0, 1.0)
+        got_d, got_s = top_k(docids, scores, 600)
+        order = np.lexsort((docids, -scores))[:600]
+        assert got_d.tolist() == docids[order].tolist()
+        assert got_s.tolist() == scores[order].tolist()
+        assert got_d[500:].tolist() == sorted(docids[scores == 1.0])[:100]
+
+
+class TestForUnpackBlocks:
+    @settings(max_examples=200, deadline=None)
+    @given(st.lists(
+        st.tuples(st.integers(1, 32), st.integers(1, 128), st.integers(0, 2**32 - 1)),
+        min_size=1, max_size=12,
+    ))
+    def test_inverts_for_blocks(self, specs):
+        """Blocks of widths 1-32 and 1-128 values decode to the values
+        ``for_blocks`` encoded, and block by block to ``block_decode``."""
+        rng = np.random.default_rng(specs[0][2])
+        blocks = []
+        for width, size, seed in specs:
+            vals = rng.integers(0, 1 << width, size, dtype=np.uint64)
+            vals[seed % size] = (1 << width) - 1  # the block needs all its width bits
+            blocks.append(vals)
+        values = np.concatenate(blocks)
+        starts = np.cumsum([0] + [len(b) for b in blocks[:-1]])
+        data, offsets = codec.for_blocks(values, starts)
+        got, got_starts = codec.for_unpack_blocks(data, offsets, np.array([len(b) for b in blocks]))
+        assert got.dtype == np.uint64
+        assert np.array_equal(got, values) and np.array_equal(got_starts, starts)
+        for i, b in enumerate(blocks):
+            payload = data[offsets[i]:offsets[i + 1]].tobytes()
+            assert np.array_equal(codec.block_decode(payload), b)
+            assert np.array_equal(got[starts[i]:starts[i] + len(b)], b)
+
+    def test_offsets_need_not_start_at_zero(self):
+        data, offsets = codec.for_blocks(np.arange(10, dtype=np.uint64), np.array([0, 4]))
+        pad = np.concatenate([np.full(3, 0xFF, np.uint8), data])
+        got, starts = codec.for_unpack_blocks(pad, offsets + 3)
+        assert got.tolist() == list(range(10)) and starts.tolist() == [0, 4]
+
+    def test_empty(self):
+        got, starts = codec.for_unpack_blocks(np.zeros(0, np.uint8), np.zeros(1, np.int64))
+        assert got.size == 0 and starts.size == 0
+
+    def test_rejects_varint_and_count_mismatch(self):
+        data, offsets = codec.for_blocks(np.arange(10, dtype=np.uint64), np.array([0, 4]))
+        with pytest.raises(ValueError, match="counts"):
+            codec.for_unpack_blocks(data, offsets, np.array([4, 5]))
+        varint = np.frombuffer(codec.block_encode(np.array([2**40])), np.uint8)
+        assert varint[0] == codec.TAG_VARINT
+        with pytest.raises(ValueError, match="FOR"):
+            codec.for_unpack_blocks(varint, np.array([0, varint.size]))
+        with pytest.raises(ValueError, match="length"):
+            codec.for_unpack_blocks(data[:-1], np.array([0, offsets[1], offsets[2] - 1]))
 
 
 class TestForCodec:

@@ -341,6 +341,133 @@ def test_threads_share_one_searcher(spark, simple_idx):
     assert [got.get(t) for t in range(n_threads)] == [want] * n_threads
 
 
+@pytest.mark.parametrize("snap", ["s1", "d2"])
+def test_open_launches_no_spark_job(spark, chain_idx, snap):
+    """Opening a Searcher on a local-eligible index, chained or not, reads
+    its state with pyarrow: the Spark-side tables wait for a Spark path."""
+    sc = spark.sparkContext
+    group = f"open-{snap}"
+    try:
+        sc.setJobGroup(group, group)
+        s = Searcher(spark, chain_idx, snapshot=snap)
+        s.search("data query", k=10).collect()
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert not {"segments", "term_stats", "docs"} & vars(s).keys()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # a Spark path builds them once
+    _rank_equal(s.search("data query", k=10, with_docs=False).toPandas(),
+                s.search("data query", k=10, with_docs=False, mode="exhaustive").toPandas())
+    assert s.docs is s.docs and s.segments is s.segments
+
+
+@pytest.fixture(scope="module")
+def tied_idx(spark, tmp_path_factory):
+    """300 "alpha beta" and 300 "alpha gamma" docs under shuffled doc_ids
+    spread over 5 docid_ranges: every doc of one text ties every other."""
+    import numpy as np
+    import pandas as pd
+    import pyspark.sql.types as T
+
+    from gitlab_elasticsearch_indexer_spark.schemas import PAGES
+
+    texts = ["alpha beta"] * 300 + ["alpha gamma"] * 300
+    doc_ids = np.random.default_rng(5).permutation(len(texts)) * 64
+    pdf = pd.DataFrame({
+        "url": [f"https://example.com/t{i}.txt" for i in doc_ids],
+        "warc_ts": pd.Timestamp("2024-01-01"),
+        "html": [t.encode() for t in texts],
+        "text": texts,
+        "lang": "en",
+        "doc_id": doc_ids,
+    })
+    schema = T.StructType(list(PAGES.fields) + [T.StructField("doc_id", T.LongType())])
+    d = str(tmp_path_factory.mktemp("ltied"))
+    build_index(spark, spark.createDataFrame(pdf, schema), d, snapshot="s1")
+    return d
+
+
+@pytest.mark.parametrize("query", ["alpha", "alpha beta"])
+@pytest.mark.parametrize("k", [1, 150, 450])
+def test_ties_across_kth_place(spark, tied_idx, query, k):
+    """The k-th place falls inside a tie: every path keeps the lowest
+    docids of the tied docs, as the exhaustive orderBy(score desc, docid
+    asc) does."""
+    s = Searcher(spark, tied_idx)
+    assert len(set(s.local.read_blocks(["alpha"])["docid_range"].to_pylist())) == 5
+    for operator in ("or", "and"):
+        got = _check_paths(spark, s, query, k, operator=operator)
+        assert len(got) == (k if operator == "or" or query == "alpha" else min(k, 300))
+
+
+def _fields(df):
+    return [(f.name, f.dataType, f.nullable) for f in df.schema.fields]
+
+
+@pytest.mark.parametrize("with_docs", [False, True])
+def test_result_frame_equals_create_data_frame(spark, simple_idx, with_docs):
+    """hits_frame builds the same frame as createDataFrame(table, schema):
+    rows, schema and nullability, for empty, k=10 and k=100 results."""
+    from gitlab_elasticsearch_indexer_spark.operators.local_search import LocalIndex
+    from gitlab_elasticsearch_indexer_spark.operators.search import (
+        HITS, HITS_WITH_DOCS, hits_frame,
+    )
+
+    s = Searcher(spark, simple_idx)
+    schema = HITS_WITH_DOCS if with_docs else HITS
+    for query, k in (("zzzqqq", 10), ("spark data query", 10), ("the data", 100)):
+        table = LocalIndex.search(
+            s.local, s.query_terms(query), k, s.catalog.avgdl, "dl", with_docs, {}
+        )
+        assert table.num_rows == (0 if query == "zzzqqq" else k)
+        got, want = hits_frame(spark, table, schema), spark.createDataFrame(table, schema)
+        assert got.schema == want.schema and _fields(got) == _fields(want)
+        assert got.collect() == want.collect()
+    empty = hits_frame(spark, schema=schema)
+    assert _fields(empty) == _fields(spark.createDataFrame([], schema)) and empty.collect() == []
+
+
+def test_result_frame_keeps_socket_path_under_io_encryption(spark, monkeypatch):
+    """With spark.io.encryption.enabled no plaintext temp file is written:
+    hits_frame hands the table to pyspark's own (socket) path."""
+    import pyarrow as pa
+
+    from gitlab_elasticsearch_indexer_spark.operators.search import hits_frame
+
+    table = pa.table({"docid": pa.array([3, 1], pa.int64()), "score": [2.0, 1.0]})
+    calls = []
+    create = spark.createDataFrame
+    monkeypatch.setattr(spark.sparkContext, "_encryption_enabled", True)
+    monkeypatch.setattr(spark, "createDataFrame", lambda *a: calls.append(a) or create(*a))
+    monkeypatch.setattr("tempfile.mkstemp", None)  # any temp file fails the test
+    assert [tuple(r) for r in hits_frame(spark, table).collect()] == [(3, 2.0), (1, 1.0)]
+    assert len(calls) == 1
+
+
+def test_local_search_makes_two_py4j_calls(spark, simple_idx, monkeypatch):
+    """A local search() crosses into the JVM twice (readArrowStreamFromFile,
+    toDataFrame), not once per conf read and reflection lookup."""
+    from py4j.clientserver import ClientServerConnection
+
+    s = Searcher(spark, simple_idx)
+    for with_docs in (False, True):
+        s.search("spark data query", k=10, with_docs=with_docs)  # resolve once per session
+    sent: list[str] = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith("m\n"):  # memory release of collected Java refs
+            sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    for with_docs in (False, True):
+        for query in ("spark data query", "zzzqqq"):
+            sent.clear()
+            s.search(query, k=10, with_docs=with_docs)
+            assert len(sent) <= 2, sent
+
+
 def test_delta_keeps_field_analyzer_version(spark, chain_idx, tmp_path):
     """apply_delta carries each field's analyzer_version forward, so the
     Searcher's per-field guard still catches a mismatch on a delta
