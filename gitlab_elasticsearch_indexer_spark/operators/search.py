@@ -21,12 +21,15 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import weakref
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.types import _create_row
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.analysis import ANALYZERS
@@ -58,42 +61,92 @@ HITS_WITH_DOCS = T.StructType(
 
 def hits_frame(spark, table: pa.Table | None = None, schema: T.StructType = HITS) -> DataFrame:
     """The result frame of every search path: an Arrow ``table`` (None →
-    empty) as a DataFrame of ``schema`` (no timestamp columns).
-
-    An Arrow-built frame plans as a LocalRelation, so collecting it launches
-    no Spark job — a list of rows, or an empty pandas frame, is parallelized
-    as an RDD instead and costs a job on every collect.  This does what
-    pyspark's ``createDataFrame(table, schema)`` does (cast to the schema's
-    Arrow type, one Arrow IPC stream through a temp file) in two py4j calls
-    — ``readArrowStreamFromFile``, then ``toDataFrame`` — where
-    ``createDataFrame`` makes about 20 (conf reads, reflection lookups,
-    ``setActiveSession``); every return from the JVM waits for the GIL that
-    concurrent queries hold.  The JVM members and conf values are resolved
-    once per session.  With ``spark.io.encryption.enabled`` the data must
-    not touch disk in plaintext, so pyspark's own socket path runs."""
-    jvm = _session_jvm(spark)
-    arrow_schema, schema_json = jvm.schema(schema)
+    empty) as a ``HitsFrame`` of ``schema`` (no timestamp columns), whose
+    rows stay in the driver: ``collect()`` and ``schema`` make no py4j
+    call, and the JVM frame is built on the first Spark operation."""
+    arrow_schema = _session_jvm(spark).arrow_schema(schema)
     table = pa.Table.from_batches([], arrow_schema) if table is None else table
-    sc = spark.sparkContext
-    if sc._encryption_enabled:
-        return spark.createDataFrame(table, schema)
-    sink = pa.BufferOutputStream()
-    with pa.ipc.new_stream(sink, arrow_schema) as writer:
-        writer.write_table(table.cast(arrow_schema), max_chunksize=jvm.batch_rows)
-    fd, path = tempfile.mkstemp(dir=sc._temp_dir)
-    try:
-        with os.fdopen(fd, "wb") as f:
-            f.write(sink.getvalue())
-        batches = jvm.read_arrow_file(path)
-    finally:
-        os.unlink(path)
-    out = DataFrame(jvm.to_data_frame(batches, schema_json, spark._jsparkSession), spark)
-    out._schema = schema
-    return out
+    return HitsFrame(spark, table.cast(arrow_schema), schema)
+
+
+class HitsFrame(ClassicDataFrame):
+    """A classic DataFrame over an Arrow table held in the driver.
+
+    ``schema`` (hence ``columns``) is the held ``StructType`` and
+    ``collect()`` builds its ``Row``s from the table's columns: a query
+    result crosses no Python/JVM boundary when it is only collected.
+    ``_jdf`` is built once, on first use, under a lock; every other method
+    (``select``, ``join``, ``toPandas``, ``count``, ``write``, ...) runs
+    unchanged on it.  That JVM frame plans as a LocalRelation, so
+    collecting it launches no Spark job (a list of rows, or an empty pandas
+    frame, is parallelized as an RDD and costs a job on every collect).
+    It is built as pyspark's ``createDataFrame(table, schema)`` builds it
+    (one Arrow IPC stream through a temp file) in two py4j calls —
+    ``readArrowStreamFromFile``, then ``toDataFrame`` — where
+    ``createDataFrame`` makes about 20.  With ``spark.io.encryption.enabled``
+    the data must not touch disk in plaintext, so pyspark's own socket
+    path runs.
+
+    Relies on these pyspark 4.1 internals of
+    ``pyspark.sql.classic.dataframe.DataFrame``: ``__new__(jdf, sql_ctx)``
+    calls ``__init__`` (hence both are overridden here), which sets
+    ``_session``, ``_sc``, ``_jdf``, ``is_cached`` and
+    ``_support_repr_html``; its methods reach the JVM only through
+    ``_jdf``; ``columns`` derives from ``schema``.  And on
+    ``pyspark.sql.types._create_row``, ``SparkContext._encryption_enabled``
+    and ``_temp_dir``, and ``PythonSQLUtils.readArrowStreamFromFile`` /
+    ``toDataFrame``."""
+
+    def __new__(cls, *args, **kwargs) -> "HitsFrame":
+        return object.__new__(cls)
+
+    def __init__(self, spark, table: pa.Table, schema: T.StructType):
+        self._session = spark
+        self._sc = spark.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+        self._table = table
+        self._struct = schema
+        self._built_jdf = None
+        self._lock = threading.Lock()
+
+    @property
+    def schema(self) -> T.StructType:
+        return self._struct
+
+    def collect(self) -> list[Row]:
+        names = self._struct.names
+        columns = [c.to_pylist() for c in self._table.columns]
+        return [_create_row(names, values) for values in zip(*columns)]
+
+    @property
+    def _jdf(self):
+        if self._built_jdf is None:
+            with self._lock:
+                if self._built_jdf is None:
+                    self._built_jdf = self._build_jdf()
+        return self._built_jdf
+
+    def _build_jdf(self):
+        spark, sc = self._session, self._sc
+        if sc._encryption_enabled:
+            return spark.createDataFrame(self._table, self._struct)._jdf
+        jvm = _session_jvm(spark)
+        sink = pa.BufferOutputStream()
+        with pa.ipc.new_stream(sink, self._table.schema) as writer:
+            writer.write_table(self._table, max_chunksize=jvm.batch_rows)
+        fd, path = tempfile.mkstemp(dir=sc._temp_dir)
+        try:
+            with os.fdopen(fd, "wb") as f:
+                f.write(sink.getvalue())
+            batches = jvm.read_arrow_file(path)
+        finally:
+            os.unlink(path)
+        return jvm.to_data_frame(batches, self._struct.json(), spark._jsparkSession)
 
 
 class _SessionJvm:
-    """A session's JVM entry points for ``hits_frame``, resolved once."""
+    """A session's JVM entry points for ``HitsFrame``, resolved once."""
 
     def __init__(self, spark):
         utils = spark._jvm.PythonSQLUtils
@@ -103,15 +156,15 @@ class _SessionJvm:
         self.large_types = spark._jconf.arrowUseLargeVarTypes()
         self._schemas: dict[str, pa.Schema] = {}
 
-    def schema(self, schema: T.StructType) -> tuple[pa.Schema, str]:
-        """(Arrow schema, JSON) of ``schema`` as pyspark converts it."""
+    def arrow_schema(self, schema: T.StructType) -> pa.Schema:
+        """The Arrow schema of ``schema`` as pyspark converts it."""
         key = schema.json()
         if key not in self._schemas:
             self._schemas[key] = to_arrow_schema(
                 schema, error_on_duplicated_field_names_in_struct=True,
                 prefers_large_types=self.large_types,
             )
-        return self._schemas[key], key
+        return self._schemas[key]
 
 
 _SESSION_JVM: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()

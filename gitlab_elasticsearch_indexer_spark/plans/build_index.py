@@ -55,8 +55,12 @@ def write_segments(segments: DataFrame, path: str, mode: str = "overwrite") -> N
     """Write block rows ``partitionBy(bucket)``, clustered by bucket first:
     without the repartition every write task emits a file per bucket
     directory (tasks × 64 small files) and the driver's serial
-    commit/rename phase dominates small-core runs."""
-    segments.repartition("bucket").write.mode(mode).partitionBy("bucket").parquet(path)
+    commit/rename phase dominates small-core runs.  The partition count is
+    explicit, so AQE cannot coalesce the write into one task: creating a
+    file costs ~19 ms when Hadoop forks ``chmod`` for its permissions (no
+    native libhadoop), so the 64 bucket files are spread over the cores."""
+    n = min(N_TERM_BUCKETS, segments.sparkSession.sparkContext.defaultParallelism)
+    segments.repartition(n, "bucket").write.mode(mode).partitionBy("bucket").parquet(path)
 
 
 def lineage_rows(

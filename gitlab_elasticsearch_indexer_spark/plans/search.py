@@ -9,10 +9,12 @@ index size alone:
   ``RANGE_BATCH`` docid_ranges (ceil(n_docs / docs_per_range), from the
   catalog) without a ``doc_filter``.  The query's blocks are read with
   pyarrow and scored in process by one call of the block-max kernel
-  (operators/local_search.py); the result is an Arrow-built frame made in
-  two py4j calls (operators/search.hits_frame), so the query launches no
-  Spark job.  The state it needs is loaded at open with pyarrow: opening a
-  local-eligible index launches no Spark job either.
+  (operators/local_search.py); the result is a DataFrame whose rows stay
+  in the driver (operators/search.HitsFrame): ``search()``, ``collect()``
+  and ``schema`` make no py4j call, and its JVM frame is built only when a
+  Spark operation needs it, so the query launches no Spark job.  The state
+  it needs is loaded at open with pyarrow: opening a local-eligible index
+  launches no Spark job either.
 - ``blockmax``: the same kernel driven by Spark with range-level θ-pruning
   (operators/wand.py) — larger indexes, and any ``doc_filter``.  This path
   and the exhaustive one read the ``segments``, ``term_stats`` and ``docs``
@@ -33,7 +35,8 @@ block-level skipping for two or more tokens).  ``k < 1`` raises.
 ``search(..., profile={})`` fills the dict with the path, the analyzed
 ``terms``, ``ranges_scored`` (None on the exhaustive scorer) and wall ms per
 phase: ``analyze_ms``, ``read_ms`` (local path only: on Spark the block read
-happens inside the scoring jobs), ``score_ms`` and ``result_ms``.
+happens inside the scoring jobs), ``score_ms`` and ``result_ms`` (about 0
+on the local path: its result frame is built in the driver).
 """
 
 from __future__ import annotations

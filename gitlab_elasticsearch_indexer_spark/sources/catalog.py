@@ -34,6 +34,8 @@ from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..schemas import LINEAGE, SEGMENTS
+
 
 @dataclass
 class Catalog:
@@ -139,7 +141,7 @@ def claimed_ranges(spark: SparkSession, index_dir: str, snapshot: str) -> DataFr
     from pyspark.sql import functions as F
 
     return (
-        spark.read.parquet(table_path(index_dir, "lineage", snapshot))
+        spark.read.schema(LINEAGE).parquet(table_path(index_dir, "lineage", snapshot))
         .filter(F.col("partition_key") != "-")
         .select(F.col("partition_key").cast("long").alias("docid_range"))
         .distinct()
@@ -183,8 +185,9 @@ def read_table(
     if snapshot is None:
         snapshot = current_snapshot(index_dir)
     c = read_catalog(index_dir, snapshot)
+    reader = spark.read.schema(SEGMENTS) if table == "segments" else spark.read
     if table not in ("docs", "segments") or c.parent_snapshot is None:
-        return spark.read.parquet(table_path(index_dir, table, snapshot))
+        return reader.parquet(table_path(index_dir, table, snapshot))
 
     range_key = (
         F.col("docid_range")
@@ -196,7 +199,7 @@ def read_table(
     snap: str | None = snapshot
     while snap is not None:
         sc = read_catalog(index_dir, snap)
-        df = spark.read.parquet(table_path(index_dir, table, snap))
+        df = reader.parquet(table_path(index_dir, table, snap))
         if claimed is not None:
             df = df.join(
                 claimed.withColumnRenamed("docid_range", "__claimed_rng"),
@@ -204,7 +207,8 @@ def read_table(
                 "left_anti",
             )
         out = df if out is None else out.unionByName(df, allowMissingColumns=True)
-        mine = claimed_ranges(spark, index_dir, snap)
-        claimed = mine if claimed is None else claimed.unionByName(mine).distinct()
+        if sc.parent_snapshot is not None:  # the oldest snapshot's claims shadow nothing
+            mine = claimed_ranges(spark, index_dir, snap)
+            claimed = mine if claimed is None else claimed.unionByName(mine).distinct()
         snap = sc.parent_snapshot
     return out

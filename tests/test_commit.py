@@ -3,6 +3,7 @@ apply_delta and compact share: the '-' lineage row of a snapshot that
 claims no range, chain resolution through such a snapshot, and the commit
 barrier — a failure inside commit leaves ``current`` on the parent."""
 
+import os
 import shutil
 
 import pytest
@@ -127,6 +128,34 @@ def test_materialized_delete_all_and_compact_of_emptied_index(spark, idx):
     for query, k in QUERIES:
         for mode in ("blockmax", "exhaustive"):
             assert len(_hits(spark, idx, "s4", query, k, mode)[0]) == 0
+
+
+def _bucket_files(d, snap):
+    seg = cat.table_path(d, "segments", snap)
+    return {
+        b: [f for f in os.listdir(os.path.join(seg, b)) if f.endswith(".parquet")]
+        for b in os.listdir(seg) if b.startswith("bucket=")
+    }
+
+
+def test_segments_write_one_file_per_bucket(spark, idx):
+    """The segments write of a build and of a delta spreads the buckets
+    over several tasks and never splits one: each bucket directory holds
+    exactly one file."""
+    pages = _pages(spark)
+    modified = (
+        pages.filter(F.col("doc_id") % 3 == 0)
+        .withColumn("op", F.lit("MODIFIED"))
+        .withColumn("old_url", F.lit(None).cast("string"))
+        .withColumn("text", F.concat(F.col("text"), F.lit(" edited")))
+        .withColumn("html", F.encode(F.col("text"), "UTF-8"))
+    )
+    apply_delta(spark, idx, modified, "s2")
+    for snap in ("s1", "s2"):
+        files = _bucket_files(idx, snap)
+        assert len(files) > 1 and all(len(f) == 1 for f in files.values()), snap
+        # part-<task partition>-...: written by more than one task
+        assert len({f[0].split("-")[1] for f in files.values()}) > 1, snap
 
 
 @pytest.mark.parametrize("writer", ["build", "delta"])

@@ -1,8 +1,9 @@
 """The in-process block-max path (operators/local_search.py): rank identity
 with the Spark scorers on every test index and on chained snapshots, under
 both operators and for phrase queries, one output schema for every path, the
-query profile, zero Spark jobs per local query, and thread safety of a
-shared Searcher."""
+query profile, zero Spark jobs and zero py4j calls per local query, a
+local result frame equal to its JVM-built twin, thread safety of a shared
+Searcher, and the known read schemas of the index tables."""
 
 import json
 import os
@@ -429,7 +430,8 @@ def test_result_frame_equals_create_data_frame(spark, simple_idx, with_docs):
 
 def test_result_frame_keeps_socket_path_under_io_encryption(spark, monkeypatch):
     """With spark.io.encryption.enabled no plaintext temp file is written:
-    hits_frame hands the table to pyspark's own (socket) path."""
+    a Spark operation builds the JVM frame through pyspark's own (socket)
+    path."""
     import pyarrow as pa
 
     from gitlab_elasticsearch_indexer_spark.operators.search import hits_frame
@@ -440,18 +442,19 @@ def test_result_frame_keeps_socket_path_under_io_encryption(spark, monkeypatch):
     monkeypatch.setattr(spark.sparkContext, "_encryption_enabled", True)
     monkeypatch.setattr(spark, "createDataFrame", lambda *a: calls.append(a) or create(*a))
     monkeypatch.setattr("tempfile.mkstemp", None)  # any temp file fails the test
-    assert [tuple(r) for r in hits_frame(spark, table).collect()] == [(3, 2.0), (1, 1.0)]
+    frame = hits_frame(spark, table)
+    assert [tuple(r) for r in frame.select("docid", "score").collect()] == [(3, 2.0), (1, 1.0)]
     assert len(calls) == 1
 
 
-def test_local_search_makes_two_py4j_calls(spark, simple_idx, monkeypatch):
-    """A local search() crosses into the JVM twice (readArrowStreamFromFile,
-    toDataFrame), not once per conf read and reflection lookup."""
+def test_local_search_makes_no_py4j_call(spark, simple_idx, default_idx, offsets_idx,
+                                         monkeypatch):
+    """A local search(), its collect() and its schema stay in the driver:
+    no py4j command, with or without docs, empty or not, phrase too."""
     from py4j.clientserver import ClientServerConnection
 
-    s = Searcher(spark, simple_idx)
-    for with_docs in (False, True):
-        s.search("spark data query", k=10, with_docs=with_docs)  # resolve once per session
+    searchers = [Searcher(spark, d) for d in (simple_idx, default_idx, offsets_idx)]
+    searchers[0].search("spark data query", k=10)  # session entry points resolve once
     sent: list[str] = []
     send = ClientServerConnection.send_command
 
@@ -461,11 +464,97 @@ def test_local_search_makes_two_py4j_calls(spark, simple_idx, monkeypatch):
         return send(self, command)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)
-    for with_docs in (False, True):
-        for query in ("spark data query", "zzzqqq"):
-            sent.clear()
+    for s in searchers:
+        frames = [
             s.search(query, k=10, with_docs=with_docs)
-            assert len(sent) <= 2, sent
+            for with_docs in (False, True) for query in ("spark data query", "zzzqqq")
+        ]
+        if s.catalog.with_positions:
+            frames += [s.phrase_search(p, k=10) for p in ("data query", "zzzqqq data")]
+        for df in frames:
+            df.collect(), df.schema, df.columns
+        assert any(df.collect() for df in frames)
+        assert sent == []
+
+
+def test_local_frame_equals_jvm_frame(spark, simple_idx, tmp_path):
+    """Every operation on a local result gives the rows and types of the
+    same operation on the frame built through the JVM."""
+    import pandas as pd
+    from pyspark.sql import DataFrame
+
+    s = Searcher(spark, simple_idx)
+    for i, query in enumerate(("spark data query", "zzzqqq")):
+        local = s.search(query, k=10)
+        jvm = DataFrame(local._jdf, spark)  # the same result, built through the JVM
+        for got, want in (
+            (local, jvm),
+            (local.select("docid"), jvm.select("docid")),
+            (local.join(s.docs.select("docid", "dl"), "docid"),
+             jvm.join(s.docs.select("docid", "dl"), "docid")),
+        ):
+            assert _fields(got) == _fields(want)
+            assert got.collect() == want.collect()
+        assert local.count() == jvm.count() == (0 if query == "zzzqqq" else 10)
+        pd.testing.assert_frame_equal(local.toPandas(), jvm.toPandas())
+        for name, df in (("local", local), ("jvm", jvm)):
+            df.write.parquet(str(tmp_path / f"{name}{i}"))
+        back = [spark.read.parquet(str(tmp_path / f"{n}{i}")) for n in ("local", "jvm")]
+        assert _fields(back[0]) == _fields(back[1])
+        assert sorted(back[0].collect()) == sorted(back[1].collect()) == sorted(jvm.collect())
+
+
+def test_jvm_frame_built_once_under_threads(spark, monkeypatch):
+    """Threads touching a fresh local frame's _jdf at once build it once."""
+    import time
+
+    import pyarrow as pa
+
+    from gitlab_elasticsearch_indexer_spark.operators.search import HitsFrame, hits_frame
+
+    frame = hits_frame(spark, pa.table({"docid": pa.array([3, 1], pa.int64()), "score": [2.0, 1.0]}))
+    builds = []
+    build = HitsFrame._build_jdf
+
+    def slow_build(self):
+        builds.append(1)
+        time.sleep(0.2)
+        return build(self)
+
+    monkeypatch.setattr(HitsFrame, "_build_jdf", slow_build)
+    barrier = threading.Barrier(8)
+    got = [None] * 8
+
+    def touch(i: int):
+        barrier.wait(timeout=60)
+        got[i] = frame._jdf
+
+    threads = [threading.Thread(target=touch, args=(i,)) for i in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1
+    assert all(j is got[0] for j in got) and got[0] is not None
+    assert [tuple(r) for r in frame.orderBy("docid").collect()] == [(1, 1.0), (3, 2.0)]
+
+
+@pytest.mark.parametrize("idx", ["simple_idx", "positions_idx", "offsets_idx", "chain_idx"])
+def test_known_schema_equals_inferred(spark, idx, request):
+    """SEGMENTS and LINEAGE, given to the reader, equal the schema Spark
+    infers from the files (order, types, nullability, the bucket partition
+    column) for every build option set and every snapshot of a chain."""
+    from gitlab_elasticsearch_indexer_spark.schemas import LINEAGE, SEGMENTS
+
+    d = request.getfixturevalue(idx)
+    for snap, _ in cat.chain_claims(d, cat.current_snapshot(d)):
+        for table, schema in (("segments", SEGMENTS), ("lineage", LINEAGE)):
+            path = cat.table_path(d, table, snap)
+            inferred = spark.read.parquet(path)
+            known = spark.read.schema(schema).parquet(path)
+            assert known.schema == inferred.schema, (snap, table)
+        assert sorted(known.collect()) == sorted(inferred.collect())
 
 
 def test_delta_keeps_field_analyzer_version(spark, chain_idx, tmp_path):

@@ -210,9 +210,10 @@ def main() -> None:
         "changes.\n"
     )
     for title, audit, plan in sections:
-        # expression and plan ids change every run; unchanged plans must
-        # regenerate a byte-identical file
-        plan = re.sub(r"#\d+", "#_", re.sub(r"plan_id=\d+", "plan_id=_", plan))
+        # expression, plan and lambda variable ids change every run;
+        # unchanged plans must regenerate a byte-identical file
+        plan = re.sub(r"plan_id=\d+", "plan_id=_", plan)
+        plan = re.sub(r"#\d+", "#_", re.sub(r"(lambda \w+?)_\d+#", r"\1_#", plan))
         out.append(f"\n## {title}\n\n{audit}\n\n```\n{plan}```\n")
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "EXPLAIN.md"), "w") as f:
         f.write("".join(out))
